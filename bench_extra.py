@@ -2,9 +2,9 @@
 
 Per headline query: construction time (plan build, incl. any driver-side
 work in the query function) vs execution time (noop sink, guide §1.4),
-Spark job/stage counts, and best-of-N timings. bench.py stays frozen; this
-file exists so optimization work can iterate on isolated numbers and cite
-them in OPTIMIZATION_r06.md.
+and best-of-N timings. bench.py stays frozen; this file exists so
+optimization work can iterate on isolated numbers and cite them in
+OPTIMIZATION_r06.md.
 
 Usage:
   python bench_extra.py                 # all headline queries, 3 reps
@@ -52,7 +52,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     out = {}
     for name in names:
@@ -60,7 +59,6 @@ def main() -> None:
         sc.setJobDescription(f"bench_extra:{name}")
         samples = []
         build_s = exec_s = None
-        jobs_before = len(tracker.getJobIdsForGroup() or [])
         for i in range(REPS + 1):  # first rep is warm
             t0 = time.monotonic()
             df = fn(spark, SF_DIR)

@@ -84,7 +84,9 @@ def _h60(col: Column) -> Column:
 # fixed (B, M) constants and maxlen — independent of any input data — and
 # re-creating it per operator call costs a driver pandas->Arrow
 # createDataFrame round-trip (~0.1-0.3 s at maxlen 65536) on every
-# duplicate_spans/winnow_fingerprints plan build.
+# duplicate_spans/winnow_fingerprints plan build. Entries of any other
+# application are evicted on insert: a process that stops and recreates
+# sessions would otherwise pin every dead session's DataFrames.
 _POWERS_CACHE: dict[tuple[str, int], DataFrame] = {}
 
 
@@ -92,7 +94,8 @@ def powers_table(spark: SparkSession, maxlen: int) -> DataFrame:
     """(e, pw1, pw2) for e in [0, maxlen]: B**e mod M per hash pair.
     Driver-built (maxlen+1 modmuls — microseconds) and broadcast; memoized
     per (application, maxlen) because the content is a pure constant."""
-    key = (spark.sparkContext.applicationId, maxlen)
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, maxlen)
     cached = _POWERS_CACHE.get(key)
     if cached is not None:
         return cached
@@ -106,8 +109,20 @@ def powers_table(spark: SparkSession, maxlen: int) -> DataFrame:
     df = spark.createDataFrame(
         pd.DataFrame({"e": range(maxlen + 1), "pw1": pw1, "pw2": pw2})
     )
+    for stale in [k for k in _POWERS_CACHE if k[0] != app_id]:
+        del _POWERS_CACHE[stale]
     _POWERS_CACHE[key] = df
     return df
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """spark.sql.shuffle.partitions as an int. Some platforms set it to a
+    non-numeric value ('auto'); those fall back to the default
+    parallelism."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
 
 
 def rolling_window_hashes(
@@ -148,7 +163,7 @@ def rolling_window_hashes(
     # repartition(col) is AQE-coalescible and collapses a small corpus to
     # ONE partition, serializing the md5/window work — measured 2.5x
     # slower than the pinned form at sf0.1
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partitions(spark)
     src = df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
     ).repartition(n_part, F.col("doc_id"))

@@ -704,7 +704,8 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
     surviving lines in order, a fully-boilerplate document collapses to
     ''. Line identity is exact string equality via the module's 60-bit
     md5 contract (oracle-portable); all lines participate, including
-    empty ones.
+    empty ones. NULL text is treated as '' (one empty line), so every
+    input doc gets an output row.
 
     Scale shape: posexplode lines -> groupBy(line_hash) count with
     map-side combine (the hot-line relation is DISTINCT hashes, so the
@@ -721,9 +722,13 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
     (measured 44s -> 28s at sf10). Same cache-scope lifecycle as the
     other dedup persists; at full crawl scale this intermediate
     checkpoints to storage instead."""
+    # NULL text reads as '' so the doc keeps its one empty-line row:
+    # split(NULL) would explode to zero rows and drop the doc silently
     lines = df.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(
+            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
+        ).alias("pos", "line"),
     ).withColumn("lh", _h60(F.col("line"))).persist()
     _register_persist(lines, _LINE_CACHE, release_line_cache)
     hot = (
@@ -743,9 +748,9 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
         ).alias("clean_text"),
         F.count("*").alias("_n_kept"),
     )
-    # every doc emits >= 1 line row (split of "" is [""]), so the per-doc
-    # line total IS the per-doc row count of the persisted relation —
-    # no third pass over the corpus text
+    # every doc emits >= 1 line row (split of "" is [""], and NULL text
+    # is coalesced to ""), so the per-doc line total IS the per-doc row
+    # count of the persisted relation — no third pass over the corpus text
     totals = lines.groupBy("doc_id").agg(
         F.count("*").alias("_n_total")
     )

@@ -8,8 +8,10 @@ north_rule architecture:
 - explicit hash partitioning on url (``pmod(xxhash64(url), n_buckets)``) —
   heavy domains spread uniformly because the key is the full url, and the
   bucket column makes the layout reusable by downstream readers;
-- two vectorized stages (html→words pandas UDF; words→fields pandas UDF)
-  with NO shuffle between them — a single mapper chain per partition;
+- the fused extraction kernel runs at source parallelism (the html never
+  crosses a shuffle); its OUTPUT is then shuffled once by bucket id, so
+  write partition i holds exactly bucket i and each run commits one file
+  per ``url_bucket=`` directory;
 - a per-partition manifest (rows/bytes/latency) appended on every commit —
   the lineage/metrics table the north_rule requires;
 - resume = left_anti join of the input against already-committed urls, so a
@@ -17,9 +19,10 @@ north_rule architecture:
   unit is a snapshot; on plain parquet (this sandbox) the commit unit is the
   run directory, which gives the same at-least-once-skip semantics.
 
-At 100 TB the plan is scan → mapper chain → write: the only shuffle is the
-optional repartition to the bucket count, and AQE coalesces the write
-partitions. Nothing here collects to the driver.
+At 100 TB the plan is scan → kernel → Exchange(bucket id) → write: the
+one shuffle moves extracted rows, not html, and its n_buckets partitions
+are fixed (AQE does not coalesce an explicit partition count). Nothing
+here collects to the driver.
 """
 
 from __future__ import annotations
@@ -42,26 +45,33 @@ def with_url_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFram
     )
 
 
-def extract_from_pages(
-    pages: DataFrame, n_buckets: int | None = None, entry_c: bool = False
+def bucket_results(
+    results: DataFrame, n_buckets: int, run_id: str
 ) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → one result row per url.
+    """Extraction output → the rows ``run_job`` commits: ``url_bucket`` and
+    ``run_id`` columns, shuffled once by bucket id so write partition i
+    holds exactly bucket i — one file per bucket directory per run. The
+    shuffle sits above the kernel and carries extracted rows, never html."""
+    return with_url_bucket(results, n_buckets).withColumn(
+        "run_id", F.lit(run_id)
+    ).repartitionById(n_buckets, F.col("url_bucket"))
+
+
+def extract_from_pages(pages: DataFrame, entry_c: bool = False) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) → one result row per url, at
+    source parallelism (no shuffle; ``run_job`` owns the result layout).
 
     Column-pruned: only url/html/text flow into the kernels; Catalyst prunes
     the parquet scan to exactly those columns. ``entry_c=True`` swaps in the
     entry-C quirk-compatible kernel twin (config ``extraction.entry_c``).
     """
-    df = pages.select("url", "html", "text")
-    if n_buckets:
-        df = df.repartition(n_buckets, F.col("url"))
-    else:
-        # Single-row-group sources plan as one split, serializing the
-        # Python kernel on one core; the rescue repartition is a strict
-        # plan-time no-op on multi-split inputs (partitioning.py), so a
-        # 100 TB scan stays map-only while small exports parallelize.
-        from ..partitioning import ensure_min_parallelism
+    # Single-row-group sources plan as one split, serializing the Python
+    # kernel on one core; the rescue repartition is a strict plan-time
+    # no-op on multi-split inputs (partitioning.py), so a 100 TB scan
+    # reaches the kernel without a shuffle while small exports parallelize.
+    from ..partitioning import ensure_min_parallelism
 
-        df = ensure_min_parallelism(df)
+    df = ensure_min_parallelism(pages.select("url", "html", "text"))
     return fused_extract(df, entry_c=entry_c).select(
         "url",
         "extracted_text",
@@ -312,7 +322,7 @@ def write_debug_samples(
     words.write.mode("overwrite").parquet(f"{base}/words")
     normalize_stage(words).write.mode("overwrite").parquet(f"{base}/normalized")
     extract = extractor or extract_from_pages
-    extract(sample, None).write.mode("overwrite").parquet(f"{base}/fields")
+    extract(sample).write.mode("overwrite").parquet(f"{base}/fields")
     words.unpersist()
     sample.unpersist()
     return base
@@ -335,9 +345,16 @@ def run_job(
     full scan + anti-join) — the setting for petabyte corpora, where the
     manifest already carries the committed totals.
 
-    ``extractor`` swaps the extraction stage (default extract_from_pages;
-    pass ``lambda p, n: extract_from_pages_with_model(p)`` for the model
-    path) — commit/resume/spans/manifest semantics are identical.
+    ``extractor`` swaps the extraction stage: a function of the pages
+    DataFrame (default extract_from_pages; pass
+    ``extract_from_pages_with_model`` for the model path) —
+    commit/resume/spans/manifest semantics and the result layout are
+    identical.
+
+    Layout: the extractor runs at source parallelism, then
+    ``bucket_results`` shuffles its output once by bucket id, so a run
+    writes exactly one file into each ``url_bucket=`` directory it
+    touches (n_buckets files at most), whatever the input's split count.
 
     ``debug_samples > 0`` additionally writes an N-row sample of each
     pipeline stage under ``<output_dir>/debug/run_id=<id>/`` (see
@@ -365,9 +382,7 @@ def run_job(
 
     t0 = time.monotonic()
     extract = extractor or extract_from_pages
-    results = with_url_bucket(extract(todo, n_buckets), n_buckets).withColumn(
-        "run_id", F.lit(run_id)
-    )
+    results = bucket_results(extract(todo), n_buckets, run_id)
     results.write.mode("append").partitionBy("url_bucket").parquet(results_path)
     elapsed = time.monotonic() - t0
 

@@ -28,7 +28,7 @@ def stream_pages(spark: SparkSession, input_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 4)
         .parquet(input_dir)
     )
-    return extract_from_pages(pages, n_buckets=None)
+    return extract_from_pages(pages)
 
 
 def start_extraction_stream(spark: SparkSession, input_dir: str,

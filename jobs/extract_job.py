@@ -129,12 +129,12 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
         base_extractor = (
             None
             if not entry_c
-            else (lambda p, n: extract_from_pages(p, n, entry_c=True))
+            else (lambda p: extract_from_pages(p, entry_c=True))
         )
     else:
         m_name, m_dev = cfg["model"]["name_or_path"], cfg["model"]["device"]
         base_extractor = (  # noqa: E731
-            lambda p, n: extract_from_pages_with_model(p, m_name, m_dev)
+            lambda p: extract_from_pages_with_model(p, m_name, m_dev)
         )
 
     # extraction.apply_quality: opt-in H11 confidence filter + H10 totals
@@ -147,15 +147,15 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
             with_quality_columns,
         )
 
-        inner = base_extractor or (lambda p, n: extract_from_pages(p, n))
+        inner = base_extractor or extract_from_pages
         min_conf = ext_cfg["min_confidence"]
         verify = ext_cfg["verify_totals"]
 
-        def extractor(p, n):
+        def extractor(p):
             # H10 verifies the RAW extracted amounts (the reference's
             # verify_totals input), BEFORE the H11 filter nulls low-
             # confidence fields — same order q_h10_h11_quality certifies
-            out = inner(p, n)
+            out = inner(p)
             if verify:
                 out = with_quality_columns(out)
             return confidence_filter(out, min_confidence=min_conf)

@@ -197,7 +197,7 @@ def test_model_mode_job_resumes(spark, tmp_path):
     rows = [(u, ts, h, t, l) for u, ts, h, t, l, *_ in generate_corpus(15, seed=17)]
     pages = spark.createDataFrame(rows, PAGES)
     out = str(tmp_path / "modeljob")
-    extractor = lambda p, n: extract_from_pages_with_model(p)  # noqa: E731
+    extractor = extract_from_pages_with_model
     first = run_job(spark, pages.limit(8), out, n_buckets=4, extractor=extractor)
     second = run_job(spark, pages, out, n_buckets=4, extractor=extractor)
     assert second["rows_skipped_resume"] == 8

@@ -484,6 +484,19 @@ def test_cross_doc_line_dedup_kills_boilerplate_lines(spark):
     assert out[5] == ("totally unique document line", 0)
 
 
+def test_cross_doc_line_dedup_keeps_null_text_docs(spark):
+    """A NULL-text doc reads as '' (one empty line) and keeps its output
+    row; it is never dropped from the result."""
+    docs = spark.createDataFrame(
+        [(1, "shared line\na"), (2, "shared line\nb"), (3, None)],
+        "doc_id long, text string",
+    )
+    out = {r["doc_id"]: (r["clean_text"], r["n_lines_removed"])
+           for r in dedup.cross_doc_line_dedup(
+               docs, "doc_id", "text", min_count=2).collect()}
+    assert out == {1: ("a", 1), 2: ("b", 1), 3: ("", 0)}
+
+
 def test_cross_doc_line_dedup_min_count_threshold(spark):
     """min_count=3: a line in only two docs survives."""
     docs = spark.createDataFrame(
@@ -496,3 +509,59 @@ def test_cross_doc_line_dedup_min_count_threshold(spark):
                docs, "doc_id", "text", min_count=3).collect()}
     assert out[1] == "twice line\na" and out[2] == "twice line\nb"
     assert out[3] == "c" and out[4] == "d" and out[5] == "e"
+
+
+def test_shuffle_partitions_falls_back_on_non_numeric_conf():
+    """'auto' (set by some platforms) is not an int: the rolling-hash
+    stage sizes its doc repartition from the default parallelism."""
+    from types import SimpleNamespace
+
+    from documentprocessor_spark.functions.rolling import shuffle_partitions
+
+    def session(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: value),
+            sparkContext=SimpleNamespace(defaultParallelism=6))
+
+    assert shuffle_partitions(session("12")) == 12
+    assert shuffle_partitions(session("auto")) == 6
+
+
+def test_powers_cache_evicts_stopped_sessions(tmp_path):
+    """Stopping and recreating the session leaves only the live
+    application's powers tables in the memo. Runs in a child process:
+    the suite's shared session must stay up."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+from documentprocessor_spark.functions import rolling
+from documentprocessor_spark.session import get_spark
+
+def new_session():
+    return get_spark(app_name="powers-evict", master="local[1]",
+                     shuffle_partitions=1)
+
+s = new_session()
+rolling.powers_table(s, 8)
+rolling.powers_table(s, 16)
+dead = s.sparkContext.applicationId
+s.stop()
+s = new_session()
+live = s.sparkContext.applicationId
+assert rolling.powers_table(s, 8).count() == 9
+assert live != dead
+assert sorted(rolling._POWERS_CACHE) == [(live, 8)], rolling._POWERS_CACHE
+s.stop()
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ,
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (root, os.environ.get("PYTHONPATH")) if p),
+               SPARK_DRIVER_MEM="512m",
+               SPARK_WAREHOUSE=str(tmp_path / "warehouse"))
+    proc = subprocess.run([sys.executable, "-c", script], env=env,
+                          cwd=str(tmp_path), capture_output=True, text=True,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]

@@ -103,7 +103,7 @@ def test_crashed_run_is_reprocessed_not_lost(spark, corpus_pages, tmp_path):
     # simulate a run that died after the results write: write result rows
     # with a run_id that never reaches the manifest
     partial = with_url_bucket(
-        extract_from_pages(corpus_pages.limit(10), 4), 4
+        extract_from_pages(corpus_pages.limit(10)), 4
     ).withColumn("run_id", F.lit("deadrun000000"))
     partial.write.mode("append").partitionBy("url_bucket").parquet(f"{out}/results")
 
@@ -117,6 +117,65 @@ def test_crashed_run_is_reprocessed_not_lost(spark, corpus_pages, tmp_path):
     committed = read_committed_results(spark, out)
     assert committed.count() == corpus_pages.count()
     assert committed.where(F.col("run_id") == "deadrun000000").count() == 0
+
+
+def _result_files_per_bucket(out):
+    import glob
+    import os
+
+    return {
+        os.path.basename(d): len(glob.glob(f"{d}/*.parquet"))
+        for d in glob.glob(f"{out}/results/url_bucket=*")
+    }
+
+
+def test_run_job_commits_one_file_per_bucket(spark, tmp_path):
+    """run_job shuffles the kernel output by bucket id, so a run over a
+    16-split source leaves exactly one parquet file in each url_bucket
+    directory it touched (not one per source split), and spans follow."""
+    import glob
+
+    from documentprocessor_spark.sources.synthetic import distributed_corpus
+
+    out = str(tmp_path / "job")
+    stats = run_job(spark, distributed_corpus(spark, 200, n_partitions=16),
+                    out, n_buckets=4)
+    assert stats["rows_total_committed"] == 200
+    files = _result_files_per_bucket(out)
+    assert files and all(n == 1 for n in files.values()), files
+    assert len(glob.glob(f"{out}/spans/*.parquet")) <= 4
+
+
+def test_run_job_model_path_commits_one_file_per_bucket(spark, tmp_path):
+    """The result layout belongs to run_job, not the extractor: the
+    model-path extractor gets the same one-file-per-bucket commit."""
+    from documentprocessor_spark.plans.pipeline import (
+        extract_from_pages_with_model,
+    )
+    from documentprocessor_spark.sources.synthetic import distributed_corpus
+
+    out = str(tmp_path / "modeljob")
+    run_job(spark, distributed_corpus(spark, 60, n_partitions=16), out,
+            n_buckets=4, extractor=extract_from_pages_with_model)
+    files = _result_files_per_bucket(out)
+    assert files and all(n == 1 for n in files.values()), files
+
+
+def test_results_write_plan_shuffles_only_kernel_output(spark):
+    """The plan run_job writes has exactly one shuffle Exchange — the
+    bucket-id repartition — and it sits ABOVE the MapInArrow kernel, so
+    html never crosses a shuffle."""
+    from documentprocessor_spark.plans.pipeline import bucket_results
+    from documentprocessor_spark.sources.synthetic import distributed_corpus
+
+    pages = distributed_corpus(spark, 64, n_partitions=16)
+    plan = (bucket_results(extract_from_pages(pages), 4, "r")
+            ._jdf.queryExecution().executedPlan().toString().splitlines())
+    exchanges = [i for i, line in enumerate(plan) if "Exchange" in line]
+    kernels = [i for i, line in enumerate(plan) if "MapInArrow" in line]
+    assert len(exchanges) == 1, plan
+    assert "direct_shuffle_partition_id(url_bucket" in plan[exchanges[0]]
+    assert len(kernels) == 1 and exchanges[0] < kernels[0], plan
 
 
 def test_run_job_resume_skips_committed(spark, corpus_pages, tmp_path):
