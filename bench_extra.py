@@ -25,23 +25,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
 
-HEADLINE = [
-    "tpch_q1_pricing_summary",
-    "tpch_q3_top_revenue",
-    "top_part_per_supplier",
-    "dedup_minhash_signatures",
-    "dedup_ngram_jaccard",
-    "dedup_spans",
-    "winnow_fingerprints",
-    "line_dedup",
-    "similarity_cosine_topk",
-    "text_stats",
-    "h8_sessionize_events",
-    "pipeline_extract_documents",
-]
-
 
 def main() -> None:
+    from bench import HEADLINE  # the one headline-query list
     from documentprocessor_spark.queries import QUERIES
     from documentprocessor_spark.session import get_spark
 

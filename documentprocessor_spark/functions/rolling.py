@@ -26,16 +26,26 @@ parallel and pack into ONE bigint join key:
                                                 comparable to the module's
                                                 60-bit md5 contract)
 
-B**j mod M comes from a driver-built broadcast powers table (maxlen+1
-rows, one modmul each — microseconds), NOT a per-row fold; the prefix sum
-rides ONE per-doc window (Exchange on doc_id + sort on pos), which
-winnowing needed anyway for its argmin window — same partitioning, same
-order, so the sort is reused and winnowing gains no extra shuffle.
+B**e mod M comes from two small driver-built broadcast tables, NOT a
+per-row fold and NOT one row per exponent: with e = hi * 2**11 + lo,
+
+    lo[lo] = B**lo          mod M   (2**11 rows)
+    hi[hi] = B**(hi * 2**11) mod M  ((maxlen >> 11) + 1 rows, <= 2**11 + 1)
+    B**e   = modmul(hi[e >> 11], lo[e & (2**11 - 1)], M)
+
+Both factors are < M, so the same 20-bit-split modmul keeps every
+product < 2**63. The tables stay a few thousand rows at any maxlen, so
+Catalyst's constant folding of them costs nothing per plan build (a
+maxlen+1-row table was 65,537 rows at the default maxlen, folded on every
+build and re-optimisation). The prefix sum rides ONE per-doc window
+(Exchange on doc_id + sort on pos), which winnowing needed anyway for its
+argmin window — same partitioning, same order, so the sort is reused and
+winnowing gains no extra shuffle.
 
 Documents longer than ``maxlen`` tokens fail fast with raise_error (a
-silent left-join miss would silently drop their windows); the prefix-sum
-int64 bound holds to 2**22 tokens, so maxlen above that is rejected at
-plan-build time.
+silent miss would silently drop their windows): the position power is
+guarded by ``pos < maxlen``; the prefix-sum int64 bound holds to 2**22
+tokens, so maxlen above that is rejected at plan-build time.
 
 The DuckDB oracle twin is generated by :func:`rolling_oracle_ctes` (the
 powers table becomes a recursive CTE), and :func:`py_window_hashes` is
@@ -79,21 +89,37 @@ def _h60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-# Memo of the CONSTANTS table B**e mod M per (application, maxlen). This
-# is not result caching: the table is a pure function of the module's
-# fixed (B, M) constants and maxlen — independent of any input data — and
-# re-creating it per operator call costs a driver pandas->Arrow
-# createDataFrame round-trip (~0.1-0.3 s at maxlen 65536) on every
-# duplicate_spans/winnow_fingerprints plan build. Entries of any other
-# application are evicted on insert: a process that stops and recreates
-# sessions would otherwise pin every dead session's DataFrames.
-_POWERS_CACHE: dict[tuple[str, int], DataFrame] = {}
+_LO_BITS = 11                   # B**e = B**(hi * 2**11) * B**lo
+_LO_ROWS = 1 << _LO_BITS
+
+# Memo of the CONSTANT power tables per (application, maxlen). This is not
+# result caching: the tables are a pure function of the module's fixed
+# (B, M) constants and maxlen — independent of any input data — and
+# re-creating them per operator call costs a driver pandas->Arrow
+# createDataFrame round-trip on every duplicate_spans/winnow_fingerprints
+# plan build. Entries of any other application are evicted on insert: a
+# process that stops and recreates sessions would otherwise pin every
+# dead session's DataFrames.
+_POWERS_CACHE: dict[tuple[str, int], tuple[DataFrame, DataFrame]] = {}
 
 
-def powers_table(spark: SparkSession, maxlen: int) -> DataFrame:
-    """(e, pw1, pw2) for e in [0, maxlen]: B**e mod M per hash pair.
-    Driver-built (maxlen+1 modmuls — microseconds) and broadcast; memoized
-    per (application, maxlen) because the content is a pure constant."""
+def _power_rows(base1: int, base2: int, n: int) -> dict[str, list[int]]:
+    """(i, p1, p2) columns for i in [0, n): base1**i mod M1, base2**i mod M2."""
+    p1 = [1] * n
+    p2 = [1] * n
+    for i in range(1, n):
+        p1[i] = p1[i - 1] * base1 % ROLL_M1
+        p2[i] = p2[i - 1] * base2 % ROLL_M2
+    return {"i": list(range(n)), "p1": p1, "p2": p2}
+
+
+def power_tables(
+    spark: SparkSession, maxlen: int
+) -> tuple[DataFrame, DataFrame]:
+    """(hi, lo) tables of columns (i, p1, p2): hi holds B**(i * 2**11) mod M
+    for i in [0, maxlen >> 11], lo holds B**i mod M for i in [0, 2**11).
+    Driver-built (a few thousand modmuls) and broadcast; memoized per
+    (application, maxlen) because the content is a pure constant."""
     app_id = spark.sparkContext.applicationId
     key = (app_id, maxlen)
     cached = _POWERS_CACHE.get(key)
@@ -101,18 +127,41 @@ def powers_table(spark: SparkSession, maxlen: int) -> DataFrame:
         return cached
     import pandas as pd
 
-    pw1 = [1] * (maxlen + 1)
-    pw2 = [1] * (maxlen + 1)
-    for e in range(1, maxlen + 1):
-        pw1[e] = pw1[e - 1] * ROLL_B1 % ROLL_M1
-        pw2[e] = pw2[e - 1] * ROLL_B2 % ROLL_M2
-    df = spark.createDataFrame(
-        pd.DataFrame({"e": range(maxlen + 1), "pw1": pw1, "pw2": pw2})
-    )
+    hi = _power_rows(pow(ROLL_B1, _LO_ROWS, ROLL_M1),
+                     pow(ROLL_B2, _LO_ROWS, ROLL_M2),
+                     (maxlen >> _LO_BITS) + 1)
+    lo = _power_rows(ROLL_B1, ROLL_B2, _LO_ROWS)
+    tables = (spark.createDataFrame(pd.DataFrame(hi)),
+              spark.createDataFrame(pd.DataFrame(lo)))
     for stale in [k for k in _POWERS_CACHE if k[0] != app_id]:
         del _POWERS_CACHE[stale]
-    _POWERS_CACHE[key] = df
-    return df
+    _POWERS_CACHE[key] = tables
+    return tables
+
+
+def _with_powers(
+    df: DataFrame,
+    e: Column,
+    tables: tuple[DataFrame, DataFrame],
+    p1: str,
+    p2: str,
+) -> DataFrame:
+    """``df`` plus B**e mod M per hash pair as columns ``p1``/``p2``: two
+    broadcast lookups (map-side) and one modmul each. An exponent past
+    the hi table yields NULL (left joins never drop a row)."""
+    hi, lo = tables
+    return (
+        df.withColumn("_e", e)
+        .join(F.broadcast(hi.toDF("_hi", "_h1", "_h2")),
+              F.shiftright(F.col("_e"), _LO_BITS) == F.col("_hi"), "left")
+        .join(F.broadcast(lo.toDF("_lo", "_l1", "_l2")),
+              F.col("_e").bitwiseAND(_LO_ROWS - 1) == F.col("_lo"), "left")
+        .select(
+            *df.columns,
+            _modmul(F.col("_h1"), F.col("_l1"), ROLL_M1).alias(p1),
+            _modmul(F.col("_h2"), F.col("_l2"), ROLL_M2).alias(p2),
+        )
+    )
 
 
 def shuffle_partitions(spark: SparkSession) -> int:
@@ -140,10 +189,11 @@ def rolling_window_hashes(
     text) BEFORE the posexplode, so the per-doc prefix-sum/lead windows
     find their required hashpartitioning(doc_id) already satisfied and
     only add a local sort — the exploded (doc_id, pos, a1, a2) stream
-    (32 bytes/token) never rides an Exchange. Then posexplode -> broadcast
-    powers join (map-side) -> local sort -> two Window passes -> broadcast
-    complement-powers join. One shuffle total, of the narrowest possible
-    representation of the data."""
+    (32 bytes/token) never rides an Exchange. Then posexplode -> hi/lo
+    broadcast power lookups (map-side) -> local sort -> two Window passes
+    -> hi/lo lookups of the complement powers (the same two broadcasts,
+    reused). One shuffle total, of the narrowest possible representation
+    of the data."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if maxlen > (1 << 22):
@@ -151,13 +201,7 @@ def rolling_window_hashes(
             f"maxlen {maxlen} exceeds the int64 prefix-sum bound 2**22"
         )
     spark = df.sparkSession
-    powers = powers_table(spark, maxlen)
-    # complement powers: pc(pos) = B**(maxlen - pos) mod M
-    pc = powers.select(
-        (F.lit(maxlen) - F.col("e")).alias("pos"),
-        F.col("pw1").alias("pc1"),
-        F.col("pw2").alias("pc2"),
-    )
+    tables = power_tables(spark, maxlen)
 
     # explicit partition count (the session's shuffle knob): a bare
     # repartition(col) is AQE-coalescible and collapses a small corpus to
@@ -172,20 +216,13 @@ def rolling_window_hashes(
         F.posexplode(F.split(F.col("_t"), " ")).alias("pos", "t"),
     )
     h = tok.select("doc_id", "pos", _h60(F.col("t")).alias("h"))
-    # join keys restricted to e < maxlen: a doc of maxlen tokens has max
-    # pos maxlen-1, so a doc of exactly maxlen+1 tokens (max pos ==
-    # maxlen) now misses and raises like py_window_hashes does — the two
-    # twins previously drew the boundary one row apart (r5 advice). The
-    # complement table below keeps the full [0, maxlen] range.
-    j = h.join(
-        F.broadcast(powers.where(F.col("e") < maxlen)),
-        h.pos == powers.e,
-        "left",
-    ).drop("e")
-    # fail fast on docs longer than maxlen: their positions miss the
-    # powers table, and coalesce only evaluates raise_error on that miss
+    j = _with_powers(h, F.col("pos"), tables, "pw1", "pw2")
+    # fail fast on docs longer than maxlen: a doc of maxlen tokens has max
+    # pos maxlen-1, so a doc of exactly maxlen+1 tokens raises — the same
+    # boundary py_window_hashes draws. coalesce only evaluates raise_error
+    # on the guarded miss.
     pw1 = F.coalesce(
-        F.col("pw1"),
+        F.when(F.col("pos") < maxlen, F.col("pw1")),
         F.expr(
             f"cast(raise_error('document exceeds rolling-hash maxlen "
             f"{maxlen} tokens') as bigint)"
@@ -214,7 +251,11 @@ def rolling_window_hashes(
         ((F.col("e1") - (F.col("s1") - F.col("a1"))) % ROLL_M1).alias("d1"),
         ((F.col("e2") - (F.col("s2") - F.col("a2"))) % ROLL_M2).alias("d2"),
     )
-    return hh.join(F.broadcast(pc), "pos").select(
+    # complement powers pc(pos) = B**(maxlen - pos) mod M; pos < maxlen
+    # here, so the exponent is in [1, maxlen] and always found
+    return _with_powers(
+        hh, F.lit(maxlen) - F.col("pos"), tables, "pc1", "pc2"
+    ).select(
         "doc_id",
         "pos",
         (

@@ -44,7 +44,7 @@ def contamination_overlap(
     ``broadcast_benchmark`` should stay True whenever the benchmark's
     distinct-shingle set fits an executor (the normal case: benchmarks are
     MBs, corpora are TBs); set False to let AQE pick a shuffled join."""
-    # (doc, shingle) pairs are already distinct per doc — shingles_col
+    # (doc, shingle) pairs are already distinct per doc — shingle_transform
     # array_distincts before the explode — so no dedup shuffle is needed on
     # either side
     corpus_sh = doc_shingle_hashes(corpus, id_col, text_col, n).withColumnRenamed(

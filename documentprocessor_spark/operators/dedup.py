@@ -67,14 +67,6 @@ def shingle_transform(toks: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles_col(text: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
-    """Shingles of a raw text column. Single-expression convenience form:
-    the split re-evaluates per lambda element (see shingle_transform) —
-    operators on a hot path must project the split first and call
-    shingle_transform on the attribute instead."""
-    return shingle_transform(F.split(text, " "), n)
-
-
 def doc_shingles(df: DataFrame, id_col: str, text_col: str,
                  n: int = DEFAULT_SHINGLE_N) -> DataFrame:
     """Long (id, shingle) pairs; text column dropped before the explode so
@@ -280,8 +272,10 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
 
 # ---------------------------------------------------------------- caches
 #
-# Operators that persist an intermediate (ngram_jaccard_pairs'`rare`,
-# duplicate_spans' `windows`) register the handle in ONE of two places:
+# Operators that persist an intermediate (ngram_jaccard_pairs' `rare`,
+# duplicate_spans' `windows`, cross_doc_line_dedup's `lines`, and
+# plans.curate's survivors) persist it through _register_persist, which
+# registers the handle in ONE of two places:
 #
 # - inside a `with dedup_cache_scope() as scope:` block (thread-local),
 #   the handle joins the scope and is unpersisted when the block exits —
@@ -289,9 +283,9 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
 #   persists and cannot drop each other's (r3/r4 ADVICE, applied r5);
 # - otherwise the legacy single-slot module global: each new call
 #   unpersists the previous one, so repeated sweeps in a long-lived
-#   session never accumulate executor cache; release_jaccard_cache() /
-#   release_span_cache() free the last handle. (Unpersist is lazy-safe:
-#   a not-yet-consumed plan simply recomputes the stage.)
+#   session never accumulate executor cache; each slot's release_*()
+#   frees its last handle. (Unpersist is lazy-safe: a not-yet-consumed
+#   plan simply recomputes the stage.)
 
 import threading
 
@@ -344,13 +338,21 @@ def dedup_cache_scope() -> DedupCacheScope:
 
 
 def _register_persist(df: DataFrame, legacy_slot: list[DataFrame],
-                      legacy_release) -> None:
+                      legacy_release) -> DataFrame:
+    """Persist ``df`` under the current owner and return the handle.
+
+    The legacy slot is released BEFORE the persist: Spark's CacheManager
+    keys entries by plan, so a call repeating the previous call's plan
+    finds the old entry already cached (its persist is a no-op), and
+    releasing the old handle afterwards would drop the one shared entry
+    — the new handle would then never be cached."""
     stack = getattr(_SCOPE_STACK, "stack", None)
     if stack:
         stack[-1].add(df)
     else:
         legacy_release()
         legacy_slot.append(df)
+    return df.persist()
 
 
 _JACCARD_CACHE: list[DataFrame] = []
@@ -405,13 +407,12 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     # dedup_cache_scope the handle belongs to the scope; otherwise the
     # legacy single slot (each call releases the previous call's handle,
     # release_jaccard_cache() frees the last).
-    rare = (
+    rare = _register_persist(
         pairs.groupBy("sh_hash")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
-        .where(F.size("docs") <= df_cap)
-        .persist()
+        .where(F.size("docs") <= df_cap),
+        _JACCARD_CACHE, release_jaccard_cache,
     )
-    _register_persist(rare, _JACCARD_CACHE, release_jaccard_cache)
     sizes = (
         rare.select(F.explode("docs").alias("doc_id"))
         .groupBy("doc_id")
@@ -520,15 +521,14 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     slim = df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias(text_col)
     )
-    windows = (
+    windows = _register_persist(
         rolling_window_hashes(
             slim, "doc_id", text_col, k, maxlen or DEFAULT_MAXLEN
         )
         .withColumnRenamed("pos", "span_start")
-        .select("doc_id", "span_start", "win_hash")
-        .persist()
+        .select("doc_id", "span_start", "win_hash"),
+        _SPAN_CACHE, release_span_cache,
     )
-    _register_persist(windows, _SPAN_CACHE, release_span_cache)
     dup_hashes = (
         windows.groupBy("win_hash")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -724,13 +724,15 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
     checkpoints to storage instead."""
     # NULL text reads as '' so the doc keeps its one empty-line row:
     # split(NULL) would explode to zero rows and drop the doc silently
-    lines = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-        ).alias("pos", "line"),
-    ).withColumn("lh", _h60(F.col("line"))).persist()
-    _register_persist(lines, _LINE_CACHE, release_line_cache)
+    lines = _register_persist(
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            F.posexplode(
+                F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
+            ).alias("pos", "line"),
+        ).withColumn("lh", _h60(F.col("line"))),
+        _LINE_CACHE, release_line_cache,
+    )
     hot = (
         lines.groupBy("lh")
         .agg(F.count("*").alias("n_occ"))

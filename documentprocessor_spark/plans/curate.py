@@ -31,6 +31,23 @@ from pyspark.sql import functions as F
 from ..operators import dedup
 from ..operators.textstats import lang_id_col, quality_score_col
 
+# The persisted survivors of the latest curate_documents(exact_substr_k=…)
+# call — the dedup module's single-slot lifecycle (see its cache notes),
+# in a slot of its own: duplicate_spans registers its `windows` in
+# dedup._SPAN_CACHE during the same call, which would release survivors
+# before anything executes.
+_SURVIVORS_CACHE: list[DataFrame] = []
+
+
+def release_survivors_cache() -> None:
+    """Unpersist the survivors cached by the last curate_documents call
+    with ``exact_substr_k`` set."""
+    while _SURVIVORS_CACHE:
+        try:
+            _SURVIVORS_CACHE.pop().unpersist()
+        except Exception:  # session already stopped — nothing to release
+            pass
+
 
 def curate_documents(
     docs: DataFrame,
@@ -51,7 +68,9 @@ def curate_documents(
     cross-document duplicated k-token span cut out
     (dedup.remove_duplicate_spans — the Lee et al. ExactSubstr pass,
     applied AFTER near-dup dropping so the span table is built over
-    survivors only).
+    survivors only). The survivors relation is then persisted (its own
+    cache slot, release_survivors_cache(); inside a
+    dedup.dedup_cache_scope the scope owns it).
 
     ``transitive=True`` replaces the one-pass pair drop with connected
     components over the band pairs (operators.graph.dedup_clusters):
@@ -103,6 +122,12 @@ def curate_documents(
         losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     survivors = exact.join(losers, "doc_id", "left_anti")
     if exact_substr_k is not None:
+        # three consumers read survivors (the span windows, the cut
+        # join-back and the stats join below): persisted once, so the
+        # filter/exact/MinHash subtree runs once instead of three times
+        survivors = dedup._register_persist(
+            survivors, _SURVIVORS_CACHE, release_survivors_cache
+        )
         cleaned = dedup.remove_duplicate_spans(
             survivors, "doc_id", "text", k=exact_substr_k
         )

@@ -372,7 +372,14 @@ def run_job(
             n_committed = _committed_count(spark, manifest_path)
             if n_committed <= BROADCAST_RESUME_LIMIT:
                 committed = F.broadcast(committed)
-            todo = todo.join(committed, "url", "left_anti")
+            # rescue an under-split source BEFORE the anti-join: the
+            # join's Exchange would make the extractor's own rescue a
+            # no-op, and the kernel would run at the source's split count
+            from ..partitioning import ensure_min_parallelism
+
+            todo = ensure_min_parallelism(pages).join(
+                committed, "url", "left_anti"
+            )
             if collect_stats:
                 before = pages.count()
                 skipped = before - todo.count()

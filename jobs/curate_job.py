@@ -66,13 +66,26 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
                              "occurring >= N times corpus-wide)")
     args = parser.parse_args(argv)
 
+    from documentprocessor_spark.operators.dedup import dedup_cache_scope
+    from documentprocessor_spark.session import get_spark
+
+    spark = get_spark(app_name="dp-curate")
+    # the scope owns every relation the stages persist (survivors, span
+    # windows, lines) and unpersists them on return: a long-lived caller
+    # must not keep this run's cached text, which a later query over the
+    # same path could match
+    with dedup_cache_scope():
+        _run(spark, args)
+    if stop_session:
+        spark.stop()
+
+
+def _run(spark, args) -> None:
     from documentprocessor_spark.plans.curate import (
         curate_documents,
         curate_documents_checkpointed,
     )
-    from documentprocessor_spark.session import get_spark
 
-    spark = get_spark(app_name="dp-curate")
     t0 = time.monotonic()
     docs = spark.read.parquet(args.input)
     # rows_in rides the plan's own scan via observe() — a driver-side
@@ -171,8 +184,6 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
         **extra,
         "elapsed_sec": round(time.monotonic() - t0, 3),
     }))
-    if stop_session:
-        spark.stop()
 
 
 if __name__ == "__main__":

@@ -374,6 +374,90 @@ def test_curate_exact_substr_stage(spark):
     assert out[3] == "the totally different body with its own tokens here now"
 
 
+def _physical_nodes(plan) -> list:
+    """Nodes of a physical plan, through AQE wrappers but not into cached
+    relations: an InMemoryTableScan is a leaf here."""
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    nodes = [plan]
+    children = plan.children()
+    for i in range(children.size()):
+        nodes += _physical_nodes(children.apply(i))
+    return nodes
+
+
+def _cached_scans(nodes) -> dict:
+    """InMemoryTableScans among ``nodes``, keyed by the cached relation's
+    column names."""
+    scans = {}
+    for n in nodes:
+        if n.getClass().getSimpleName() == "InMemoryTableScanExec":
+            out = n.relation().output()
+            cols = tuple(out.apply(i).name() for i in range(out.size()))
+            scans.setdefault(cols, []).append(n)
+    return scans
+
+
+def _mentions(nodes, word: str) -> bool:
+    return any(word in n.simpleString(1000) for n in nodes)
+
+
+def test_curate_exact_substr_reads_survivors_from_one_cache(spark):
+    """With exact_substr_k, survivors (textstats -> exact -> MinHash ->
+    anti-join) feed three consumers: the span windows, the cut join-back
+    and the stats join. All three read it through InMemoryTableScan, and
+    the MinHash stage (its band_hash grouping) exists only inside the
+    cached survivors relation."""
+    from documentprocessor_spark.plans.curate import release_survivors_cache
+
+    docs = spark.createDataFrame(
+        [(i, "the shared header line one two three words %d more" % (i % 3))
+         for i in range(9)],
+        ["doc_id", "text"],
+    )
+    out = curate_documents(docs, min_quality=0.0, exact_substr_k=5,
+                           minhash_k=2)
+    top = _physical_nodes(out._jdf.queryExecution().executedPlan())
+    survivors_cols = ("doc_id", "text", "lang_id", "quality_score")
+    windows_cols = ("doc_id", "span_start", "win_hash")
+    scans = _cached_scans(top)
+    # stats join + cut join-back read survivors at the top level; the span
+    # windows relation (itself cached) reads it inside its cached plan
+    assert len(scans.get(survivors_cols, [])) == 2, scans
+    assert scans.get(windows_cols), scans
+    windows = _physical_nodes(
+        scans[windows_cols][0].relation().cachedPlan())
+    assert len(_cached_scans(windows).get(survivors_cols, [])) == 1
+    assert not _mentions(top, "band_hash")
+    assert not _mentions(windows, "band_hash")
+    survivors = _physical_nodes(
+        scans[survivors_cols][0].relation().cachedPlan())
+    assert _mentions(survivors, "band_hash")
+    release_survivors_cache()
+
+
+def test_curate_job_releases_its_persists(spark, tmp_path, capsys):
+    """curate_job persists survivors, span windows and lines; main()
+    unpersists all of them before returning, so a long-lived caller keeps
+    no cached text of the run."""
+    from jobs.curate_job import main
+
+    def cached_rdds():
+        jsc = spark.sparkContext._jsc.sc()
+        return {r.id() for r in jsc.getRDDStorageInfo()}
+
+    docs = spark.createDataFrame(CKPT_DOCS, ["doc_id", "text"])
+    src = str(tmp_path / "docs")
+    docs.write.parquet(src)
+    base = cached_rdds()
+    main(["--input", src, "--output", str(tmp_path / "out"),
+          "--min-quality", "0.0", "--exact-substr-k", "3",
+          "--line-dedup-min-count", "2", "--winnow-k", "3"],
+         stop_session=False)
+    capsys.readouterr()
+    assert not cached_rdds() - base
+
+
 def test_curate_job_cli(spark, tmp_path, capsys):
     """The spark-submit curation CLI end to end: in-process main() on a
     small corpus, one-pass then checkpointed mode into the same output."""

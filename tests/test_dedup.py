@@ -544,13 +544,14 @@ def new_session():
                      shuffle_partitions=1)
 
 s = new_session()
-rolling.powers_table(s, 8)
-rolling.powers_table(s, 16)
+rolling.power_tables(s, 8)
+rolling.power_tables(s, 16)
 dead = s.sparkContext.applicationId
 s.stop()
 s = new_session()
 live = s.sparkContext.applicationId
-assert rolling.powers_table(s, 8).count() == 9
+hi, lo = rolling.power_tables(s, 8)
+assert (hi.count(), lo.count()) == (1, 2048)
 assert live != dead
 assert sorted(rolling._POWERS_CACHE) == [(live, 8)], rolling._POWERS_CACHE
 s.stop()
@@ -565,3 +566,63 @@ s.stop()
                           cwd=str(tmp_path), capture_output=True, text=True,
                           timeout=300)
     assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def test_repeated_dedup_calls_keep_their_relation_cached(spark):
+    """A second duplicate_spans / cross_doc_line_dedup call over the same
+    input repeats the first call's plan, and Spark keys cache entries by
+    plan: the legacy slot must release the first handle BEFORE the new
+    persist, or the release drops the one shared entry and the second
+    call's relation is never cached."""
+    docs = spark.createDataFrame(
+        [(i, "shared words on the first line\nand a body line %d" % (i % 4))
+         for i in range(8)],
+        ["doc_id", "text"],
+    )
+
+    def cached_rdds():
+        jsc = spark.sparkContext._jsc.sc()
+        return {r.id() for r in jsc.getRDDStorageInfo()}
+
+    calls = [
+        (lambda: dedup.duplicate_spans(docs, "doc_id", "text", k=3),
+         dedup.release_span_cache),
+        (lambda: dedup.cross_doc_line_dedup(docs, "doc_id", "text"),
+         dedup.release_line_cache),
+    ]
+    for op, release in calls:
+        base = cached_rdds()
+        op().count()
+        second = op()
+        second.count()
+        plan = second._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        assert cached_rdds() - base
+        release()
+
+
+def _local_relation_rows(plan) -> list[int]:
+    """Row counts of every LocalRelation in a logical plan."""
+    rows = []
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        rows.append(plan.data().size())
+    children = plan.children()
+    for i in range(children.size()):
+        rows += _local_relation_rows(children.apply(i))
+    return rows
+
+
+def test_rolling_plan_power_tables_stay_small(docs_df):
+    """The rolling-hash plan embeds two power tables of at most 2**11 + 1
+    rows each (B**e = hi[e >> 11] * lo[e & 2047]), never one row per
+    exponent — the constant folding Catalyst repeats on every plan build
+    stays small even at the 2**22 maxlen bound."""
+    from documentprocessor_spark.functions.rolling import (
+        DEFAULT_MAXLEN, rolling_window_hashes)
+
+    for maxlen in (64, DEFAULT_MAXLEN, 1 << 22):
+        plan = rolling_window_hashes(
+            docs_df, "doc_id", "text", 3, maxlen
+        )._jdf.queryExecution().optimizedPlan()
+        rows = _local_relation_rows(plan)
+        assert rows and max(rows) <= 2049, (maxlen, rows)

@@ -197,6 +197,32 @@ def test_run_job_resume_skips_committed(spark, corpus_pages, tmp_path):
     ).count() == 0
 
 
+def test_resume_run_rescues_under_split_source(spark, corpus_pages, tmp_path):
+    """A resume run (a committed earlier run in the output dir) over a
+    single-row-group pages file still runs the kernel at >=
+    defaultParallelism partitions: the rescue happens before the resume
+    anti-join, whose Exchange would otherwise hide the under-split
+    source from the extractor's own rescue."""
+    src = str(tmp_path / "pages")
+    corpus_pages.coalesce(1).write.parquet(src)
+    pages = spark.read.parquet(src)
+    assert pages.rdd.getNumPartitions() == 1
+    out = str(tmp_path / "job")
+    run_job(spark, pages.limit(20), out, n_buckets=4)
+
+    kernels = []
+
+    def extractor(todo):
+        kernels.append(extract_from_pages(todo))
+        return kernels[-1]
+
+    stats = run_job(spark, pages, out, n_buckets=4, extractor=extractor)
+    assert stats["rows_skipped_resume"] == 20
+    assert stats["rows_total_committed"] == corpus_pages.count()
+    assert (kernels[0].rdd.getNumPartitions()
+            >= spark.sparkContext.defaultParallelism)
+
+
 def test_results_read_prunes_url_bucket_partitions(spark, tmp_path):
     """The results sink is partitioned by url_bucket; a bucket-filtered
     read must prune at the LISTING level (PartitionFilters in the scan),
