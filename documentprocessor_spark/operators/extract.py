@@ -21,22 +21,24 @@ task.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .. import reference_semantics as ref
-from ..schemas import FIELDS, SCALAR_FIELDS
+from ..schemas import RESULT, SCALAR_FIELDS
+from .html_parse import page_tuples
 
-EXTRACT_STRUCT = StructType(
-    [
-        StructField("extracted_text", StringType(), True),
-        *FIELDS.fields,
-        StructField("status", StringType(), False),
-        StructField("error", StringType(), True),
-    ]
-)
+# schemas.RESULT is the one result schema: the words path's struct is RESULT
+# without url, and the kernel's Arrow twin is derived from it (pa.array on
+# dict rows is ~1.8x faster end-to-end than routing nested structs through
+# pandas object columns — measured on the 320k bench corpus: 66k vs 38k
+# docs/s at local[32]).
+EXTRACT_STRUCT = StructType(RESULT.fields[1:])
+_PA_OUT = to_arrow_schema(RESULT)
 
 
 def _to_tuples(words) -> list[tuple]:
@@ -76,66 +78,31 @@ def _extract_one_from_tuples(
         }
 
 
+def _fields_udf(extractor):
+    """The words path's stage 2: array<WORD> → EXTRACT_STRUCT, one pandas
+    UDF per extractor."""
 
-def _extract_one(words) -> dict:
-    return _extract_one_from_tuples(_to_tuples(words))
+    @pandas_udf(EXTRACT_STRUCT)
+    def extract_fields(words: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [_extract_one_from_tuples(_to_tuples(w), extractor) for w in words]
+        )
 
-
-@pandas_udf(EXTRACT_STRUCT)
-def extract_fields_udf(words_series: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame([_extract_one(words) for words in words_series])
-
-
-@pandas_udf(EXTRACT_STRUCT)
-def extract_fields_entry_c_udf(words_series: pd.Series) -> pd.DataFrame:
-    """Entry-C twin of extract_fields_udf (the words-path analog of
-    fused_extract(entry_c=True)): tax-box y0 quirk + extended currency set
-    (SURVEY §8.4-8.5)."""
-    return pd.DataFrame(
-        [
-            _extract_one_from_tuples(_to_tuples(words), ref.extract_fields_entry_c)
-            for words in words_series
-        ]
-    )
+    return extract_fields
 
 
-# Arrow twin of the output schema, DERIVED from the Spark schema so the two
-# cannot drift (pa.array on dict rows is ~1.8x faster end-to-end than
-# routing nested structs through pandas object columns — measured on the
-# 320k bench corpus: 66k vs 38k docs/s at local[32]).
-import pyarrow as pa
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType as _StructType
-
-_OUT_SPARK_SCHEMA = _StructType(
-    [StructField("url", StringType(), False), *EXTRACT_STRUCT.fields]
-)
-_PA_OUT = to_arrow_schema(_OUT_SPARK_SCHEMA)
-
-
-def _make_fused_kernel(extractor=None):
+def _make_fused_kernel(extractor):
     """Build the mapInArrow kernel: (url, html, text) → full result rows in
     ONE Python pass with direct Arrow assembly.
 
-    This is the pipeline's hot path. Fusing stage 1 (HTML parse) and stage 2
-    (field extraction) into a single kernel eliminates the Arrow round-trip
-    of the intermediate `array<WORD>` column; emitting pyarrow RecordBatches
-    directly (instead of pandas DataFrames) removes the object-column
-    conversion on top. The modular two-stage path (parse_words_udf →
-    extract_fields_udf) remains for callers that need the words themselves.
-
-    ``extractor`` defaults to the authoritative fast path; pass
-    reference_semantics.extract_fields_entry_c for entry-C compatibility.
-
-    Content sniffing: a Common-Crawl-style pages table carries PDF
-    responses in the same binary column as HTML; rows whose payload starts
-    with the ``%PDF-`` magic route to the PDF text-layer parser
-    (sources/pdf.py), everything else to the HTML scanner — ONE pipeline
-    extracts both. (No legal HTML document starts with ``%PDF-``, so the
-    HTML byte-identity contract is untouched.)
-    """
-    from ..sources.pdf import pdf_tuples
-    from .html_parse import html_tuples, text_tuples
+    This is the pipeline's hot path. Fusing stage 1 (page → words) and
+    stage 2 (field extraction) into a single kernel eliminates the Arrow
+    round-trip of the intermediate `array<WORD>` column; emitting pyarrow
+    RecordBatches directly (instead of pandas DataFrames) removes the
+    object-column conversion on top. The modular two-stage path
+    (parse_words_udf → attach_extraction) remains for callers that need
+    the words themselves; both stage-1 forms route every row through
+    ``html_parse.page_tuples`` (HTML, PDF payloads, pre-extracted text)."""
 
     def kernel(batches):
         for rb in batches:
@@ -145,19 +112,7 @@ def _make_fused_kernel(extractor=None):
             texts = rb.column(names.index("text")).to_pylist()
             rows = []
             for url, html, text in zip(urls, htmls, texts):
-                if html is not None:
-                    if (
-                        isinstance(html, (bytes, bytearray, memoryview))
-                        and bytes(html[:5]) == b"%PDF-"
-                    ):
-                        tuples = pdf_tuples(html)
-                    else:
-                        tuples = html_tuples(html)
-                elif text is not None:
-                    tuples = text_tuples(text)
-                else:
-                    tuples = []
-                row = _extract_one_from_tuples(tuples, extractor)
+                row = _extract_one_from_tuples(page_tuples(html, text), extractor)
                 row["url"] = url
                 rows.append(row)
             arrays = [
@@ -168,63 +123,34 @@ def _make_fused_kernel(extractor=None):
     return kernel
 
 
-fused_extract_kernel = _make_fused_kernel()
+# entry_c → extractor: the authoritative fast path, or the entry-C twin
+# (tax-box y0 quirk + extended currency set, SURVEY §8.4-8.5). Each is built
+# once, for both the words path and the fused kernel.
+_EXTRACTORS = {False: ref.extract_fields_fast, True: ref.extract_fields_entry_c}
+_FIELDS_UDFS = {entry_c: _fields_udf(x) for entry_c, x in _EXTRACTORS.items()}
+_FUSED_KERNELS = {
+    entry_c: _make_fused_kernel(x) for entry_c, x in _EXTRACTORS.items()
+}
+fused_extract_kernel = _FUSED_KERNELS[False]
 
 
 def fused_extract(df: DataFrame, entry_c: bool = False) -> DataFrame:
     """pages(url, html, text, ...) → (url, extracted_text, fields..., status,
     error) via the fused single-pass kernel. entry_c=True swaps in the
-    entry-C compatibility extractor (tax-box y0 quirk + extended currency
-    set, SURVEY §8.4-8.5) — the default stays on the authoritative path."""
-    kernel = (
-        _make_fused_kernel(ref.extract_fields_entry_c)
-        if entry_c
-        else fused_extract_kernel
-    )
+    entry-C compatibility extractor — the default stays on the
+    authoritative path."""
     return df.select("url", "html", "text").mapInArrow(
-        kernel, schema=_OUT_SPARK_SCHEMA
+        _FUSED_KERNELS[bool(entry_c)], schema=RESULT
     )
-
-
-def normalize_words_udf_factory():
-    """Pure-Python normalization kernel (O4) as a pandas UDF — used only for
-    cross-checking the native `functions.boxes.normalize_words_col` path."""
-    from ..schemas import WORD
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    schema = ArrayType(WORD)
-
-    @pandas_udf(schema)
-    def _norm(words: pd.Series, width: pd.Series, height: pd.Series) -> pd.Series:
-        out = []
-        for w, wd, ht in zip(words, width, height):
-            normed = ref.normalize_words(_to_tuples(w), int(wd), int(ht))
-            out.append(
-                [
-                    {
-                        "text": t,
-                        "x0": x0,
-                        "y0": y0,
-                        "x1": x1,
-                        "y1": y1,
-                        "confidence": c,
-                    }
-                    for (t, x0, y0, x1, y1, c) in normed
-                ]
-            )
-        return pd.Series(out)
-
-    return _norm
 
 
 def attach_extraction(df: DataFrame, words_col: str = "words",
                       entry_c: bool = False) -> DataFrame:
     """Append extraction output columns to a DataFrame with an array<WORD>
     column. One shuffle-free projection stage. ``entry_c=True`` routes
-    through the entry-C kernel twin, mirroring fused_extract's option."""
-    udf = extract_fields_entry_c_udf if entry_c else extract_fields_udf
-    out = df.withColumn("_ex", udf(F.col(words_col)))
-    for name in ("extracted_text", *SCALAR_FIELDS, "line_items", "status", "error"):
+    through the entry-C extractor, mirroring fused_extract's option."""
+    out = df.withColumn("_ex", _FIELDS_UDFS[bool(entry_c)](F.col(words_col)))
+    for name in EXTRACT_STRUCT.names:
         out = out.withColumn(name, F.col(f"_ex.{name}"))
     return out.drop("_ex")
 

@@ -13,6 +13,10 @@ A deterministic, dependency-free tokenizer built on the stdlib HTMLParser:
    giving downstream geometry heuristics the same input shape the
    reference's OCR produces (ocr_engine.py:145-149).
 
+``page_tuples`` is the one routing rule of a pages row (HTML, PDF
+payloads, pre-extracted text); the fused kernel (operators/extract.py) and
+``parse_words_udf`` both call it.
+
 Vectorization: one pandas UDF over the binary html column — per-document
 pure Python inside an Arrow batch, no per-row Spark dispatch (BASELINE.json
 input_hint: "no per-row Python").
@@ -30,6 +34,7 @@ from pyspark.sql.types import ArrayType
 
 from ..layout import layout_words
 from ..schemas import WORD
+from ..sources.pdf import pdf_tuples
 
 BLOCK_TAGS = frozenset(
     "p div li h1 h2 h3 h4 h5 h6 td th tr table ul ol main article section "
@@ -247,60 +252,49 @@ def html_tuples(html: bytes | str) -> list[tuple]:
     return layout_words(extract_content_lines(html))
 
 
-def text_tuples(text: str) -> list[tuple]:
+def text_tuples(text: str | None) -> list[tuple]:
+    """Pre-extracted text → word tuples (one line; the layout model supplies
+    geometry); [] for NULL or empty text."""
     if not text:
         return []
     return layout_words([text])
 
 
+def page_tuples(html: bytes | str | None, text: str | None) -> list[tuple]:
+    """The one content-routing rule for a pages row, shared by the fused
+    kernel and parse_words_udf. A Common-Crawl-style pages table carries PDF
+    responses in the same binary html column as HTML: a payload that starts
+    with the PDF magic goes to the PDF text-layer parser (sources/pdf.py),
+    other html to the HTML scanner, and a row without html to its
+    pre-extracted text. (No legal HTML document starts with the PDF magic,
+    so the HTML byte-identity contract is untouched.)"""
+    if html is None:
+        return text_tuples(text)
+    if isinstance(html, (bytes, bytearray, memoryview)) and bytes(html[:5]) == b"%PDF-":
+        return pdf_tuples(html)
+    return html_tuples(html)
+
+
+def _word_dicts(tuples: list[tuple]) -> list[dict]:
+    return [
+        {"text": t, "x0": x0, "y0": y0, "x1": x1, "y1": y1, "confidence": c}
+        for (t, x0, y0, x1, y1, c) in tuples
+    ]
+
+
 def html_to_words(html: bytes | str) -> list[dict]:
     """HTML → word dicts with deterministic layout-model boxes."""
-    return [
-        {"text": t, "x0": x0, "y0": y0, "x1": x1, "y1": y1, "confidence": c}
-        for (t, x0, y0, x1, y1, c) in layout_words(extract_content_lines(html))
-    ]
-
-
-def text_to_words(text: str) -> list[dict]:
-    """Pre-extracted text → words (one line; layout model supplies geometry)."""
-    if not text:
-        return []
-    return [
-        {"text": t, "x0": x0, "y0": y0, "x1": x1, "y1": y1, "confidence": c}
-        for (t, x0, y0, x1, y1, c) in layout_words([text])
-    ]
+    return _word_dicts(html_tuples(html))
 
 
 @pandas_udf(ArrayType(WORD))
 def parse_words_udf(html: pd.Series, text: pd.Series) -> pd.Series:
-    """Batched stage-1 kernel: html bytes (or pre-extracted text when html is
-    null) → array<WORD>. Content-sniffs ``%PDF-`` payloads exactly like the
-    fused kernel (operators/extract.py) so the modular two-stage path — the
-    model pipeline, the phase CLI, the debug sink — extracts mixed HTML+PDF
-    crawls identically."""
-    from ..sources.pdf import pdf_tuples
-
-    out = []
-    for h, t in zip(html, text):
-        if h is not None:
-            if (
-                isinstance(h, (bytes, bytearray, memoryview))
-                and bytes(h[:5]) == b"%PDF-"
-            ):
-                out.append(
-                    [
-                        {"text": w, "x0": x0, "y0": y0, "x1": x1, "y1": y1,
-                         "confidence": c}
-                        for (w, x0, y0, x1, y1, c) in pdf_tuples(h)
-                    ]
-                )
-            else:
-                out.append(html_to_words(h))
-        elif t is not None:
-            out.append(text_to_words(t))
-        else:
-            out.append([])
-    return pd.Series(out)
+    """Batched stage-1 kernel: a pages row (html bytes, or pre-extracted
+    text when html is null) → array<WORD>, routed by page_tuples exactly
+    like the fused kernel (operators/extract.py), so the modular two-stage
+    path — the model pipeline, the phase CLI, the debug sink — extracts
+    mixed HTML+PDF crawls identically."""
+    return pd.Series([_word_dicts(page_tuples(h, t)) for h, t in zip(html, text)])
 
 
 def parse_pages(pages: DataFrame, html_col: str = "html", text_col: str = "text") -> DataFrame:

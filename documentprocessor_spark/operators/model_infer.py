@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 
 from .. import reference_semantics as ref
 from ..schemas import BOX, FIELD, SCALAR_FIELDS
+from .extract import _to_tuples
 
 MAX_TOKENS = 512  # layoutlmv3.py:201 truncation
 
@@ -196,16 +197,6 @@ MERGED = StructType(
 )
 
 
-def _words_to_tuples(ws):
-    if ws is None:
-        return []
-    return [
-        (w["text"], int(w["x0"]), int(w["y0"]), int(w["x1"]), int(w["y1"]),
-         float(w["confidence"]))
-        for w in ws
-    ]
-
-
 @pandas_udf(MERGED)
 def entity_merge_udf(
     words: pd.Series, pred_ids: pd.Series, confidences: pd.Series
@@ -214,7 +205,7 @@ def entity_merge_udf(
     field assembly with heuristic vendor/total backfill."""
     rows = []
     for ws, pids, confs in zip(words, pred_ids, confidences):
-        tuples = _words_to_tuples(ws)
+        tuples = _to_tuples(ws)
         tokens = [t[0] for t in tuples]
         boxes = [[t[1], t[2], t[3], t[4]] for t in tuples]
         entities = ref.extract_entities(

@@ -47,30 +47,14 @@ def lang_id_col(text: Column) -> Column:
     """Argmax of stopword hit-counts over en/de/fr inventories; 'und'
     (undetermined) when no list scores a hit. Deterministic tie-break:
     en > de > fr (fixed comparison order)."""
-    toks = tokens_col(text)
-    en = _stopword_hits(toks, EN_STOPWORDS)
-    de = _stopword_hits(toks, DE_STOPWORDS)
-    fr = _stopword_hits(toks, FR_STOPWORDS)
-    return (
-        F.when((en >= de) & (en >= fr) & (en > 0), F.lit("en"))
-        .when((de >= fr) & (de > 0), F.lit("de"))
-        .when(fr > 0, F.lit("fr"))
-        .otherwise(F.lit("und"))
-    )
+    return _lang_id_from_tokens(tokens_col(text))
 
 
 def quality_score_col(text: Column) -> Column:
     """Deterministic [0,1] quality score: mix of alphabetic-character ratio
     and stopword ratio (training-data pipelines drop low scorers). Rounded to
     6 dp so float comparison with the oracle is exact."""
-    toks = tokens_col(text)
-    n_tok = F.size(toks).cast("double")
-    alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", "")).cast("double")
-    total = F.greatest(F.length(text).cast("double"), F.lit(1.0))
-    stop_ratio = _stopword_hits(toks, EN_STOPWORDS).cast("double") / F.greatest(
-        n_tok, F.lit(1.0)
-    )
-    return F.round(0.5 * (alpha / total) + 0.5 * stop_ratio, 6)
+    return _quality_from_tokens(text, tokens_col(text))
 
 
 def fingerprint_col(text: Column) -> Column:

@@ -49,6 +49,39 @@ def release_survivors_cache() -> None:
             pass
 
 
+def _filtered_exact(
+    docs: DataFrame, id_col: str, text_col: str, lang: str, min_quality: float
+) -> DataFrame:
+    """Score, filter on lang/quality, then keep the minimal id per content
+    hash: the (doc_id, text, lang_id, quality_score) rows both curation
+    forms run near-dup dropping over.
+
+    Exact dedup is the survivors form (groupBy winners + semi-join on the
+    unique id) rather than a window over the content hash: a
+    mass-duplicated page gives the window's hot partition 30% of the corpus
+    with no map-side combine, while the groupBy collapses it to one row per
+    input partition and the text column never shuffles
+    (operators/dedup.exact_dedup_survivors)."""
+    base = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.col(text_col).alias("text"),
+        lang_id_col(F.col(text_col)).alias("lang_id"),
+        quality_score_col(F.col(text_col)).alias("quality_score"),
+    )
+    filtered = base.where(
+        (F.col("lang_id") == lang) & (F.col("quality_score") >= min_quality)
+    )
+    return dedup.exact_dedup_survivors(filtered, "doc_id", "text")
+
+
+def _cluster_losers(clusters: DataFrame) -> DataFrame:
+    """Every doc of a connected component except its canonical (minimum)
+    id — the transitive mode's drop set."""
+    return clusters.where(F.col("doc_id") != F.col("canonical_id")).select(
+        "doc_id"
+    )
+
+
 def curate_documents(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -85,23 +118,7 @@ def curate_documents(
     and count eagerly); set session confs before calling, not between
     construction and action.
     """
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        lang_id_col(F.col(text_col)).alias("lang_id"),
-        quality_score_col(F.col(text_col)).alias("quality_score"),
-    )
-    filtered = base.where(
-        (F.col("lang_id") == lang) & (F.col("quality_score") >= min_quality)
-    )
-
-    # exact dedup: keep the minimal id per content hash. The survivors form
-    # (groupBy winners + semi-join on the unique id) rather than a window
-    # over the content hash: a mass-duplicated page gives the window's hot
-    # partition 30% of the corpus with no map-side combine, while the
-    # groupBy collapses it to one row per input partition and the text
-    # column never shuffles (operators/dedup.exact_dedup_survivors).
-    exact = dedup.exact_dedup_survivors(filtered, "doc_id", "text")
+    exact = _filtered_exact(docs, id_col, text_col, lang, min_quality)
 
     # near-dup drop: any doc sharing a MinHash band with a lower id is
     # dropped. STAR edges, not the pair clique — identical losers and
@@ -113,11 +130,7 @@ def curate_documents(
     if transitive:
         from ..operators.graph import dedup_clusters
 
-        losers = (
-            dedup_clusters(pairs)
-            .where(F.col("doc_id") != F.col("canonical_id"))
-            .select("doc_id")
-        )
+        losers = _cluster_losers(dedup_clusters(pairs))
     else:
         losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     survivors = exact.join(losers, "doc_id", "left_anti")
@@ -230,16 +243,7 @@ def curate_documents_checkpointed(
     })
 
     if not _stage_done(spark, exact_path):
-        base = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("text"),
-            lang_id_col(F.col(text_col)).alias("lang_id"),
-            quality_score_col(F.col(text_col)).alias("quality_score"),
-        ).where(
-            (lang_id_col(F.col(text_col)) == lang)
-            & (quality_score_col(F.col(text_col)) >= min_quality)
-        )
-        dedup.exact_dedup_survivors(base, "doc_id", "text").write.mode(
+        _filtered_exact(docs, id_col, text_col, lang, min_quality).write.mode(
             "overwrite"
         ).parquet(exact_path)
     exact = spark.read.parquet(exact_path)
@@ -259,10 +263,7 @@ def curate_documents_checkpointed(
         dedup_clusters(pairs).write.mode("overwrite").parquet(clusters_path)
     clusters = spark.read.parquet(clusters_path)
 
-    losers = clusters.where(F.col("doc_id") != F.col("canonical_id")).select(
-        "doc_id"
-    )
     return (
-        exact.join(losers, "doc_id", "left_anti")
+        exact.join(_cluster_losers(clusters), "doc_id", "left_anti")
         .select("doc_id", "lang_id", "quality_score")
     )

@@ -141,7 +141,7 @@ def confidence_filter(results: DataFrame, min_confidence: float = 0.5) -> DataFr
 
 def parse_stage(pages: DataFrame) -> DataFrame:
     """Phase 1 (the reference `ocr` command analog): pages → (url, words).
-    Content-sniffs %PDF- payloads like the fused kernel."""
+    Rows route through ``html_parse.page_tuples``, as in the fused kernel."""
     from ..operators.html_parse import parse_pages
 
     return parse_pages(pages.select("url", "html", "text")).select("url", "words")

@@ -20,7 +20,6 @@ from pyspark.sql.types import (
     BinaryType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -126,29 +125,5 @@ RESULT = StructType(
         StructField("line_items", ArrayType(LINE_ITEM), True),
         StructField("status", StringType(), False),
         StructField("error", StringType(), True),
-    ]
-)
-
-# Long-form spans sink: one row per (url, field).
-SPAN = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("field", StringType(), False),
-        StructField("value", StringType(), True),
-        StructField("confidence", DoubleType(), True),
-        StructField("box", BOX, True),
-    ]
-)
-
-# Per-partition lineage/metrics manifest (resume + observability).
-MANIFEST = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("url_bucket", IntegerType(), True),
-        StructField("rows", LongType(), False),
-        StructField("bytes_in", LongType(), True),
-        StructField("ms", DoubleType(), True),
-        StructField("status", StringType(), False),
     ]
 )

@@ -163,3 +163,21 @@ def test_result_row_shape_matches_reference_contract(spark):
     li = payload["line_items"][0]
     assert set(li) == {"description", "quantity", "unit_price", "line_total",
                        "box", "confidence"}
+
+
+def test_profile_kernel_tool_runs(tmp_path):
+    """tools/profile_kernel.py drives the fused kernel through private
+    names (_PA_OUT, _extract_one_from_tuples): a kernel refactor that
+    breaks them fails here. Pure Python, no Spark."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "profile_kernel.py"), "50"],
+        cwd=str(tmp_path), capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "n=50" in proc.stdout
+    assert "fused kernel e2e:" in proc.stdout

@@ -9,6 +9,8 @@ from documentprocessor_spark.layout import layout_words
 from documentprocessor_spark.operators.html_parse import (
     extract_content_lines,
     html_to_words,
+    html_tuples,
+    page_tuples,
 )
 from documentprocessor_spark.plans.pipeline import extract_from_pages, run_job
 from documentprocessor_spark.schemas import PAGES
@@ -63,6 +65,24 @@ def test_fast_scanner_equals_htmlparser_reference():
         assert extract_content_lines(html, "fast") == extract_content_lines(
             html, "parser"
         ), html[:80]
+
+
+def test_page_tuples_routes_each_row_kind():
+    """page_tuples is the one content-routing rule of a pages row: PDF
+    payloads, html bytes, html str, NULL html with text, all-NULL."""
+    from documentprocessor_spark.sources.pdf import pdf_tuples, write_pdf
+
+    pdf = bytes(write_pdf("invoice 7 total 7.99 alpha beta"))
+    html = render_html(RECEIPT_LINES)
+    assert page_tuples(pdf, None) == pdf_tuples(pdf)
+    assert [w[0] for w in page_tuples(pdf, "ignored")] == [
+        "invoice", "7", "total", "7.99", "alpha", "beta"]
+    assert page_tuples(html, None) == layout_words(
+        [l for l in RECEIPT_LINES if l.strip()])
+    assert page_tuples(html.decode(), "ignored") == html_tuples(html)
+    assert page_tuples(None, "Total 12.50 USD") == layout_words(["Total 12.50 USD"])
+    assert page_tuples(None, "") == []
+    assert page_tuples(None, None) == []
 
 
 @pytest.fixture(scope="module")
@@ -360,3 +380,43 @@ def test_compact_results_recovers_from_interrupted_swap(spark, tmp_path):
     assert stats["rows"] == 12
     assert spark.read.parquet(path).count() == 12
     assert not os.path.exists(path + ".compact.bak")
+
+
+def test_words_path_equals_fused_kernel_on_rows_without_html(spark):
+    """parse_words_udf and the fused kernel route a row without html the
+    same way: its text through the layout model, NULL or empty text to no
+    words, with identical fields on both paths."""
+    from datetime import datetime
+
+    from documentprocessor_spark.operators.extract import (
+        attach_extraction,
+        fused_extract,
+    )
+    from documentprocessor_spark.operators.html_parse import parse_pages
+    from documentprocessor_spark.schemas import RESULT
+
+    ts = datetime(2021, 1, 15, 12, 0, 0)
+    text = "ACME MARKET Total 12.50 USD thanks"
+    pages = spark.createDataFrame(
+        [("t://text", ts, None, text, None),
+         ("t://empty", ts, None, "", None),
+         ("t://null", ts, None, None, None)],
+        schema=PAGES,
+    )
+    words = parse_pages(pages.select("url", "html", "text"))
+    got_words = {
+        r.url: [tuple(w) for w in r.words]
+        for r in words.select("url", "words").collect()
+    }
+    assert got_words == {
+        "t://text": layout_words([text]), "t://empty": [], "t://null": []}
+
+    cols = RESULT.names
+    chained = {
+        r.url: r for r in attach_extraction(words).select(*cols).collect()}
+    fused = {r.url: r for r in fused_extract(pages).select(*cols).collect()}
+    assert chained == fused
+    assert chained["t://text"].extracted_text == text
+    for url in ("t://empty", "t://null"):
+        assert chained[url].extracted_text == ""
+        assert chained[url].status == "done"

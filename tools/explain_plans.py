@@ -1,13 +1,24 @@
-"""Generate PLANS.md: formatted physical plans for the engine's key jobs,
-with the properties that matter at 100 TB called out. Run:
-    python tools/explain_plans.py
+"""Physical plans of the engine's key jobs.
+
+    python tools/explain_plans.py                  # regenerate PLANS.md
+    python tools/explain_plans.py TAG [query ...]  # plans/TAG/<query>.txt
+
+The first form writes PLANS.md: each COMMENTARY query's formatted plan,
+filtered to the properties that matter at 100 TB, under its note. The
+second writes each query's full ``explain("formatted")`` output to its own
+file, for before/after plan deltas (default queries: ``bench.HEADLINE``
+plus ``extract_html_corpus``). Both read the tables under SF.
 """
 
 from __future__ import annotations
 
+import io
+import os
 import sys
+from contextlib import redirect_stdout
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from documentprocessor_spark.queries import QUERIES
 from documentprocessor_spark.session import get_spark
@@ -267,9 +278,28 @@ def fmt_plan(df) -> str:
     return "\n".join(keep)
 
 
-def main() -> None:
-    spark = get_spark(master="local[4]", shuffle_partitions=4)
-    spark.sparkContext.setLogLevel("ERROR")
+def capture(spark, tag: str, names: list[str]) -> None:
+    from documentprocessor_spark.plans.pipeline import extract_from_pages
+    from documentprocessor_spark.sources.synthetic import distributed_corpus
+
+    outdir = os.path.join(ROOT, "plans", tag)
+    os.makedirs(outdir, exist_ok=True)
+    for name in names:
+        if name == "extract_html_corpus":  # bench.py's extraction leaf
+            df = extract_from_pages(distributed_corpus(spark, 8000, n_partitions=8))
+        else:
+            df = QUERIES[name](spark, SF)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(outdir, f"{name}.txt")
+        with open(path, "w") as fh:
+            fh.write(buf.getvalue())
+        print("wrote", path, file=sys.stderr)
+        spark.catalog.clearCache()
+
+
+def write_plans_md(spark) -> None:
     out = [
         "# PLANS — physical plans of the headline jobs (generated by "
         "tools/explain_plans.py)",
@@ -283,10 +313,22 @@ def main() -> None:
     for name, note in COMMENTARY.items():
         df = QUERIES[name](spark, SF)
         out.append(f"## {name}\n\n{note}\n\n```\n{fmt_plan(df)}\n```\n")
-    with open("PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
-    spark.stop()
     print("wrote PLANS.md")
+
+
+def main() -> None:
+    spark = get_spark(master="local[4]", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    if len(sys.argv) > 1:
+        from bench import HEADLINE
+
+        names = sys.argv[2:] or [*HEADLINE, "extract_html_corpus"]
+        capture(spark, sys.argv[1], names)
+    else:
+        write_plans_md(spark)
+    spark.stop()
 
 
 if __name__ == "__main__":
