@@ -2,7 +2,8 @@
 
 Per headline query: construction time (plan build, incl. any driver-side
 work in the query function) vs execution time (noop sink, guide §1.4),
-and best-of-N timings. bench.py stays frozen; this file exists so
+best-of-N timings, and the Janino compiles over the timed reps
+(``codegen_compiles``). bench.py stays frozen; this file exists so
 optimization work can iterate on isolated numbers and cite them in
 OPTIMIZATION_r06.md.
 
@@ -38,6 +39,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
+    # Janino compiles in this JVM; counted over the timed reps, a non-zero
+    # figure means the leaf rebuilds generated classes on every run
+    compiles = (sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
 
     out = {}
     for name in names:
@@ -46,6 +51,8 @@ def main() -> None:
         samples = []
         build_s = exec_s = None
         for i in range(REPS + 1):  # first rep is warm
+            if i == 1:
+                compiles_before = compiles.getCount()
             t0 = time.monotonic()
             df = fn(spark, SF_DIR)
             t1 = time.monotonic()
@@ -61,9 +68,11 @@ def main() -> None:
             "samples": samples,
             "last_build_s": build_s,
             "last_exec_s": exec_s,
+            "codegen_compiles": compiles.getCount() - compiles_before,
         }
         print(f"{name}: best={min(samples)} samples={samples} "
-              f"build={build_s} exec={exec_s}", file=sys.stderr)
+              f"build={build_s} exec={exec_s} "
+              f"compiles={out[name]['codegen_compiles']}", file=sys.stderr)
     print(json.dumps(out))
     spark.stop()
 

@@ -13,3 +13,11 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def codegen_compiles(spark):
+    """Janino compiles so far in this JVM (Spark's CodegenMetrics counter).
+    Read it around a run to count the classes that run had to compile."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()

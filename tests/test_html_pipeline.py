@@ -217,6 +217,44 @@ def test_run_job_resume_skips_committed(spark, corpus_pages, tmp_path):
     ).count() == 0
 
 
+def test_run_job_rerun_compiles_no_new_classes(
+        spark, corpus_pages, tmp_path, codegen_compiles):
+    """A second run_job into a fresh output dir reuses the first run's
+    generated classes: nothing run-specific (elapsed time, counters) is a
+    literal in its plans."""
+    run_job(spark, corpus_pages, str(tmp_path / "first"), n_buckets=4)
+    before = codegen_compiles()
+    run_job(spark, corpus_pages, str(tmp_path / "second"), n_buckets=4)
+    assert codegen_compiles() - before == 0
+
+
+def test_resume_reads_manifest_files_of_the_older_layout(
+        spark, corpus_pages, tmp_path):
+    """Manifest files written before the manifest lost its partition_id,
+    ms and status columns still acknowledge their runs: resume and
+    read_committed_results read only run_id and rows."""
+    import shutil
+
+    from documentprocessor_spark.plans.pipeline import read_committed_results
+
+    out = str(tmp_path / "job")
+    run_job(spark, corpus_pages.limit(30), out, n_buckets=4)
+    old = spark.createDataFrame(
+        [(r.run_id, r.url_bucket, r.url_bucket, r.rows, r.bytes_in, 812.5,
+          "committed")
+         for r in spark.read.parquet(f"{out}/manifest").collect()],
+        "run_id string, partition_id int, url_bucket int, rows long, "
+        "bytes_in long, ms double, status string",
+    )
+    shutil.rmtree(f"{out}/manifest")
+    old.write.parquet(f"{out}/manifest")
+
+    stats = run_job(spark, corpus_pages, out, n_buckets=4)
+    assert stats["rows_skipped_resume"] == 30
+    assert stats["rows_total_committed"] == corpus_pages.count()
+    assert read_committed_results(spark, out).count() == corpus_pages.count()
+
+
 def test_resume_run_rescues_under_split_source(spark, corpus_pages, tmp_path):
     """A resume run (a committed earlier run in the output dir) over a
     single-row-group pages file still runs the kernel at >=
