@@ -47,9 +47,13 @@ silent miss would silently drop their windows): the position power is
 guarded by ``pos < maxlen``; the prefix-sum int64 bound holds to 2**22
 tokens, so maxlen above that is rejected at plan-build time.
 
-The DuckDB oracle twin is generated by :func:`rolling_oracle_ctes` (the
-powers table becomes a recursive CTE), and :func:`py_window_hashes` is
-the pure-Python fuzz twin.
+The arithmetic (modmul, window difference, pack) and the 60-bit token
+key each have ONE spelling as SQL text (:func:`modmul_sql`,
+:func:`window_diff_sql`, :func:`pack_sql`, :func:`h60_sql`), which the
+Spark side evaluates through F.expr and the DuckDB oracle twin
+:func:`rolling_oracle_ctes` embeds (its powers table becomes a recursive
+CTE). :func:`py_window_hashes` is the pure-Python fuzz twin, written with
+plain modular products.
 """
 
 from __future__ import annotations
@@ -69,24 +73,46 @@ ROLL_B1 = 1000003
 ROLL_M1 = (1 << 40) - 87        # 1099511627689, prime
 ROLL_B2 = 100019
 ROLL_M2 = 999999999989          # prime
-_SPLIT = 1 << 20                # modmul split: b = b_hi * 2**20 + b_lo
+_SPLIT_BITS = 20                # modmul split: b = b_hi * 2**20 + b_lo
+_SPLIT = 1 << _SPLIT_BITS
 _PACK_HI = 1 << 22              # win_hash = H1 * 2**22 + H2 // 2**18
-_PACK_LO = 1 << 18
+_PACK_LO_BITS = 18
 DEFAULT_MAXLEN = 1 << 16        # 65536 tokens/doc; hard int64 bound 2**22
 
 
-def _modmul(a: Column, b: Column, m: int) -> Column:
-    """(a * b) mod m for a, b < m < 2**41 without leaving int64:
-    split b into 20-bit halves; every intermediate < 2**62."""
-    b_hi = (b / F.lit(_SPLIT)).cast("long")   # exact: b >= 0
-    return ((a * b_hi) % m * _SPLIT + a * (b % _SPLIT)) % m
-
-
-def _h60(col: Column) -> Column:
-    # the same 15-hex-chars-of-md5 contract as operators/dedup._h60
-    # (duplicated literally rather than imported: functions/ must not
-    # depend on operators/)
+def h60(col: Column) -> Column:
+    """The ONE portable 60-bit string key, Spark side: the first 15 hex
+    chars of md5 as a bigint. The 15-char width is a cross-engine CONTRACT
+    shared with :func:`h60_sql` — change both together or neither. Every
+    md5-keyed operator (dedup, sketch, this module) calls it."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def h60_sql(expr: str) -> str:
+    """The same 60-bit key as DuckDB SQL text over the string ``expr``:
+    every oracle embeds this, never a hand-spelled md5 prefix."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::bigint"
+
+
+def modmul_sql(a: str, b: str, m: int) -> str:
+    """(a * b) mod m for 0 <= a, b < m < 2**41 without leaving int64, as
+    SQL text Spark (F.expr) and DuckDB evaluate alike: b splits into
+    20-bit halves, every intermediate stays < 2**62."""
+    return (f"(((({a}) * (({b}) >> {_SPLIT_BITS})) % {m}) * {_SPLIT}"
+            f" + ({a}) * (({b}) % {_SPLIT})) % {m}")
+
+
+def window_diff_sql(end: str, cum: str, first: str, m: int) -> str:
+    """(S[i+k-1] - S[i-1]) mod M: the window's position-shifted hash from
+    its end prefix sum ``end`` and the start row's sum ``cum`` and term
+    ``first`` (S[i-1] = S[i] - a[i])."""
+    return f"(({end}) - (({cum}) - ({first}))) % {m}"
+
+
+def pack_sql(h1: str, h2: str) -> str:
+    """win_hash = H1 * 2**22 + H2 div 2**18 — both hash pairs in one
+    bigint join key."""
+    return f"({h1}) * {_PACK_HI} + (({h2}) >> {_PACK_LO_BITS})"
 
 
 _LO_BITS = 11                   # B**e = B**(hi * 2**11) * B**lo
@@ -158,8 +184,8 @@ def _with_powers(
               F.col("_e").bitwiseAND(_LO_ROWS - 1) == F.col("_lo"), "left")
         .select(
             *df.columns,
-            _modmul(F.col("_h1"), F.col("_l1"), ROLL_M1).alias(p1),
-            _modmul(F.col("_h2"), F.col("_l2"), ROLL_M2).alias(p2),
+            F.expr(modmul_sql("_h1", "_l1", ROLL_M1)).alias(p1),
+            F.expr(modmul_sql("_h2", "_l2", ROLL_M2)).alias(p2),
         )
     )
 
@@ -215,24 +241,22 @@ def rolling_window_hashes(
         "doc_id",
         F.posexplode(F.split(F.col("_t"), " ")).alias("pos", "t"),
     )
-    h = tok.select("doc_id", "pos", _h60(F.col("t")).alias("h"))
+    h = tok.select("doc_id", "pos", h60(F.col("t")).alias("h"))
     j = _with_powers(h, F.col("pos"), tables, "pw1", "pw2")
     # fail fast on docs longer than maxlen: a doc of maxlen tokens has max
     # pos maxlen-1, so a doc of exactly maxlen+1 tokens raises — the same
     # boundary py_window_hashes draws. coalesce only evaluates raise_error
     # on the guarded miss.
-    pw1 = F.coalesce(
-        F.when(F.col("pos") < maxlen, F.col("pw1")),
-        F.expr(
-            f"cast(raise_error('document exceeds rolling-hash maxlen "
-            f"{maxlen} tokens') as bigint)"
-        ),
+    pw1 = (
+        f"coalesce(case when pos < {maxlen} then pw1 end, "
+        f"cast(raise_error('document exceeds rolling-hash maxlen "
+        f"{maxlen} tokens') as bigint))"
     )
     base = j.select(
         "doc_id",
         "pos",
-        _modmul(F.col("h") % ROLL_M1, pw1, ROLL_M1).alias("a1"),
-        _modmul(F.col("h") % ROLL_M2, F.col("pw2"), ROLL_M2).alias("a2"),
+        F.expr(modmul_sql(f"h % {ROLL_M1}", pw1, ROLL_M1)).alias("a1"),
+        F.expr(modmul_sql(f"h % {ROLL_M2}", "pw2", ROLL_M2)).alias("a2"),
     )
     wdoc = Window.partitionBy("doc_id").orderBy("pos")
     cum = wdoc.rowsBetween(Window.unboundedPreceding, 0)
@@ -248,8 +272,8 @@ def rolling_window_hashes(
     hh = sums.where(F.col("e1").isNotNull()).select(
         "doc_id",
         "pos",
-        ((F.col("e1") - (F.col("s1") - F.col("a1"))) % ROLL_M1).alias("d1"),
-        ((F.col("e2") - (F.col("s2") - F.col("a2"))) % ROLL_M2).alias("d2"),
+        F.expr(window_diff_sql("e1", "s1", "a1", ROLL_M1)).alias("d1"),
+        F.expr(window_diff_sql("e2", "s2", "a2", ROLL_M2)).alias("d2"),
     )
     # complement powers pc(pos) = B**(maxlen - pos) mod M; pos < maxlen
     # here, so the exponent is in [1, maxlen] and always found
@@ -258,11 +282,8 @@ def rolling_window_hashes(
     ).select(
         "doc_id",
         "pos",
-        (
-            _modmul(F.col("d1"), F.col("pc1"), ROLL_M1) * _PACK_HI
-            + (_modmul(F.col("d2"), F.col("pc2"), ROLL_M2) / F.lit(_PACK_LO))
-            .cast("long")
-        ).alias("win_hash"),
+        F.expr(pack_sql(modmul_sql("d1", "pc1", ROLL_M1),
+                        modmul_sql("d2", "pc2", ROLL_M2))).alias("win_hash"),
     )
 
 
@@ -274,10 +295,11 @@ def rolling_oracle_ctes(
 ) -> str:
     """The DuckDB twin as a CTE chain — paste after a CTE named
     ``docs_cte`` with columns (doc_id, text); exposes ``out_cte``
-    (doc_id, pos, win_hash). Arithmetic is the literal mirror of
-    rolling_window_hashes (same constants, same 20-bit split modmul,
-    same exact-int64 prefix sums)."""
-    b1, m1, b2, m2, sp = ROLL_B1, ROLL_M1, ROLL_B2, ROLL_M2, _SPLIT
+    (doc_id, pos, win_hash). The key, modmul, window-difference and pack
+    arithmetic are the same SQL text rolling_window_hashes evaluates (same
+    constants, same exact-int64 prefix sums); only the powers come from a
+    recursive CTE walking B**e directly."""
+    b1, m1, b2, m2 = ROLL_B1, ROLL_M1, ROLL_B2, ROLL_M2
     return f"""
     roll_p(e, pw1, pw2) as (
         select 0, 1::bigint, 1::bigint
@@ -292,20 +314,14 @@ def rolling_oracle_ctes(
              lateral unnest(range(len(toks))) u(i)
     ),
     roll_th as (
-        select doc_id, pos,
-            ('0x' || substr(md5(t), 1, 15))::bigint as h
+        select doc_id, pos, {h60_sql("t")} as h
         from roll_tok
     ),
-    roll_base as (
-        select doc_id, pos,
-            ((h % {m1}) * (pw1 // {sp})) % {m1} * {sp}
-                + (h % {m1}) * (pw1 % {sp}) as _r1,
-            ((h % {m2}) * (pw2 // {sp})) % {m2} * {sp}
-                + (h % {m2}) * (pw2 % {sp}) as _r2
-        from roll_th join roll_p on roll_p.e = roll_th.pos
-    ),
     roll_a as (
-        select doc_id, pos, _r1 % {m1} as a1, _r2 % {m2} as a2 from roll_base
+        select doc_id, pos,
+            {modmul_sql(f"h % {m1}", "pw1", m1)} as a1,
+            {modmul_sql(f"h % {m2}", "pw2", m2)} as a2
+        from roll_th join roll_p on roll_p.e = roll_th.pos
     ),
     roll_cum as (
         select doc_id, pos, a1, a2,
@@ -323,16 +339,14 @@ def rolling_oracle_ctes(
     ),
     roll_d as (
         select doc_id, pos,
-            (e1 - (s1 - a1)) % {m1} as d1,
-            (e2 - (s2 - a2)) % {m2} as d2
+            {window_diff_sql("e1", "s1", "a1", m1)} as d1,
+            {window_diff_sql("e2", "s2", "a2", m2)} as d2
         from roll_lead where e1 is not null
     ),
     {out_cte} as (
         select roll_d.doc_id, roll_d.pos,
-            ((d1 * (pw1 // {sp})) % {m1} * {sp} + d1 * (pw1 % {sp})) % {m1}
-                * {_PACK_HI}
-            + (((d2 * (pw2 // {sp})) % {m2} * {sp} + d2 * (pw2 % {sp}))
-                % {m2}) // {_PACK_LO} as win_hash
+            {pack_sql(modmul_sql("d1", "pw1", m1), modmul_sql("d2", "pw2", m2))}
+                as win_hash
         from roll_d
         join roll_p on roll_p.e = {maxlen} - roll_d.pos
     )"""
@@ -352,12 +366,12 @@ def py_window_hashes(
         pw1[e] = pw1[e - 1] * ROLL_B1 % ROLL_M1
         pw2[e] = pw2[e - 1] * ROLL_B2 % ROLL_M2
 
-    def mm(a: int, b: int, m: int) -> int:
-        return ((a * (b >> 20)) % m * _SPLIT + a * (b % _SPLIT)) % m
-
+    # plain modular products (Python ints never overflow): the twin checks
+    # the engines' 20-bit-split modmul_sql against the arithmetic it stands
+    # for, not against a copy of itself
     th = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in tokens]
-    a1 = [mm(th[i] % ROLL_M1, pw1[i], ROLL_M1) for i in range(n)]
-    a2 = [mm(th[i] % ROLL_M2, pw2[i], ROLL_M2) for i in range(n)]
+    a1 = [th[i] % ROLL_M1 * pw1[i] % ROLL_M1 for i in range(n)]
+    a2 = [th[i] % ROLL_M2 * pw2[i] % ROLL_M2 for i in range(n)]
     s1 = [0] * n
     s2 = [0] * n
     for i in range(n):
@@ -369,7 +383,7 @@ def py_window_hashes(
         d2 = (s2[i + k - 1] - (s2[i - 1] if i else 0)) % ROLL_M2
         out.append((
             i,
-            mm(d1, pw1[maxlen - i], ROLL_M1) * _PACK_HI
-            + (mm(d2, pw2[maxlen - i], ROLL_M2) >> 18),
+            d1 * pw1[maxlen - i] % ROLL_M1 * _PACK_HI
+            + (d2 * pw2[maxlen - i] % ROLL_M2 >> _PACK_LO_BITS),
         ))
     return out

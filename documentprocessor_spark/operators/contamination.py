@@ -30,7 +30,6 @@ def contamination_overlap(
     text_col: str = "text",
     n: int = CONTAM_NGRAM,
     df_cap: int = 64,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """(doc_id, n_hits, n_bench_docs): per training doc, how many distinct
     contaminated n-grams it contains, and the sum over those contaminated
@@ -40,24 +39,21 @@ def contamination_overlap(
     returned (inner join).
 
     ``df_cap`` drops n-grams shared by more than df_cap benchmark docs
-    before the join — the worst join key is bounded by construction.
-    ``broadcast_benchmark`` should stay True whenever the benchmark's
-    distinct-shingle set fits an executor (the normal case: benchmarks are
-    MBs, corpora are TBs); set False to let AQE pick a shuffled join."""
+    before the join — the worst join key is bounded by construction. The
+    benchmark's shingle set is always broadcast: benchmarks are MBs,
+    corpora TBs."""
     # (doc, shingle) pairs are already distinct per doc — shingle_transform
     # array_distincts before the explode — so no dedup shuffle is needed on
     # either side
     corpus_sh = doc_shingle_hashes(corpus, id_col, text_col, n).withColumnRenamed(
         "doc_id", "corpus_doc"
     )
-    bench_sh = (
+    bench_sh = F.broadcast(
         doc_shingle_hashes(benchmark, id_col, text_col, n)
         .groupBy("sh_hash")
         .agg(F.count("*").alias("n_bench"))
         .where(F.col("n_bench") <= df_cap)
     )
-    if broadcast_benchmark:
-        bench_sh = F.broadcast(bench_sh)
     return (
         corpus_sh.join(bench_sh, "sh_hash")
         .groupBy(F.col("corpus_doc").alias("doc_id"))

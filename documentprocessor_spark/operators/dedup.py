@@ -17,8 +17,12 @@ oracle-checkable; Python's salted ``hash()`` is never used, cf. SURVEY.md
 
 Scale notes (100 TB): every join here is equi-join on a hash/bucket key —
 shuffle-partitionable, no cross join anywhere; the DF cap bounds the shared-
-shingle join's worst key; signatures are tiny (k×32-hex) relative to text,
+shingle join's worst key; signatures are tiny (k bigints) relative to text,
 so the wide text column is dropped before any shuffle.
+
+Every md5-derived key is the 60-bit key of functions/rolling (``h60`` here,
+``h60_sql`` in the DuckDB oracles); the MinHash oracle chain is built once
+by :func:`minhash_oracle_ctes`.
 """
 
 from __future__ import annotations
@@ -27,19 +31,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.rolling import h60, h60_sql
+
 DEFAULT_SHINGLE_N = 3
 DEFAULT_MINHASH_K = 8
 DEFAULT_BAND_ROWS = 2
 DEFAULT_DF_CAP = 50          # drop shingles present in more docs than this
 SIMHASH_BITS = 16
-
-
-def _h60(col: Column) -> Column:
-    """The module's ONE portable 60-bit string hash: the first 15 hex chars
-    of md5 as a bigint. The 15-char width is a cross-engine CONTRACT —
-    every DuckDB oracle spells it ('0x' || substr(md5(x), 1, 15))::bigint;
-    change it here and in every oracle together or nowhere."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def shingle_transform(toks: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
@@ -96,11 +94,11 @@ def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str,
     """Long (doc_id, sh_hash int64) pairs: md5-prefix hash of each shingle.
 
     The pair join shuffles an 8-byte key instead of a ~20-byte string —
-    the dominant cost of the shared-shingle join at corpus scale. md5 is
-    portable to the DuckDB oracle ('0x'||substr(md5(s),1,15) casts to the
-    same value); 60-bit collisions are negligible for dedup purposes.
+    the dominant cost of the shared-shingle join at corpus scale. The key
+    is rolling.h60, portable to the DuckDB oracle (rolling.h60_sql); 60-bit
+    collisions are negligible for dedup purposes.
     """
-    h = _h60(F.col("shingle"))
+    h = h60(F.col("shingle"))
     return doc_shingles(df, id_col, text_col, n).select(
         "doc_id", h.alias("sh_hash")
     )
@@ -133,10 +131,9 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        n: int = DEFAULT_SHINGLE_N) -> DataFrame:
     """(doc_id, seed, minhash bigint): k independent min-hashes per document.
 
-    h_seed(s) = the first 60 bits of md5(seed || ':' || s) as an int64; the
+    h_seed(s) = the 60-bit key (rolling.h60) of seed || ':' || s; the
     numeric minimum per seed is a valid MinHash. Portable across
-    Spark/DuckDB: conv(substr(md5(x),1,15),16,10)::bigint here equals
-    ('0x' || substr(md5(x),1,15))::bigint there.
+    Spark/DuckDB: :func:`minhash_oracle_ctes` is the oracle twin.
 
     The minhash is NUMERIC (bigint), not the hex string, deliberately: min()
     over a string buffer is not eligible for Spark's hash-aggregate fast
@@ -151,7 +148,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     pairs = doc_shingles(df, id_col, text_col, n)
     aggs = [
         F.min(
-            _h60(F.concat(F.lit(f"{seed}:"), F.col("shingle")))
+            h60(F.concat(F.lit(f"{seed}:"), F.col("shingle")))
         ).alias(f"mh{seed}")
         for seed in range(k)
     ]
@@ -187,6 +184,42 @@ def minhash_bands(signatures: DataFrame, band_rows: int = DEFAULT_BAND_ROWS) -> 
             )
         ).alias("band_hash")
     )
+
+
+def shingle_oracle_cte(src: str, n: int = DEFAULT_SHINGLE_N,
+                       name: str = "sh") -> str:
+    """DuckDB twin of :func:`doc_shingles` as one CTE ``name`` (doc_id,
+    shingle): the distinct word n-grams of each row of the relation
+    ``src`` (doc_id, text). Docs shorter than n tokens yield none."""
+    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(1, n + 1))
+    return f"""{name} as (
+        select distinct doc_id, {gram} as shingle
+        from (select doc_id, string_split(text, ' ') as toks from {src}),
+             lateral unnest(range(len(toks) - {n - 1})) as u(i)
+    )"""
+
+
+def minhash_oracle_ctes(src: str, k: int = DEFAULT_MINHASH_K,
+                        band_rows: int = DEFAULT_BAND_ROWS,
+                        prefix: str = "") -> str:
+    """DuckDB twin of :func:`minhash_signatures` + :func:`minhash_bands`
+    as a CTE chain over the relation ``src`` (doc_id, text). Exposes
+    ``{prefix}sh`` (doc_id, shingle), ``{prefix}sig`` (doc_id, seed, mh)
+    and ``{prefix}bands`` (doc_id, band, band_hash); ``prefix`` keeps two
+    chains in one query apart."""
+    mh = h60_sql("cast(seed as varchar) || ':' || shingle")
+    band = f"cast(seed // {band_rows} as int)"
+    return f"""{shingle_oracle_cte(src, name=prefix + "sh")},
+    {prefix}sig as (
+        select doc_id, seed, min({mh}) as mh
+        from {prefix}sh cross join (select unnest(range({k})) as seed)
+        group by doc_id, seed
+    ),
+    {prefix}bands as (
+        select doc_id, {band} as band,
+            md5(string_agg(mh::varchar, '|' order by mh)) as band_hash
+        from {prefix}sig group by doc_id, {band}
+    )"""
 
 
 def minhash_star_edges(df: DataFrame, id_col: str, text_col: str,
@@ -303,14 +336,10 @@ class DedupCacheScope:
         self._dfs.append(df)
 
     def release(self) -> None:
-        while self._dfs:
-            try:
-                # blocking so a scope exit is externally observable at
-                # once (the async default races observers of
-                # getRDDStorageInfo — seen as a test flake, r6)
-                self._dfs.pop().unpersist(blocking=True)
-            except Exception:  # session already stopped
-                pass
+        # blocking so a scope exit is externally observable at once (the
+        # async default races observers of getRDDStorageInfo — seen as a
+        # test flake, r6)
+        _release(self._dfs, blocking=True)
 
     def __enter__(self) -> "DedupCacheScope":
         stack = getattr(_SCOPE_STACK, "stack", None)
@@ -337,8 +366,16 @@ def dedup_cache_scope() -> DedupCacheScope:
     return DedupCacheScope()
 
 
-def _register_persist(df: DataFrame, legacy_slot: list[DataFrame],
-                      legacy_release) -> DataFrame:
+def _release(slot: list[DataFrame], blocking: bool = False) -> None:
+    """Unpersist and forget every handle in ``slot``."""
+    while slot:
+        try:
+            slot.pop().unpersist(blocking=blocking)
+        except Exception:  # session already stopped — nothing to release
+            pass
+
+
+def _register_persist(df: DataFrame, legacy_slot: list[DataFrame]) -> DataFrame:
     """Persist ``df`` under the current owner and return the handle.
 
     The legacy slot is released BEFORE the persist: Spark's CacheManager
@@ -350,7 +387,7 @@ def _register_persist(df: DataFrame, legacy_slot: list[DataFrame],
     if stack:
         stack[-1].add(df)
     else:
-        legacy_release()
+        _release(legacy_slot)
         legacy_slot.append(df)
     return df.persist()
 
@@ -361,20 +398,12 @@ _LINE_CACHE: list[DataFrame] = []
 
 def release_line_cache() -> None:
     """Unpersist the intermediate cached by the last cross_doc_line_dedup."""
-    while _LINE_CACHE:
-        try:
-            _LINE_CACHE.pop().unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
+    _release(_LINE_CACHE)
 
 
 def release_jaccard_cache() -> None:
     """Unpersist the intermediate cached by the last ngram_jaccard_pairs."""
-    while _JACCARD_CACHE:
-        try:
-            _JACCARD_CACHE.pop().unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
+    _release(_JACCARD_CACHE)
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -411,7 +440,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         pairs.groupBy("sh_hash")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
         .where(F.size("docs") <= df_cap),
-        _JACCARD_CACHE, release_jaccard_cache,
+        _JACCARD_CACHE,
     )
     sizes = (
         rare.select(F.explode("docs").alias("doc_id"))
@@ -464,11 +493,7 @@ _SPAN_CACHE: list[DataFrame] = []
 
 def release_span_cache() -> None:
     """Unpersist the intermediate cached by the last duplicate_spans."""
-    while _SPAN_CACHE:
-        try:
-            _SPAN_CACHE.pop().unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
+    _release(_SPAN_CACHE)
 
 
 def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
@@ -527,7 +552,7 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
         )
         .withColumnRenamed("pos", "span_start")
         .select("doc_id", "span_start", "win_hash"),
-        _SPAN_CACHE, release_span_cache,
+        _SPAN_CACHE,
     )
     dup_hashes = (
         windows.groupBy("win_hash")
@@ -730,8 +755,8 @@ def cross_doc_line_dedup(df: DataFrame, id_col: str, text_col: str,
             F.posexplode(
                 F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
             ).alias("pos", "line"),
-        ).withColumn("lh", _h60(F.col("line"))),
-        _LINE_CACHE, release_line_cache,
+        ).withColumn("lh", h60(F.col("line"))),
+        _LINE_CACHE,
     )
     hot = (
         lines.groupBy("lh")
@@ -869,12 +894,12 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
 def bloom_bit_positions(hash_col: Column, m_bits: int,
                         n_hashes: int) -> Column:
     """The ``n_hashes`` Bloom bit positions of a hex content hash:
-    position_j = _h60(hash || '#' || j) % m_bits. Built on the module's
+    position_j = h60(hash || '#' || j) % m_bits. Built on the module's
     portable 60-bit md5-prefix key, so a DuckDB oracle reproduces every
     position bit-for-bit; m_bits nonneg-mod of a nonneg 60-bit int needs
     no pmod on either engine."""
     return F.array(*[
-        (_h60(F.concat_ws("#", hash_col, F.lit(str(j)))) % m_bits)
+        (h60(F.concat_ws("#", hash_col, F.lit(str(j)))) % m_bits)
         .cast("int")
         for j in range(n_hashes)
     ])

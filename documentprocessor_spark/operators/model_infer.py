@@ -54,18 +54,6 @@ MODEL_LINE_ITEM = StructType(
     ]
 )
 
-ENTITIES = StructType(
-    [
-        StructField("vendor_name", FIELD, True),
-        StructField("date", FIELD, True),
-        StructField("total_amount", FIELD, True),
-        StructField("subtotal", FIELD, True),
-        StructField("tax_amount", FIELD, True),
-        StructField("line_items", ArrayType(MODEL_LINE_ITEM), True),
-    ]
-)
-
-
 def fake_token_classifier(tokens: list[str], doc_key: str) -> tuple[list[int], list[float]]:
     """Deterministic stand-in for M1: label id and confidence derived from
     md5(doc_key:pos:token). Ids range over [0, 15) so out-of-range ids (13,

@@ -8,8 +8,9 @@ the classic KMV/bottom-k estimator (Bar-Yossef et al. 2002).
 Unlike HyperLogLog or Count-Min (engine-private binary states), KMV built
 on md5 is EXACTLY reproducible across engines: md5 hex strings sort
 identically everywhere, so the driver gate can hash-compare the estimate
-itself, not a tolerance. The hash fraction uses the first 15 hex chars
-(60 bits — fits a signed 64-bit int in both engines).
+itself, not a tolerance. The hash is the 60-bit key of functions/rolling
+(h60 of the value as a string — fits a signed 64-bit int in both
+engines).
 
 Scale shape: distinct-then-TakeOrdered(k) — the distinct is one shuffle on
 the hash (the same price as exact count-distinct's shuffle, but the merge
@@ -20,19 +21,13 @@ as k rows per partition, never the full distinct set).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.rolling import h60
 
 HASH_BITS = 60
 _SCALE = float(1 << HASH_BITS)
-
-
-def _hash60(col: Column) -> Column:
-    """First 60 bits of md5(value-as-string) as a non-negative long —
-    identical in DuckDB: from_hex/substr of the same hex digest."""
-    return F.conv(
-        F.substring(F.md5(col.cast("string").cast("binary")), 1, 15), 16, 10
-    ).cast("long")
 
 
 def kmv_sketch(df: DataFrame, col: str, k: int = 64) -> DataFrame:
@@ -43,7 +38,7 @@ def kmv_sketch(df: DataFrame, col: str, k: int = 64) -> DataFrame:
     # into the bottom-k on the Spark side while DuckDB sorts them last)
     hashes = (
         df.where(F.col(col).isNotNull())
-        .select(_hash60(F.col(col)).alias("h"))
+        .select(h60(F.col(col).cast("string")).alias("h"))
         .distinct()
     )
     bottom = hashes.orderBy("h").limit(k)

@@ -35,10 +35,6 @@ def tokens_col(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def token_count_col(text: Column) -> Column:
-    return F.size(tokens_col(text))
-
-
 def _stopword_hits(tokens: Column, stopwords: tuple[str, ...]) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(*stopwords)))
 
@@ -119,24 +115,6 @@ def _bigrams_col(toks: Column) -> Column:
             lambda i: F.concat_ws(" ", toks[i], toks[i + 1]),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def repetition_cols(text: Column) -> dict[str, Column]:
-    """Gopher/C4-style repetition signals, entirely as native higher-order
-    functions — zero shuffle, zero Python, so a 100 TB repetition-filter
-    pass is map-only:
-
-    - ``top_bigram_frac``: occurrences of the most frequent word bigram /
-      total bigrams (Gopher drops docs where this is high). The max run
-      length over the SORTED bigram array equals the max multiplicity —
-      computed with one ``aggregate`` fold (prev, run, best).
-    - ``dup_bigram_frac``: (total - distinct) / total bigrams.
-
-    Both rounded to 6 dp; null below 2 tokens.
-    """
-    toks = tokens_col(text)
-    bigrams = _bigrams_col(toks)
-    return _repetition_from_bigrams(bigrams)
 
 
 def _repetition_from_bigrams(bigrams: Column) -> dict[str, Column]:

@@ -42,11 +42,7 @@ _SURVIVORS_CACHE: list[DataFrame] = []
 def release_survivors_cache() -> None:
     """Unpersist the survivors cached by the last curate_documents call
     with ``exact_substr_k`` set."""
-    while _SURVIVORS_CACHE:
-        try:
-            _SURVIVORS_CACHE.pop().unpersist()
-        except Exception:  # session already stopped — nothing to release
-            pass
+    dedup._release(_SURVIVORS_CACHE)
 
 
 def _filtered_exact(
@@ -138,9 +134,7 @@ def curate_documents(
         # three consumers read survivors (the span windows, the cut
         # join-back and the stats join below): persisted once, so the
         # filter/exact/MinHash subtree runs once instead of three times
-        survivors = dedup._register_persist(
-            survivors, _SURVIVORS_CACHE, release_survivors_cache
-        )
+        survivors = dedup._register_persist(survivors, _SURVIVORS_CACHE)
         cleaned = dedup.remove_duplicate_spans(
             survivors, "doc_id", "text", k=exact_substr_k
         )

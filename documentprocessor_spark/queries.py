@@ -27,9 +27,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import reference_semantics as ref_sem
+from .functions.rolling import h60_sql
+from .functions.rolling import rolling_oracle_ctes as _roll_ctes
 from .operators import dedup, similarity, textstats
+from .operators.dedup import minhash_oracle_ctes, shingle_oracle_cte
 from .plans.pipeline import extract_from_pages
-from .schemas import PAGES
 from .sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -1019,18 +1021,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_signatures(docs, "doc_id", "text", k=4)
 
 
-_ORACLE_MINHASH = """
-    with tok as (select doc_id, string_split(text, ' ') as toks from documents),
-    sh as (
-        select distinct doc_id,
-            toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3] as shingle
-        from tok, lateral unnest(range(len(toks) - 2)) as u(i)
-    ),
-    seeds as (select unnest(range(4)) as seed)
-    select doc_id, cast(seed as int) as seed,
-        min(('0x' || substr(md5(cast(seed as varchar) || ':' || shingle), 1, 15))::bigint) as minhash
-    from sh cross join seeds
-    group by doc_id, seed
+_ORACLE_MINHASH = f"""
+    with {minhash_oracle_ctes("documents", k=4)}
+    select doc_id, cast(seed as int) as seed, mh as minhash from sig
 """
 
 
@@ -1044,8 +1037,6 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dedup.duplicate_spans(docs, "doc_id", "text", k=20, maxlen=1024)
 
-
-from .functions.rolling import rolling_oracle_ctes as _roll_ctes  # noqa: E402
 
 # lag must sit in its own CTE (DuckDB can't nest window fns), the interval
 # union is the same lag/cumsum sessionization as the Spark side; all keys
@@ -1326,7 +1317,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.cross_doc_line_dedup(ml, "doc_id", "text", min_count=2)
 
 
-_ORACLE_LINE_DEDUP = """
+_ORACLE_LINE_DEDUP = f"""
     with tok as (select doc_id, string_split(text, ' ') as toks from documents),
     ml as (
         select doc_id,
@@ -1342,8 +1333,7 @@ _ORACLE_LINE_DEDUP = """
              lateral unnest(range(len(ls))) u(i)
     ),
     hashed as (
-        select doc_id, pos, line,
-            ('0x' || substr(md5(line), 1, 15))::bigint as lh
+        select doc_id, pos, line, {h60_sql("line")} as lh
         from lines
     ),
     hot as (select lh from hashed group by lh having count(*) >= 2),
@@ -1394,50 +1384,19 @@ def q_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_INCREMENTAL = """
+_ORACLE_INCREMENTAL = f"""
     with old as (select * from documents where doc_id % 2 = 0),
     newd as (select * from documents where doc_id % 2 = 1),
     ih as (select distinct sha256(text) as content_hash from old),
-    tok_o as (select doc_id, string_split(text, ' ') as toks from old),
-    sh_o as (
-        select distinct doc_id,
-            toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3] as shingle
-        from tok_o, lateral unnest(range(len(toks) - 2)) as u(i)
-    ),
-    seeds as (select unnest(range(8)) as seed),
-    sig_o as (
-        select doc_id, seed,
-            min(('0x' || substr(md5(cast(seed as varchar) || ':' || shingle), 1, 15))::bigint) as mh
-        from sh_o cross join seeds group by doc_id, seed
-    ),
-    bands_o as (
-        select distinct cast(seed // 2 as int) as band,
-            md5(string_agg(mh::varchar, '|' order by mh)) as band_hash
-        from sig_o group by doc_id, cast(seed // 2 as int)
-    ),
-    tok_n as (select doc_id, string_split(text, ' ') as toks from newd),
-    sh_n as (
-        select distinct doc_id,
-            toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3] as shingle
-        from tok_n, lateral unnest(range(len(toks) - 2)) as u(i)
-    ),
-    sig_n as (
-        select doc_id, seed,
-            min(('0x' || substr(md5(cast(seed as varchar) || ':' || shingle), 1, 15))::bigint) as mh
-        from sh_n cross join seeds group by doc_id, seed
-    ),
-    bands_n as (
-        select doc_id, cast(seed // 2 as int) as band,
-            md5(string_agg(mh::varchar, '|' order by mh)) as band_hash
-        from sig_n group by doc_id, cast(seed // 2 as int)
-    ),
+    {minhash_oracle_ctes("old", prefix="o_")},
+    {minhash_oracle_ctes("newd", prefix="n_")},
     exact_hits as (
         select distinct n.doc_id from newd n
         join ih on sha256(n.text) = ih.content_hash
     ),
     near_hits as (
-        select distinct bn.doc_id from bands_n bn
-        join bands_o using (band, band_hash)
+        select distinct bn.doc_id from n_bands bn
+        join o_bands using (band, band_hash)
     )
     select n.doc_id,
         case when e.doc_id is not null then 'exact'
@@ -1449,22 +1408,20 @@ _ORACLE_INCREMENTAL = """
 """
 
 
-_ORACLE_BLOOM = """
+_BLOOM_BIT_SQL = h60_sql("content_hash || '#' || cast(j as varchar)")
+
+_ORACLE_BLOOM = f"""
     with old as (select * from documents where doc_id % 3 != 0),
     newd as (select * from documents where doc_id % 5 = 0),
     ih as (select distinct sha256(text) as content_hash from old),
     js as (select unnest(range(4)) as j),
     set_bits as (
-        select distinct cast(
-            ('0x' || substr(md5(content_hash || '#' || cast(j as varchar)),
-                            1, 15))::bigint % 1024 as int) as bit_pos
+        select distinct cast({_BLOOM_BIT_SQL} % 1024 as int) as bit_pos
         from ih cross join js
     ),
     d as (select doc_id, sha256(text) as content_hash from newd),
     probes as (
-        select doc_id, cast(
-            ('0x' || substr(md5(content_hash || '#' || cast(j as varchar)),
-                            1, 15))::bigint % 1024 as int) as bit_pos
+        select doc_id, cast({_BLOOM_BIT_SQL} % 1024 as int) as bit_pos
         from d cross join js
     ),
     cand as (
@@ -1548,18 +1505,9 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_JACCARD = """
-    with tok as (select doc_id, string_split(text, ' ') as toks from documents),
-    sh as (
-        select distinct doc_id,
-            toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3] as shingle
-        from tok, lateral unnest(range(len(toks) - 2)) as u(i)
-    ),
-    shh as (
-        select doc_id,
-            ('0x' || substr(md5(shingle), 1, 15))::bigint as sh_hash
-        from sh
-    ),
+_ORACLE_JACCARD = f"""
+    with {shingle_oracle_cte("documents")},
+    shh as (select doc_id, {h60_sql("shingle")} as sh_hash from sh),
     rare as (
         select sh_hash from shh group by sh_hash having count(*) <= 50
     ),
@@ -1620,22 +1568,45 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _EN_STOP_SQL = ", ".join(f"'{s}'" for s in textstats.EN_STOPWORDS)
+_DE_STOP_SQL = ", ".join(f"'{s}'" for s in textstats.DE_STOPWORDS)
+_FR_STOP_SQL = ", ".join(f"'{s}'" for s in textstats.FR_STOPWORDS)
+
+
+def _stop_hits_sql(stops: str) -> str:
+    return f"len(list_filter(string_split(text, ' '), x -> x in ({stops})))"
+
+
+# DuckDB twin of textstats.lang_id_col and quality_score_col: the
+# documents as (doc_id, text, en, de, fr, lang_id, quality_score), en/de/fr
+# being stopword hit counts
+_SCORED_SQL = f"""
+        select *,
+            case
+                when en >= de and en >= fr and en > 0 then 'en'
+                when de >= fr and de > 0 then 'de'
+                when fr > 0 then 'fr'
+                else 'und' end as lang_id,
+            round(
+                0.5 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
+                       / greatest(length(text), 1))
+                + 0.5 * (en / greatest(len(string_split(text, ' ')), 1)),
+                6) as quality_score
+        from (
+            select doc_id, text, {_stop_hits_sql(_EN_STOP_SQL)} as en,
+                {_stop_hits_sql(_DE_STOP_SQL)} as de,
+                {_stop_hits_sql(_FR_STOP_SQL)} as fr
+            from documents
+        )"""
+
 
 _ORACLE_TEXT_STATS = f"""
     select doc_id,
         cast(len(string_split(text, ' ')) as int) as token_count,
-        round(
-            0.5 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                   / greatest(length(text), 1))
-            + 0.5 * (len(list_filter(string_split(text, ' '),
-                                     x -> x in ({_EN_STOP_SQL})))
-                     / greatest(len(string_split(text, ' ')), 1)),
-            6
-        ) as quality_score,
+        quality_score,
         md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) as fingerprint,
         cast(len(regexp_extract_all(text, '{textstats.BPE_TOKEN_PATTERN}'))
              as int) as subword_count
-    from documents
+    from ({_SCORED_SQL})
 """
 
 
@@ -1648,24 +1619,9 @@ def q_lang_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DE_STOP_SQL = ", ".join(f"'{s}'" for s in textstats.DE_STOPWORDS)
-_FR_STOP_SQL = ", ".join(f"'{s}'" for s in textstats.FR_STOPWORDS)
-
 _ORACLE_LANG = f"""
-    with hits as (
-        select doc_id,
-            len(list_filter(string_split(text, ' '), x -> x in ({_EN_STOP_SQL}))) as en,
-            len(list_filter(string_split(text, ' '), x -> x in ({_DE_STOP_SQL}))) as de,
-            len(list_filter(string_split(text, ' '), x -> x in ({_FR_STOP_SQL}))) as fr
-        from documents
-    )
-    select case
-        when en >= de and en >= fr and en > 0 then 'en'
-        when de >= fr and de > 0 then 'de'
-        when fr > 0 then 'fr'
-        else 'und' end as lang_id,
-        count(*) as n_docs
-    from hits group by 1
+    select lang_id, count(*) as n_docs
+    from ({_SCORED_SQL}) group by 1
 """
 
 def q_salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1693,37 +1649,7 @@ def q_curate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ORACLE_CURATE = f"""
-    with scored as (
-        select doc_id, text,
-            case
-                when len(list_filter(string_split(text, ' '),
-                         x -> x in ({_EN_STOP_SQL}))) >=
-                     len(list_filter(string_split(text, ' '),
-                         x -> x in ({_DE_STOP_SQL})))
-                 and len(list_filter(string_split(text, ' '),
-                         x -> x in ({_EN_STOP_SQL}))) >=
-                     len(list_filter(string_split(text, ' '),
-                         x -> x in ({_FR_STOP_SQL})))
-                 and len(list_filter(string_split(text, ' '),
-                         x -> x in ({_EN_STOP_SQL}))) > 0 then 'en'
-                when len(list_filter(string_split(text, ' '),
-                         x -> x in ({_DE_STOP_SQL}))) >=
-                     len(list_filter(string_split(text, ' '),
-                         x -> x in ({_FR_STOP_SQL})))
-                 and len(list_filter(string_split(text, ' '),
-                         x -> x in ({_DE_STOP_SQL}))) > 0 then 'de'
-                when len(list_filter(string_split(text, ' '),
-                         x -> x in ({_FR_STOP_SQL}))) > 0 then 'fr'
-                else 'und' end as lang_id,
-            round(
-                0.5 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                       / greatest(length(text), 1))
-                + 0.5 * (len(list_filter(string_split(text, ' '),
-                                         x -> x in ({_EN_STOP_SQL})))
-                         / greatest(len(string_split(text, ' ')), 1)),
-                6) as quality_score
-        from documents
-    ),
+    with scored as ({_SCORED_SQL}),
     filtered as (
         select * from scored where lang_id = 'en' and quality_score >= 0.3
     ),
@@ -1733,23 +1659,7 @@ _ORACLE_CURATE = f"""
             from filtered
         ) where doc_id = canon
     ),
-    tok as (select doc_id, string_split(text, ' ') as toks from exact),
-    sh as (
-        select distinct doc_id,
-            toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3] as shingle
-        from tok, lateral unnest(range(len(toks) - 2)) as u(i)
-    ),
-    seeds as (select unnest(range(8)) as seed),
-    sig as (
-        select doc_id, seed,
-            min(('0x' || substr(md5(cast(seed as varchar) || ':' || shingle), 1, 15))::bigint) as mh
-        from sh cross join seeds group by doc_id, seed
-    ),
-    bands as (
-        select doc_id, cast(seed // 2 as int) as band,
-            md5(string_agg(mh::varchar, '|' order by mh)) as band_hash
-        from sig group by doc_id, cast(seed // 2 as int)
-    ),
+    {minhash_oracle_ctes("exact", k=8, band_rows=2)},
     losers as (
         select distinct b.doc_id
         from bands a join bands b
@@ -2096,24 +2006,8 @@ def q_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_candidate_pairs(docs, "doc_id", "text", k=8, band_rows=2)
 
 
-_ORACLE_BAND_PAIRS = """
-    with tok as (select doc_id, string_split(text, ' ') as toks from documents),
-    sh as (
-        select distinct doc_id,
-            toks[i + 1] || ' ' || toks[i + 2] || ' ' || toks[i + 3] as shingle
-        from tok, lateral unnest(range(len(toks) - 2)) as u(i)
-    ),
-    seeds as (select unnest(range(8)) as seed),
-    sig as (
-        select doc_id, seed,
-            min(('0x' || substr(md5(cast(seed as varchar) || ':' || shingle), 1, 15))::bigint) as mh
-        from sh cross join seeds group by doc_id, seed
-    ),
-    bands as (
-        select doc_id, cast(seed // 2 as int) as band,
-            md5(string_agg(mh::varchar, '|' order by mh)) as band_hash
-        from sig group by doc_id, cast(seed // 2 as int)
-    )
+_ORACLE_BAND_PAIRS = f"""
+    with {minhash_oracle_ctes("documents", k=8, band_rows=2)}
     select a.doc_id as doc_a, b.doc_id as doc_b, count(*) as shared_bands
     from bands a join bands b
       on a.band = b.band and a.band_hash = b.band_hash and a.doc_id < b.doc_id
@@ -3712,20 +3606,16 @@ def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.unionByName(b)
 
 
-_ORACLE_KMV = """
+_ORACLE_KMV = f"""
     with sk as (
         select 'documents.doc_id' as col, h from (
-            select distinct
-                ('0x' || substr(md5(cast(doc_id as varchar)), 1, 15))::bigint
-                as h
+            select distinct {h60_sql("cast(doc_id as varchar)")} as h
             from documents
         ) order by h limit 64
     ),
     sk2 as (
         select 'events.user_id' as col, h from (
-            select distinct
-                ('0x' || substr(md5(cast(user_id as varchar)), 1, 15))::bigint
-                as h
+            select distinct {h60_sql("cast(user_id as varchar)")} as h
             from events
         ) order by h limit 64
     ),
@@ -4830,19 +4720,10 @@ _ORACLE_CONTAMINATION = f"""
                 then ' ' || {_SPAN_SQL} else '' end as text
         from documents
     ),
+    {shingle_oracle_cte("salted", 13, "grams")},
     sh as (
-        select doc_id,
-            ('0x' || substr(md5(g), 1, 15))::bigint as sh_hash
-        from (
-            select doc_id,
-                list_aggr(toks[i + 1 : i + 13], 'string_agg', ' ') as g
-            from (
-                select doc_id, string_split(text, ' ') as toks
-                from salted
-            ), lateral unnest(range(len(toks) - 12)) as u(i)
-            where len(toks) >= 13
-        )
-        group by doc_id, sh_hash
+        select doc_id, {h60_sql("shingle")} as sh_hash
+        from grams group by doc_id, sh_hash
     ),
     bench as (
         select sh_hash, count(*) as n_bench

@@ -111,11 +111,6 @@ SCALAR_FIELDS = (
     "currency",
 )
 
-FIELDS = StructType(
-    [StructField(name, FIELD, True) for name in SCALAR_FIELDS]
-    + [StructField("line_items", ArrayType(LINE_ITEM), True)]
-)
-
 # One output row per url (the results sink table).
 RESULT = StructType(
     [

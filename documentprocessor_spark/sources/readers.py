@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# /root/reference/Ocr/src/cli/utils.py:91-93
-IMAGE_EXTENSIONS = ("jpg", "jpeg", "png", "bmp", "tiff", "tif", "gif", "webp")
 HTML_EXTENSIONS = ("html", "htm")
 
 

@@ -23,11 +23,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TPCH_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     try:
         jvm = spark._jvm  # noqa: SLF001
