@@ -1043,9 +1043,15 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bigint (range's i is bigint; Spark casts span_start to long to match).
 # Window hashes are the Rabin-Karp rolling CTEs generated from
 # functions/rolling.py — ONE spelling shared with the Spark side.
-_ORACLE_DEDUP_SPANS = f"""
-    with recursive docs_src as (select doc_id, text from documents),
-    {_roll_ctes(k=20, maxlen=1024)},
+def _span_oracle_ctes(k: int, maxlen: int) -> str:
+    """The ExactSubstr detection CTEs both span oracles share, over the
+    `documents` view: k-token window hashes seen in 2..1000 distinct docs
+    (dedup.duplicate_spans' min_docs / df_cap defaults), merged per doc
+    into `spans(doc_id, s, e, n_windows)` — maximal [s, e) token ranges
+    and how many duplicated windows each absorbs. Open with `with
+    recursive` (the powers CTE recurses)."""
+    return f"""docs_src as (select doc_id, text from documents),
+    {_roll_ctes(k=k, maxlen=maxlen)},
     win as (select doc_id, pos as span_start, win_hash from roll_win),
     dup as (
         select win_hash from win
@@ -1060,17 +1066,21 @@ _ORACLE_DEDUP_SPANS = f"""
     ),
     runs as (
         select doc_id, span_start,
-            sum(case when prev_s is null or span_start - prev_s > 20 then 1 else 0 end)
+            sum(case when prev_s is null or span_start - prev_s > {k} then 1 else 0 end)
                 over (partition by doc_id order by span_start
                       rows between unbounded preceding and current row) as run_id
         from lagged
-    )
-    select doc_id,
-        min(span_start) as span_start,
-        max(span_start) + 20 - min(span_start) as span_len,
-        count(*) as n_windows
-    from runs
-    group by doc_id, run_id
+    ),
+    spans as (
+        select doc_id, min(span_start) as s, max(span_start) + {k} as e,
+            count(*) as n_windows
+        from runs group by doc_id, run_id
+    )"""
+
+
+_ORACLE_DEDUP_SPANS = f"""
+    with recursive {_span_oracle_ctes(k=20, maxlen=1024)}
+    select doc_id, s as span_start, e - s as span_len, n_windows from spans
 """
 
 
@@ -1085,36 +1095,12 @@ def q_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# same span CTEs as _ORACLE_DEDUP_SPANS, then: tokens not covered by any
-# span survive, string_agg in position order rebuilds the text; docs whose
-# every token is covered collapse to '' via the left-join coalesce.
+# the shared span CTEs, then: tokens not covered by any span survive,
+# string_agg in position order rebuilds the text; docs whose every token
+# is covered collapse to '' via the left-join coalesce.
 _ORACLE_SPAN_REMOVAL = f"""
-    with recursive docs_src as (select doc_id, text from documents),
-    {_roll_ctes(k=20, maxlen=1024)},
+    with recursive {_span_oracle_ctes(k=20, maxlen=1024)},
     tok as (select doc_id, string_split(text, ' ') as toks from documents),
-    win as (select doc_id, pos as span_start, win_hash from roll_win),
-    dup as (
-        select win_hash from win
-        group by win_hash
-        having count(distinct doc_id) between 2 and 1000
-    ),
-    occ as (select w.doc_id, w.span_start from win w join dup using (win_hash)),
-    lagged as (
-        select doc_id, span_start,
-            lag(span_start) over (partition by doc_id order by span_start) as prev_s
-        from occ
-    ),
-    runs as (
-        select doc_id, span_start,
-            sum(case when prev_s is null or span_start - prev_s > 20 then 1 else 0 end)
-                over (partition by doc_id order by span_start
-                      rows between unbounded preceding and current row) as run_id
-        from lagged
-    ),
-    spans as (
-        select doc_id, min(span_start) as s, max(span_start) + 20 as e
-        from runs group by doc_id, run_id
-    ),
     toks2 as (
         select doc_id, i, toks[i + 1] as t
         from tok, lateral unnest(range(len(toks))) as u(i)

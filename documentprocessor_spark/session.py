@@ -5,7 +5,8 @@ identically in local[] test mode so plans exercised by tests are the plans
 shipped: AQE (runtime partition coalescing + skew-join splitting), Arrow
 batching for the pandas-UDF extraction kernels, a generated-code cache
 that holds a whole job's classes across the jobs of a long-lived session,
-and a shuffle-partition count that callers override per environment.
+zstd for every Parquet write, and a shuffle-partition count that callers
+override per environment.
 """
 
 from __future__ import annotations
@@ -83,6 +84,16 @@ def get_spark(
         # recompiles it (~3x the residual compiles per steady-state
         # curation job). The id stays in a comment of the source.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # Every Parquet sink (results, spans, manifest, curated,
+        # line_deduped, chunks, fingerprints, checkpoints, debug samples,
+        # streaming file sinks) takes its codec from this one conf; no
+        # writer sets `compression`. Snappy compressed the survivors'
+        # clean_text only ~1.2x; zstd halves it. Measured on a 4-vCPU VM
+        # (BENCH/BASELINE.md): perfbench out_bytes_per_in_byte 2.31 -> 1.37
+        # on curate_skewed and 1.61 -> 1.14 on extract_fresh, wall_s and
+        # peak RSS inside the benchmark's bounds. Spark, pyarrow and DuckDB
+        # all read zstd, also next to older snappy files of one table.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config(
             "spark.sql.warehouse.dir",
             # per-process default: concurrent sessions on a shared box must

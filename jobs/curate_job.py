@@ -32,6 +32,7 @@ else on the original text joined back by id):
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import sys
 import time
@@ -80,7 +81,29 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
         spark.stop()
 
 
+def _counted(df, name: str):
+    """``df`` with an Observation of its row count, filled by the one
+    action that runs it — the count rides that action's own plan instead
+    of a separate pass."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation(name)
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def _write_counted(df, output: str, table: str) -> int:
+    """Overwrite ``<output>/<table>`` with ``df``; returns the rows
+    written, observed on the write itself (no read-back count)."""
+    df, obs = _counted(df, table)
+    df.write.mode("overwrite").parquet(f"{output}/{table}")
+    return obs.get["rows"]
+
+
 def _run(spark, args) -> None:
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import functions as F
+
     from documentprocessor_spark.plans.curate import (
         curate_documents,
         curate_documents_checkpointed,
@@ -92,14 +115,13 @@ def _run(spark, args) -> None:
     # count() here would be a full EXTRA pass over a TB-scale input
     # (review finding r4). The checkpointed plan runs multiple actions
     # and may legitimately SKIP the input scan on resume, so it counts
-    # input rows with an explicit (documented) pass instead.
-    obs = None
+    # input rows with an explicit (documented) pass instead. So does a
+    # run whose observed scan left the final plan: when a stage comes out
+    # empty (e.g. curation keeps nothing), AQE replaces the join sides it
+    # makes moot by empty relations, and their metrics go with them.
+    obs_in = None
     if not args.checkpoint:
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        obs = Observation("curate-in")
-        docs = docs.observe(obs, F.count(F.lit(1)).alias("rows_in"))
+        docs, obs_in = _counted(docs, "curate-in")
     common = dict(
         id_col=args.id_col, text_col=args.text_col, lang=args.lang,
         min_quality=args.min_quality, minhash_k=args.minhash_k,
@@ -114,20 +136,17 @@ def _run(spark, args) -> None:
             docs, transitive=args.transitive,
             exact_substr_k=args.exact_substr_k, **common
         )
-    dest = f"{args.output}/curated"
-    out.write.mode("overwrite").parquet(dest)
-    # parquet count() reads row-group metadata, not data — cheap, and it
-    # doubles as a read-back verification of the committed output
-    n_out = spark.read.parquet(dest).count()
-    n_in = obs.get["rows_in"] if obs is not None else (
-        spark.read.parquet(args.input).count()
-    )
+    n_out = _write_counted(out, args.output, "curated")
+    n_in = None
+    if obs_in is not None:
+        with contextlib.suppress(Py4JJavaError):  # no metrics were sent
+            n_in = obs_in.get["rows"]
+    if n_in is None:
+        n_in = spark.read.parquet(args.input).count()
     extra = {}
     if (args.chunk_tokens is not None or args.winnow_k is not None
             or args.line_dedup_min_count is not None):
-        from pyspark.sql import functions as F
-
-        curated = spark.read.parquet(dest)
+        curated = spark.read.parquet(f"{args.output}/curated")
         if "clean_text" in curated.columns:
             # the ExactSubstr stage already carried the survivor text through
             texts = curated.select("doc_id",
@@ -146,34 +165,28 @@ def _run(spark, args) -> None:
             from documentprocessor_spark.operators.dedup import (
                 cross_doc_line_dedup)
 
-            cross_doc_line_dedup(
+            extra["n_line_deduped"] = _write_counted(cross_doc_line_dedup(
                 texts, "doc_id", "text",
                 min_count=args.line_dedup_min_count,
-            ).write.mode("overwrite").parquet(f"{args.output}/line_deduped")
-            deduped = spark.read.parquet(f"{args.output}/line_deduped")
-            extra["n_line_deduped"] = deduped.count()
+            ), args.output, "line_deduped")
             # downstream chunk/winnow stages consume the cleaned text
-            texts = deduped.select("doc_id",
-                                   F.col("clean_text").alias("text"))
+            texts = (spark.read.parquet(f"{args.output}/line_deduped")
+                     .select("doc_id", F.col("clean_text").alias("text")))
         if args.chunk_tokens is not None:
             from documentprocessor_spark.operators.packing import (
                 chunk_documents)
 
-            chunk_documents(
+            extra["n_chunks"] = _write_counted(chunk_documents(
                 texts, "doc_id", "text",
                 chunk_tokens=args.chunk_tokens, stride=args.chunk_stride,
-            ).write.mode("overwrite").parquet(f"{args.output}/chunks")
-            extra["n_chunks"] = spark.read.parquet(
-                f"{args.output}/chunks").count()
+            ), args.output, "chunks")
         if args.winnow_k is not None:
             from documentprocessor_spark.operators.dedup import (
                 winnow_fingerprints)
 
-            winnow_fingerprints(
+            extra["n_fingerprints"] = _write_counted(winnow_fingerprints(
                 texts, "doc_id", "text", k=args.winnow_k, w=args.winnow_w,
-            ).write.mode("overwrite").parquet(f"{args.output}/fingerprints")
-            extra["n_fingerprints"] = spark.read.parquet(
-                f"{args.output}/fingerprints").count()
+            ), args.output, "fingerprints")
     print(json.dumps({
         "rows_in": n_in,
         "rows_kept": n_out,

@@ -582,6 +582,34 @@ def test_curate_job_cli_line_dedup_stage(spark, tmp_path, capsys):
     assert chunks and all("banner" not in c["chunk_text"] for c in chunks)
 
 
+def test_curate_job_counts_are_the_written_row_counts(spark, tmp_path, capsys):
+    """The stats line's counts are observed on each table's own write
+    (no read-back count): each equals the row count of the table it names,
+    also when curation keeps nothing and every stage writes an empty
+    table."""
+    import json
+
+    from jobs.curate_job import main
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(CKPT_DOCS, ["doc_id", "text"]).write.parquet(src)
+    sinks = {"rows_kept": "curated", "n_line_deduped": "line_deduped",
+             "n_chunks": "chunks", "n_fingerprints": "fingerprints"}
+    for min_quality, out in (("0.0", "kept"), ("1.01", "none")):
+        out = str(tmp_path / out)
+        main(["--input", src, "--output", out, "--min-quality", min_quality,
+              "--exact-substr-k", "3", "--line-dedup-min-count", "2",
+              "--chunk-tokens", "4", "--winnow-k", "3", "--winnow-w", "2"],
+             stop_session=False)
+        stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        written = {key: spark.read.parquet(f"{out}/{table}").count()
+                   for key, table in sinks.items()}
+        assert {key: stats[key] for key in sinks} == written
+        assert stats["rows_in"] == len(CKPT_DOCS)
+        assert stats["rows_dropped"] == len(CKPT_DOCS) - stats["rows_kept"]
+        assert (stats["rows_kept"] > 0) == (min_quality == "0.0")
+
+
 def test_ingest_dedup_job_cli_bootstrap_then_probe(spark, tmp_path, capsys):
     """The continuous-ingestion CLI end to end: first increment bootstraps
     the index; the second (overlapping) increment drops its re-crawled

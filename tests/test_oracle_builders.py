@@ -11,7 +11,6 @@ from __future__ import annotations
 import importlib.util
 import pathlib
 import random
-import sys
 
 import duckdb
 import pytest
@@ -45,8 +44,6 @@ SHARED_TEXT_QUERIES = (
 
 @pytest.fixture(scope="module")
 def rowset():
-    if str(_REPO) not in sys.path:
-        sys.path.insert(0, str(_REPO))  # check_contract imports __spark_entry__
     spec = importlib.util.spec_from_file_location(
         "check_contract", _REPO / "tools" / "check_contract.py")
     mod = importlib.util.module_from_spec(spec)

@@ -9,9 +9,16 @@ from __future__ import annotations
 
 import decimal
 import math
+import os
+import pathlib
 import sys
 
-sys.path.insert(0, ".")
+# the repo root, wherever the script is run from: on this process's path
+# for the imports below, on PYTHONPATH for the Python workers Spark starts
+_ROOT = str(pathlib.Path(__file__).resolve().parents[1])
+sys.path.insert(0, _ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_ROOT, os.environ.get("PYTHONPATH")) if p)
 
 import duckdb
 
