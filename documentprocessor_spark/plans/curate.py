@@ -45,37 +45,54 @@ def release_survivors_cache() -> None:
     dedup._release(_SURVIVORS_CACHE)
 
 
-def _filtered_exact(
-    docs: DataFrame, id_col: str, text_col: str, lang: str, min_quality: float
-) -> DataFrame:
-    """Score, filter on lang/quality, then keep the minimal id per content
-    hash: the (doc_id, text, lang_id, quality_score) rows both curation
-    forms run near-dup dropping over.
+def _stage_store(spark: SparkSession, ckpt_dir: str | None, params: dict):
+    """``stage(name, build)`` for one curation run. Without a checkpoint
+    dir it returns ``build()``, so the plan is the single lazy one. With
+    one, a stage is committed iff its parquet ``_SUCCESS`` marker exists
+    (the commit protocol Spark's FileOutputCommitter uses: a killed write
+    leaves no marker, so the stage reruns); a committed stage is read
+    back without calling ``build``, and an uncommitted one is built,
+    written and read back.
 
-    Exact dedup is the survivors form (groupBy winners + semi-join on the
-    unique id) rather than a window over the content hash: a
-    mass-duplicated page gives the window's hot partition 30% of the corpus
-    with no map-side combine, while the groupBy collapses it to one row per
-    input partition and the text column never shuffles
-    (operators/dedup.exact_dedup_survivors)."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("text"),
-        lang_id_col(F.col(text_col)).alias("lang_id"),
-        quality_score_col(F.col(text_col)).alias("quality_score"),
-    )
-    filtered = base.where(
-        (F.col("lang_id") == lang) & (F.col("quality_score") >= min_quality)
-    )
-    return dedup.exact_dedup_survivors(filtered, "doc_id", "text")
+    A ``params-<md5-of-params>`` marker file at the checkpoint root guards
+    against silently reusing stages computed under DIFFERENT parameters
+    (r4 ADVICE) — no file contents to read, existence IS the check. On
+    mismatch (a marker for other params, or committed stages with no
+    marker at all, e.g. a pre-upgrade dir), every stage _SUCCESS marker
+    is deleted FIRST, then the new marker is written: a kill at any point
+    leaves either invalidated stages (safe rerun) or a marker that
+    truthfully covers every stage committed after it. Matching marker →
+    plain resume, untouched."""
+    if ckpt_dir is None:
+        return lambda name, build: build()
+    import hashlib
+    import json
 
+    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    root = hadoop_path(ckpt_dir)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fp = hashlib.md5(json.dumps(params, sort_keys=True).encode()).hexdigest()
+    marker = hadoop_path(os.path.join(ckpt_dir, f"params-{fp}"))
+    if not fs.exists(marker):
+        if fs.exists(root):
+            stale = fs.globStatus(
+                hadoop_path(os.path.join(ckpt_dir, "params-*")))
+            for st in stale or []:
+                fs.delete(st.getPath(), False)
+            for name in ("exact", "pairs", "clusters"):
+                fs.delete(
+                    hadoop_path(os.path.join(ckpt_dir, name, "_SUCCESS")),
+                    False,
+                )
+        fs.create(marker, True).close()
 
-def _cluster_losers(clusters: DataFrame) -> DataFrame:
-    """Every doc of a connected component except its canonical (minimum)
-    id — the transitive mode's drop set."""
-    return clusters.where(F.col("doc_id") != F.col("canonical_id")).select(
-        "doc_id"
-    )
+    def stage(name: str, build) -> DataFrame:
+        path = os.path.join(ckpt_dir, name)
+        if not fs.exists(hadoop_path(os.path.join(path, "_SUCCESS"))):
+            build().write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    return stage
 
 
 def curate_documents(
@@ -88,6 +105,7 @@ def curate_documents(
     band_rows: int = 2,
     transitive: bool = False,
     exact_substr_k: int | None = None,
+    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Returns the surviving (doc_id, token-stats) rows after all filters.
 
@@ -101,6 +119,13 @@ def curate_documents(
     cache slot, release_survivors_cache(); inside a
     dedup.dedup_cache_scope the scope owns it).
 
+    Exact dedup is the survivors form (groupBy winners + semi-join on the
+    unique id) rather than a window over the content hash: a
+    mass-duplicated page gives the window's hot partition 30% of the corpus
+    with no map-side combine, while the groupBy collapses it to one row per
+    input partition and the text column never shuffles
+    (operators/dedup.exact_dedup_survivors).
+
     ``transitive=True`` replaces the one-pass pair drop with connected
     components over the band pairs (operators.graph.dedup_clusters):
     exactly ONE survivor per near-dup CLUSTER. The one-pass rule drops any
@@ -113,20 +138,61 @@ def curate_documents(
     through the band join at CALL time (iterative algorithms checkpoint
     and count eagerly); set session confs before calling, not between
     construction and action.
-    """
-    exact = _filtered_exact(docs, id_col, text_col, lang, min_quality)
 
+    ``checkpoint_dir`` (implies ``transitive``) commits three stages as
+    parquet, so a killed job resumes PAST completed stages instead of
+    re-running them — in particular past the iterative
+    connected-components step, whose rounds are the expensive part on a
+    big pair graph:
+
+        <ckpt>/exact     filters + exact-dedup survivors (with text)
+        <ckpt>/pairs     MinHash star edges over the survivors
+        <ckpt>/clusters  connected components of the pairs (EAGER stage)
+
+    A parameter fingerprint over the six stage parameters
+    (``_stage_store``) makes a rerun with other parameters recompute every
+    stage. ``exact_substr_k`` is not among them: the ExactSubstr cut runs
+    over the committed stages. Results equal ``transitive=True`` without
+    a checkpoint dir — pinned by tests/test_curation_and_sources.py.
+    """
+    transitive = transitive or checkpoint_dir is not None
+    stage = _stage_store(docs.sparkSession, checkpoint_dir, {
+        "id_col": id_col, "text_col": text_col, "lang": lang,
+        "min_quality": min_quality, "minhash_k": minhash_k,
+        "band_rows": band_rows,
+    })
+
+    def exact_survivors() -> DataFrame:
+        base = docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(text_col).alias("text"),
+            lang_id_col(F.col(text_col)).alias("lang_id"),
+            quality_score_col(F.col(text_col)).alias("quality_score"),
+        )
+        filtered = base.where(
+            (F.col("lang_id") == lang) & (F.col("quality_score") >= min_quality)
+        )
+        return dedup.exact_dedup_survivors(filtered, "doc_id", "text")
+
+    exact = stage("exact", exact_survivors)
     # near-dup drop: any doc sharing a MinHash band with a lower id is
     # dropped. STAR edges, not the pair clique — identical losers and
     # identical components, O(bucket) instead of O(bucket^2) rows when a
     # templated crawl makes one LSH bucket hot (dedup.minhash_star_edges).
-    pairs = dedup.minhash_star_edges(
+    pairs = stage("pairs", lambda: dedup.minhash_star_edges(
         exact, "doc_id", "text", k=minhash_k, band_rows=band_rows
-    )
+    ))
     if transitive:
-        from ..operators.graph import dedup_clusters
+        from ..operators import graph
 
-        losers = _cluster_losers(dedup_clusters(pairs))
+        # the EAGER iterative stage: with a checkpoint dir it reads only
+        # the committed id-pair table (text lineage ended at the pairs
+        # commit) — the one stage most worth resuming past
+        clusters = stage("clusters", lambda: graph.dedup_clusters(pairs))
+        # every doc of a component except its canonical (minimum) id
+        losers = clusters.where(
+            F.col("doc_id") != F.col("canonical_id")
+        ).select("doc_id")
     else:
         losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     survivors = exact.join(losers, "doc_id", "left_anti")
@@ -143,121 +209,3 @@ def curate_documents(
             .select("doc_id", "lang_id", "quality_score", "clean_text")
         )
     return survivors.select("doc_id", "lang_id", "quality_score")
-
-
-def _invalidate_stale_checkpoints(
-    spark: SparkSession, ckpt_dir: str, params: dict
-) -> None:
-    """Guard against silently reusing checkpoints computed under DIFFERENT
-    parameters (r4 ADVICE): a ``params-<md5-of-params>`` marker file at the
-    checkpoint root records the parameter fingerprint — no file contents to
-    read, existence IS the check. On mismatch (a marker for other params,
-    or committed stages with no marker at all, e.g. a pre-upgrade dir),
-    every stage _SUCCESS marker is deleted FIRST, then the new marker is
-    written: a kill at any point leaves either invalidated stages (safe
-    rerun) or a marker that truthfully covers every stage committed after
-    it. Matching marker → plain resume, untouched."""
-    import hashlib
-    import json
-
-    fp = hashlib.md5(
-        json.dumps(params, sort_keys=True).encode()
-    ).hexdigest()
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    root = hadoop_path(ckpt_dir)
-    fs = root.getFileSystem(conf)
-    marker = hadoop_path(os.path.join(ckpt_dir, f"params-{fp}"))
-    if fs.exists(marker):
-        return
-    if fs.exists(root):
-        stale = fs.globStatus(hadoop_path(os.path.join(ckpt_dir, "params-*")))
-        for st in stale or []:
-            fs.delete(st.getPath(), False)
-        for stage in ("exact", "pairs", "clusters"):
-            fs.delete(
-                hadoop_path(os.path.join(ckpt_dir, stage, "_SUCCESS")), False
-            )
-    fs.create(marker, True).close()
-
-
-def _stage_done(spark: SparkSession, path: str) -> bool:
-    """A stage is committed iff its parquet _SUCCESS marker exists (the
-    same commit protocol Spark's own FileOutputCommitter uses — a killed
-    write leaves no marker, so the stage reruns)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(os.path.join(path, "_SUCCESS"))
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    return fs.exists(hpath)
-
-
-def curate_documents_checkpointed(
-    spark: SparkSession,
-    docs: DataFrame,
-    ckpt_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang: str = "en",
-    min_quality: float = 0.3,
-    minhash_k: int = 8,
-    band_rows: int = 2,
-) -> DataFrame:
-    """Transitive curation with per-stage parquet checkpoints, so a killed
-    job resumes PAST completed stages instead of re-running them — in
-    particular past the iterative connected-components step, whose rounds
-    are the expensive part on a big pair graph:
-
-        <ckpt>/exact     filters + exact-dedup survivors (with text)
-        <ckpt>/pairs     MinHash star edges over the survivors
-        <ckpt>/clusters  connected components of the pairs (EAGER stage)
-
-    Each stage is skipped when its parquet _SUCCESS marker exists (the
-    atomic-commit convention run_job's manifest also relies on); a stage
-    killed mid-write leaves no marker and reruns cleanly. A
-    ``params-<fingerprint>`` marker at the checkpoint root ties the stages
-    to THESE parameters — rerunning against an existing ckpt_dir with
-    different (lang, min_quality, minhash_k, band_rows) invalidates and
-    recomputes every stage instead of silently returning results computed
-    under the old parameters. Returns the
-    surviving (doc_id, lang_id, quality_score) rows, lazily, from the
-    committed tables.
-
-    Results are identical to ``curate_documents(transitive=True)`` —
-    pinned by tests/test_curation_and_sources.py."""
-    exact_path = os.path.join(ckpt_dir, "exact")
-    pairs_path = os.path.join(ckpt_dir, "pairs")
-    clusters_path = os.path.join(ckpt_dir, "clusters")
-
-    _invalidate_stale_checkpoints(spark, ckpt_dir, {
-        "id_col": id_col, "text_col": text_col, "lang": lang,
-        "min_quality": min_quality, "minhash_k": minhash_k,
-        "band_rows": band_rows,
-    })
-
-    if not _stage_done(spark, exact_path):
-        _filtered_exact(docs, id_col, text_col, lang, min_quality).write.mode(
-            "overwrite"
-        ).parquet(exact_path)
-    exact = spark.read.parquet(exact_path)
-
-    if not _stage_done(spark, pairs_path):
-        dedup.minhash_star_edges(
-            exact, "doc_id", "text", k=minhash_k, band_rows=band_rows
-        ).write.mode("overwrite").parquet(pairs_path)
-    pairs = spark.read.parquet(pairs_path)
-
-    if not _stage_done(spark, clusters_path):
-        from ..operators.graph import dedup_clusters
-
-        # the EAGER iterative stage: reads only the committed id-pair
-        # table (text lineage ended at the pairs checkpoint), runs the
-        # CC rounds, commits clusters — the one stage worth resuming past
-        dedup_clusters(pairs).write.mode("overwrite").parquet(clusters_path)
-    clusters = spark.read.parquet(clusters_path)
-
-    return (
-        exact.join(_cluster_losers(clusters), "doc_id", "left_anti")
-        .select("doc_id", "lang_id", "quality_score")
-    )

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators.extract import fused_extract
 from ..schemas import SCALAR_FIELDS
+from ..sources.tables import read_committed
 
 DEFAULT_BUCKETS = 64
 
@@ -238,10 +239,8 @@ def results_to_spans(results: DataFrame) -> DataFrame:
 
 
 def _manifest_run_ids(spark: SparkSession, manifest_path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(manifest_path).select("run_id").distinct()
-    except Exception:
-        return None  # first run: no manifest yet
+    manifest = read_committed(spark, manifest_path)
+    return None if manifest is None else manifest.select("run_id").distinct()
 
 
 def _committed_urls(
@@ -254,11 +253,8 @@ def _committed_urls(
     reprocessed and the orphans are superseded (readers go through
     read_committed_results, which applies the same filter)."""
     runs = _manifest_run_ids(spark, manifest_path)
-    if runs is None:
-        return None
-    try:
-        results = spark.read.parquet(results_path)
-    except Exception:
+    results = None if runs is None else read_committed(spark, results_path)
+    if results is None:
         return None
     return (
         results.select("url", "run_id")
@@ -270,11 +266,13 @@ def _committed_urls(
 def read_committed_results(spark: SparkSession, output_dir: str) -> DataFrame:
     """The consumer-facing view of the results table: only rows from runs
     the manifest acknowledged, with orphan duplicates from crashed runs
-    removed (first committed run per url wins)."""
+    removed (first committed run per url wins). Before any manifest
+    exists no run is acknowledged, and the view is empty."""
     results = spark.read.parquet(f"{output_dir}/results")
     runs = _manifest_run_ids(spark, f"{output_dir}/manifest")
-    if runs is not None:
-        results = results.join(F.broadcast(runs), "run_id", "left_semi")
+    if runs is None:
+        return results.limit(0)
+    results = results.join(F.broadcast(runs), "run_id", "left_semi")
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("url").orderBy("run_id")
@@ -288,11 +286,10 @@ def read_committed_results(spark: SparkSession, output_dir: str) -> DataFrame:
 def _committed_count(spark: SparkSession, manifest_path: str) -> int:
     """Committed row count from the manifest (a few rows per run-bucket) —
     never scans the results table."""
-    try:
-        row = spark.read.parquet(manifest_path).agg(F.sum("rows")).first()
-        return int(row[0] or 0)
-    except Exception:
+    manifest = read_committed(spark, manifest_path)
+    if manifest is None:
         return 0
+    return int(manifest.agg(F.sum("rows")).first()[0] or 0)
 
 
 # Below this many committed urls the resume anti-join broadcasts the

@@ -26,6 +26,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    # A live session is returned as it is: getOrCreate would re-apply this
+    # builder's modifiable confs (shuffle partitions, the codec,
+    # maxPartitionBytes) to it, changing them under every other user of
+    # the session. Every setting below applies only to a session this
+    # call creates. getOrCreate keys on the process-wide session, not the
+    # thread's active one, so both are checked, and a session whose
+    # context was stopped is not live (pyspark's own getOrCreate test).
+    live = (
+        SparkSession.getActiveSession() or SparkSession._instantiatedSession
+    )
+    if live is not None and live._sc._jsc is not None:
+        return live
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         # Respect a master provided by spark-submit (--master yarn/k8s/...):
@@ -107,32 +119,4 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    # getOrCreate with a live session is a shared-session trap, so warn
-    # (never silently): pyspark applies the MODIFIABLE SQL confs from this
-    # builder (shuffle partitions, maxPartitionBytes, session timeZone) to
-    # the EXISTING session — mutating it for every other user of that
-    # session — while static/builder-only settings (master, app name,
-    # driver memory, warehouse dir) are ignored. In-process callers
-    # (tests, notebooks) sharing one session is intentional; callers that
-    # need a cleanly-configured session must stop the live one first.
-    # NOTE: getOrCreate keys on the process-wide instantiated session, not
-    # the thread-local active one — check the same scope.
-    existing = (
-        SparkSession.getActiveSession()
-        or getattr(SparkSession, "_instantiatedSession", None)
-    )
-    if existing is not None:
-        import logging
-
-        requested = {
-            "shuffle_partitions": shuffle_partitions,
-            **(extra_conf or {}),
-        }
-        logging.getLogger(__name__).warning(
-            "get_spark: a SparkSession already exists; getOrCreate will "
-            "APPLY modifiable SQL confs from this call to the shared "
-            "session (mutating it for all its users) and IGNORE static "
-            "settings like master/app_name (requested: %s).",
-            requested,
-        )
     return builder.getOrCreate()

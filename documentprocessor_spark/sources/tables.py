@@ -32,6 +32,25 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table a job committed at ``path``, or None when nothing
+    is committed there: the path is missing (``PATH_NOT_FOUND``), or it is
+    a directory with no data files — empty, or holding only the
+    ``_temporary`` of a first write killed before its commit
+    (``UNABLE_TO_INFER_SCHEMA``). Every other failure raises: a corrupt
+    file, a permission or filesystem error. Read as "nothing committed",
+    an unreadable commit marker would make a resumed job redo and
+    re-append everything it had committed."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 def write_results(df: DataFrame, path_or_table: str, partition_col: str = "url_bucket") -> None:
     spark = df.sparkSession
     if "://" not in path_or_table and "." in path_or_table and iceberg_available(spark):

@@ -8,11 +8,13 @@ plans.curate over a documents parquet table.
         [--chunk-tokens 512 [--chunk-stride 256]] [--winnow-k 5 [--winnow-w 4]]
 
 Writes the surviving rows as parquet under <output>/curated and prints
-one JSON stats line. ``--checkpoint`` switches to the per-stage
-checkpointed plan (curate_documents_checkpointed — transitive by
-construction, resumable past the connected-components stage after a
-kill); without it the single-plan curate_documents runs, honoring
-``--transitive`` and ``--exact-substr-k``.
+one JSON stats line. Every mode runs the one curate_documents plan,
+honoring ``--transitive`` and ``--exact-substr-k``. ``--checkpoint``
+commits its exact, pairs and clusters stages under the given dir
+(transitive by construction, resumable past the connected-components
+stage after a kill); the ExactSubstr cut runs over the committed stages,
+so ``--checkpoint --exact-substr-k K`` writes the same clean_text as
+``--transitive --exact-substr-k K``.
 
 Optional post-curation stages over the SURVIVORS (both map-only over the
 curated set; they run on clean_text when --exact-substr-k produced one,
@@ -104,16 +106,13 @@ def _run(spark, args) -> None:
     from py4j.protocol import Py4JJavaError
     from pyspark.sql import functions as F
 
-    from documentprocessor_spark.plans.curate import (
-        curate_documents,
-        curate_documents_checkpointed,
-    )
+    from documentprocessor_spark.plans.curate import curate_documents
 
     t0 = time.monotonic()
     docs = spark.read.parquet(args.input)
     # rows_in rides the plan's own scan via observe() — a driver-side
     # count() here would be a full EXTRA pass over a TB-scale input
-    # (review finding r4). The checkpointed plan runs multiple actions
+    # (review finding r4). A checkpointed run executes several actions
     # and may legitimately SKIP the input scan on resume, so it counts
     # input rows with an explicit (documented) pass instead. So does a
     # run whose observed scan left the final plan: when a stage comes out
@@ -122,20 +121,12 @@ def _run(spark, args) -> None:
     obs_in = None
     if not args.checkpoint:
         docs, obs_in = _counted(docs, "curate-in")
-    common = dict(
-        id_col=args.id_col, text_col=args.text_col, lang=args.lang,
+    out = curate_documents(
+        docs, id_col=args.id_col, text_col=args.text_col, lang=args.lang,
         min_quality=args.min_quality, minhash_k=args.minhash_k,
-        band_rows=args.band_rows,
+        band_rows=args.band_rows, transitive=args.transitive,
+        exact_substr_k=args.exact_substr_k, checkpoint_dir=args.checkpoint,
     )
-    if args.checkpoint:
-        out = curate_documents_checkpointed(
-            spark, docs, args.checkpoint, **common
-        )
-    else:
-        out = curate_documents(
-            docs, transitive=args.transitive,
-            exact_substr_k=args.exact_substr_k, **common
-        )
     n_out = _write_counted(out, args.output, "curated")
     n_in = None
     if obs_in is not None:

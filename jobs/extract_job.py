@@ -15,6 +15,11 @@ writes url-hash-bucketed results + spans + a per-partition manifest, and
 resumes from the last manifest-acknowledged commit if killed. On a
 cluster, pass the master/executor confs on the spark-submit command line
 as usual; the session factory only fills in defaults when unset.
+
+The ``session.*`` config keys (app_name, shuffle_partitions,
+max_partition_bytes) apply only when the job creates its session, as
+under spark-submit. Run in-process on a live session (``main(...,
+stop_session=False)``), the job uses that session as it is.
 """
 
 from __future__ import annotations

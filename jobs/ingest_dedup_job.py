@@ -59,6 +59,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
 
     from documentprocessor_spark.operators import dedup
     from documentprocessor_spark.session import get_spark
+    from documentprocessor_spark.sources.tables import read_committed
 
     spark = get_spark(app_name="dp-ingest-dedup")
     t0 = time.monotonic()
@@ -67,25 +68,10 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     hashes_dir = f"{args.index}/content_hashes"
     bands_dir = f"{args.index}/bands"
 
-    def _try_read(path):
-        # Missing path => bootstrap mode. Any OTHER read failure (corrupt
-        # parquet, permissions, transient FS error) must fail loudly: the
-        # old bare except silently switched to bootstrap, keeping every
-        # delta doc and — with --update-index — appending alongside the
-        # unreadable index (r5 advice). Path-not-found is detected from
-        # the AnalysisException class so non-local filesystems work too.
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(path)
-        except AnalysisException as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
-
-    ih = _try_read(hashes_dir)
-    ib = _try_read(bands_dir)
+    # a missing or empty index bootstraps; an unreadable one raises
+    # rather than keep every delta doc and append beside it
+    ih = read_committed(spark, hashes_dir)
+    ib = read_committed(spark, bands_dir)
     bootstrap = ih is None
 
     if bootstrap:

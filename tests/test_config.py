@@ -232,6 +232,36 @@ def test_extract_job_wires_session_config(spark, pages_parquet, tmp_path,
     }
 
 
+def test_jobs_leave_a_live_sessions_confs_alone(spark, pages_parquet, tmp_path,
+                                               capsys):
+    """A job run in-process on a live session uses it as it is: neither
+    extract_job nor curate_job re-applies the session factory's codec or
+    shuffle partitions to it."""
+    from jobs.curate_job import main as curate_main
+
+    codec, parts = ("spark.sql.parquet.compression.codec",
+                    "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in (codec, parts)}
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog and the cat")],
+        ["doc_id", "text"],
+    ).write.parquet(docs)
+    try:
+        spark.conf.set(codec, "snappy")
+        spark.conf.set(parts, "4")
+        _run_job_cli(spark, ["--input", pages_parquet,
+                             "--output", str(tmp_path / "out")])
+        curate_main(["--input", docs, "--output", str(tmp_path / "cur")],
+                    stop_session=False)
+        assert (spark.conf.get(codec), spark.conf.get(parts)) == ("snappy",
+                                                                  "4")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    capsys.readouterr()
+
+
 def test_extract_job_apply_quality_config(spark, pages_parquet, tmp_path, capsys):
     """extraction.apply_quality wires H11 confidence filter + H10 totals
     verification into the committed results."""

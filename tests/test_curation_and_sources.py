@@ -281,13 +281,10 @@ CKPT_DOCS = [
 
 
 def test_checkpointed_curation_matches_transitive(spark, tmp_path):
-    from documentprocessor_spark.plans.curate import (
-        curate_documents_checkpointed)
-
     docs = spark.createDataFrame(CKPT_DOCS, ["doc_id", "text"])
     want = {r["doc_id"] for r in
             curate_documents(docs, transitive=True).collect()}
-    got_df = curate_documents_checkpointed(spark, docs, str(tmp_path / "ck"))
+    got_df = curate_documents(docs, checkpoint_dir=str(tmp_path / "ck"))
     got = {r["doc_id"] for r in got_df.collect()}
     assert got == want and 1 in got and 4 in got and 6 in got
 
@@ -309,7 +306,7 @@ def test_checkpointed_curation_resumes_past_completed_stages(
     docs = spark.createDataFrame(CKPT_DOCS, ["doc_id", "text"])
     ck = str(tmp_path / "ck")
     first = {r["doc_id"] for r in
-             curate_mod.curate_documents_checkpointed(spark, docs, ck).collect()}
+             curate_mod.curate_documents(docs, checkpoint_dir=ck).collect()}
 
     def boom(*a, **k):
         raise AssertionError("completed stage was re-run on resume")
@@ -320,7 +317,7 @@ def test_checkpointed_curation_resumes_past_completed_stages(
     monkeypatch.setattr(dedup_mod, "minhash_star_edges", boom)
     monkeypatch.setattr(graph_mod, "dedup_clusters", boom)
     again = {r["doc_id"] for r in
-             curate_mod.curate_documents_checkpointed(spark, docs, ck).collect()}
+             curate_mod.curate_documents(docs, checkpoint_dir=ck).collect()}
     assert again == first
 
     # killed mid-CC: clusters commit gone, pairs still committed -> only
@@ -328,7 +325,7 @@ def test_checkpointed_curation_resumes_past_completed_stages(
     shutil.rmtree(str(tmp_path / "ck" / "clusters"))
     monkeypatch.setattr(graph_mod, "dedup_clusters", real_dedup_clusters)
     resumed = {r["doc_id"] for r in
-               curate_mod.curate_documents_checkpointed(spark, docs, ck).collect()}
+               curate_mod.curate_documents(docs, checkpoint_dir=ck).collect()}
     assert resumed == first
 
 
@@ -336,24 +333,21 @@ def test_checkpointed_curation_invalidates_on_param_change(spark, tmp_path):
     """Rerunning against an existing ckpt_dir with DIFFERENT parameters
     must recompute the stages, not silently return results computed under
     the old parameters (r4 ADVICE)."""
-    from documentprocessor_spark.plans.curate import (
-        curate_documents_checkpointed)
-
     docs = spark.createDataFrame(CKPT_DOCS, ["doc_id", "text"])
     ck = str(tmp_path / "ck")
     first = {r["doc_id"] for r in
-             curate_documents_checkpointed(spark, docs, ck).collect()}
+             curate_documents(docs, checkpoint_dir=ck).collect()}
     assert first  # baseline keeps something
 
     # an impossible quality bar: stale-checkpoint reuse would return
     # `first`, a correct invalidation returns nothing
-    strict = curate_documents_checkpointed(
-        spark, docs, ck, min_quality=1.5)
+    strict = curate_documents(
+        docs, checkpoint_dir=ck, min_quality=1.5)
     assert strict.count() == 0
 
     # switching back recomputes again under the original parameters
     back = {r["doc_id"] for r in
-            curate_documents_checkpointed(spark, docs, ck).collect()}
+            curate_documents(docs, checkpoint_dir=ck).collect()}
     assert back == first
 
 
@@ -656,3 +650,84 @@ def test_ingest_dedup_job_cli_bootstrap_then_probe(spark, tmp_path, capsys):
     kept3 = {r["doc_id"] for r in
              spark.read.parquet(str(tmp_path / "out3") + "/kept").collect()}
     assert kept3 == {4}
+
+
+def test_ingest_dedup_job_reads_its_index_by_the_commit_rule(
+        spark, tmp_path, capsys):
+    """A missing index dir, or one whose tables hold no data files,
+    bootstraps; a corrupt index file raises instead of keeping every
+    delta doc."""
+    import json
+    import os
+
+    from jobs.ingest_dedup_job import main
+
+    src = str(tmp_path / "delta")
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        ["doc_id", "text"],
+    ).write.parquet(src)
+
+    def run(index, out):
+        main(["--input", src, "--index", index, "--output",
+              str(tmp_path / out), "--update-index"], stop_session=False)
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    empty = tmp_path / "empty_index"
+    for table in ("content_hashes", "bands"):
+        os.makedirs(empty / table / "_temporary" / "0")
+    assert run(str(empty), "out0")["probe"] == "bootstrap"
+
+    idx = str(tmp_path / "index")
+    assert run(idx, "out1")["probe"] == "bootstrap"
+    for f in os.listdir(f"{idx}/content_hashes"):
+        if f.endswith(".parquet"):
+            with open(f"{idx}/content_hashes/{f}", "wb") as fh:
+                fh.write(b"not a parquet file")
+        elif f.endswith(".crc"):
+            os.remove(f"{idx}/content_hashes/{f}")
+    with pytest.raises(Exception):
+        run(idx, "out2")
+    assert not os.path.exists(tmp_path / "out2" / "kept")
+
+
+def _curate_cli(tmp_path, out, *flags):
+    from jobs.curate_job import main
+
+    main(["--input", str(tmp_path / "docs"), "--output", str(tmp_path / out),
+          "--min-quality", "0.0", "--exact-substr-k", "3", *flags],
+         stop_session=False)
+
+
+def test_checkpointed_curate_job_writes_the_exact_substr_cut(
+        spark, tmp_path, capsys, monkeypatch):
+    """--checkpoint --exact-substr-k K writes the same curated rows,
+    clean_text included, as --transitive --exact-substr-k K; a rerun over
+    the committed checkpoint rebuilds none of its stages."""
+    from documentprocessor_spark.operators import dedup as dedup_mod
+    from documentprocessor_spark.operators import graph as graph_mod
+
+    spark.createDataFrame(CKPT_DOCS, ["doc_id", "text"]).write.parquet(
+        str(tmp_path / "docs"))
+    ck = str(tmp_path / "ck")
+
+    def curated(out):
+        return sorted(spark.read.parquet(str(tmp_path / out / "curated"))
+                      .select("doc_id", "lang_id", "quality_score",
+                              "clean_text").collect())
+
+    _curate_cli(tmp_path, "trans", "--transitive")
+    _curate_cli(tmp_path, "ckpt", "--checkpoint", ck)
+    want = curated("trans")
+    assert want and curated("ckpt") == want
+
+    def boom(*a, **k):
+        raise AssertionError("a committed stage was rebuilt")
+
+    for mod, name in ((dedup_mod, "exact_dedup_survivors"),
+                      (dedup_mod, "minhash_star_edges"),
+                      (graph_mod, "dedup_clusters")):
+        monkeypatch.setattr(mod, name, boom)
+    _curate_cli(tmp_path, "again", "--checkpoint", ck)
+    assert curated("again") == want
+    capsys.readouterr()

@@ -217,6 +217,56 @@ def test_run_job_resume_skips_committed(spark, corpus_pages, tmp_path):
     ).count() == 0
 
 
+def test_run_job_raises_on_a_corrupt_manifest(spark, corpus_pages, tmp_path):
+    """An unreadable manifest is not "nothing committed": the resumed run
+    raises before it extracts, and appends no result rows."""
+    import glob
+    import os
+
+    out = str(tmp_path / "job")
+    run_job(spark, corpus_pages.limit(30), out, n_buckets=4)
+    for f in glob.glob(f"{out}/manifest/*"):
+        if f.endswith(".parquet"):
+            with open(f, "wb") as fh:
+                fh.write(b"not a parquet file")
+        elif f.endswith(".crc"):
+            os.remove(f)
+    with pytest.raises(Exception):
+        run_job(spark, corpus_pages, out, n_buckets=4)
+    assert spark.read.parquet(f"{out}/results").count() == 30
+
+
+def test_manifest_of_only_temporary_is_nothing_committed(
+        spark, corpus_pages, tmp_path):
+    """A first run killed while its manifest tasks were writing leaves
+    result rows and a manifest dir holding only ``_temporary`` (an
+    uncommitted task attempt's file): nothing is committed, so
+    the read view is empty and the rerun commits every url exactly once."""
+    import os
+    import shutil
+
+    from documentprocessor_spark.plans.pipeline import read_committed_results
+
+    out = str(tmp_path / "job")
+    run_job(spark, corpus_pages.limit(30), out, n_buckets=4)
+    attempt = f"{out}/manifest/_temporary/0/_temporary/attempt_0"
+    os.makedirs(attempt)
+    for f in os.listdir(f"{out}/manifest"):
+        if f.endswith(".parquet"):
+            shutil.move(f"{out}/manifest/{f}", attempt)
+    for f in os.listdir(f"{out}/manifest"):
+        if f != "_temporary":
+            os.remove(f"{out}/manifest/{f}")
+    assert read_committed_results(spark, out).count() == 0
+
+    stats = run_job(spark, corpus_pages, out, n_buckets=4)
+    assert stats["rows_skipped_resume"] == 0
+    assert stats["rows_total_committed"] == corpus_pages.count()
+    committed = read_committed_results(spark, out)
+    assert committed.count() == corpus_pages.count()
+    assert committed.select("url").distinct().count() == corpus_pages.count()
+
+
 def test_run_job_rerun_compiles_no_new_classes(
         spark, corpus_pages, tmp_path, codegen_compiles):
     """A second run_job into a fresh output dir reuses the first run's
