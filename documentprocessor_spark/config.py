@@ -12,9 +12,12 @@ deployment with a stale config path must still run; the explicit CLI flags
 stay authoritative above both).
 
 The keys are this engine's knobs, not the reference's (no Paddle/torch in a
-Spark cluster image): job routing (format/mode/buckets/resume), extraction
-kernel options (entry_c quirk twin, H10/H11 thresholds), and session tuning
-(shuffle partitions, scan split size).
+Spark cluster image): job routing (format, mode, buckets, resume,
+debug_samples), extraction kernel options (entry_c quirk twin,
+apply_quality and its H10/H11 settings min_confidence and verify_totals),
+session tuning (app_name, shuffle_partitions, max_partition_bytes) and the
+model (name_or_path, type, device). Run counts are not a key: every
+run_job reports them, observed on the plan it runs.
 """
 
 from __future__ import annotations
@@ -33,7 +36,6 @@ DEFAULT_CONFIG: Dict[str, Any] = {
         "mode": "heuristic",      # heuristic | model
         "buckets": 64,            # url-hash result partitions
         "resume": True,           # skip manifest-committed urls
-        "stats": False,           # collect skip/count stats (extra scans)
         "debug_samples": 0,       # >0: write N-row per-stage debug samples
     },
     "extraction": {

@@ -48,59 +48,3 @@ def normalize_words_col(
 def raw_text_col(words: Column) -> Column:
     """Space-joined word texts in array order."""
     return F.array_join(F.transform(words, lambda w: w["text"]), " ")
-
-
-def vendor_top3_col(words: Column) -> Column:
-    """Native-SQL H1 vendor extraction (field_extractor.py:88-134).
-
-    array_sort is guaranteed stable in Spark, matching Python ``sorted``:
-    ties on y0 keep OCR order. Returns a FIELD struct (null for empty docs).
-    """
-    top = F.slice(
-        F.array_sort(
-            words, lambda a, b: F.when(a["y0"] < b["y0"], -1)
-            .when(a["y0"] > b["y0"], 1)
-            .otherwise(0),
-        ),
-        1,
-        3,
-    )
-    n = F.size(top)
-    return F.when(
-        n > 0,
-        F.struct(
-            F.array_join(F.transform(top, lambda w: w["text"]), " ").alias("value"),
-            (
-                F.aggregate(
-                    top, F.lit(0.0), lambda acc, w: acc + w["confidence"]
-                )
-                / n.cast("double")
-            ).alias("confidence"),
-            F.struct(
-                F.array_min(F.transform(top, lambda w: w["x0"])).alias("x0"),
-                F.array_min(F.transform(top, lambda w: w["y0"])).alias("y0"),
-                F.array_max(F.transform(top, lambda w: w["x1"])).alias("x1"),
-                F.array_max(F.transform(top, lambda w: w["y1"])).alias("y1"),
-            ).alias("box"),
-        ),
-    )
-
-
-def currency_col(text: Column) -> Column:
-    """Native-SQL H5 currency detection over the joined text
-    (receipt_processor.py:499-510 — USD/EUR/GBP, box always null)."""
-    value = (
-        F.when(text.contains("$") | text.contains("USD"), F.lit("USD"))
-        .when(text.contains("€") | text.contains("EUR"), F.lit("EUR"))
-        .when(text.contains("£") | text.contains("GBP"), F.lit("GBP"))
-    )
-    return F.when(
-        value.isNotNull(),
-        F.struct(
-            value.alias("value"),
-            F.lit(0.9).alias("confidence"),
-            F.lit(None).cast(
-                "struct<x0:int,y0:int,x1:int,y1:int>"
-            ).alias("box"),
-        ),
-    )

@@ -26,11 +26,6 @@ PAGE_H = 1200
 _CONF_TABLE = tuple(round(0.90 + k / 100.0, 2) for k in range(10))
 
 
-def word_confidence(line_idx: int, word_idx: int) -> float:
-    """Deterministic per-word confidence in [0.90, 0.99]."""
-    return _CONF_TABLE[(line_idx * 7 + word_idx * 3) % 10]
-
-
 def layout_words(lines: list[str]) -> list[tuple]:
     """Map text lines to word tuples (text, x0, y0, x1, y1, conf).
 

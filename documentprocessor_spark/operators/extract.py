@@ -9,9 +9,10 @@ Arrow-batched, ~thousands of documents per batch, zero per-row Python
 dispatch at the Spark layer. Each document is a few hundred words, so the
 per-doc fold is microseconds; the batch amortizes all serialization.
 
-Native-SQL variants of the SQL-expressible sub-operators (H1 vendor, H5
-currency, O4 normalize, O5 raw text) live in ``functions.boxes`` and are
-cross-checked against this kernel in the test suite.
+The SQL-expressible box/text steps (O4 normalize, O5 raw text) are native
+column expressions in ``functions.boxes``; H1 vendor and H5 currency run
+only inside this kernel (their SQL forms are the `h1_vendor_top3` and
+`h5_keyword_case` driver queries, certified against DuckDB oracles).
 
 Failure semantics follow the reference (receipt_processor.py:221-225): a
 document that throws yields status='failed' + error message — never a failed

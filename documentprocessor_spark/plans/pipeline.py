@@ -35,7 +35,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from ..observe import counted, observed_rows
 from ..operators.extract import fused_extract
 from ..schemas import SCALAR_FIELDS
 from ..sources.tables import read_committed
@@ -219,7 +221,9 @@ def validate_against_golden(results: DataFrame, golden: DataFrame) -> DataFrame:
 
 
 def results_to_spans(results: DataFrame) -> DataFrame:
-    """Wide results → long spans table (url, field, value, confidence, box)."""
+    """Wide results → long spans table (url, run_id, field, value,
+    confidence, box). The run_id ties each span to the manifest entry that
+    commits it, as for results rows."""
     span_structs = F.array(
         *[
             F.struct(
@@ -232,35 +236,40 @@ def results_to_spans(results: DataFrame) -> DataFrame:
         ]
     )
     return (
-        results.select("url", F.explode(span_structs).alias("s"))
+        results.select("url", "run_id", F.explode(span_structs).alias("s"))
         .where(F.col("s.value").isNotNull())
-        .select("url", "s.field", "s.value", "s.confidence", "s.box")
+        .select("url", "run_id", "s.field", "s.value", "s.confidence", "s.box")
     )
 
 
-def _manifest_run_ids(spark: SparkSession, manifest_path: str) -> DataFrame | None:
-    manifest = read_committed(spark, manifest_path)
-    return None if manifest is None else manifest.select("run_id").distinct()
+def _acknowledged(rows: DataFrame, manifest: DataFrame) -> DataFrame:
+    """``rows`` written by runs the manifest acknowledges. The manifest is
+    written LAST, so it is the commit marker: rows of a run killed before
+    its manifest write are orphans, and every committed-state read drops
+    them here."""
+    runs = F.broadcast(manifest.select("run_id").distinct())
+    return rows.join(runs, "run_id", "left_semi")
 
 
 def _committed_urls(
     spark: SparkSession, results_path: str, manifest_path: str
 ) -> DataFrame | None:
     """COMMITTED urls = results rows whose run_id is acknowledged in the
-    manifest. The manifest is written LAST, so it is the commit marker: a
-    run killed after the results write but before the manifest write leaves
-    orphan result rows that are NOT treated as committed — they are
-    reprocessed and the orphans are superseded (readers go through
-    read_committed_results, which applies the same filter)."""
-    runs = _manifest_run_ids(spark, manifest_path)
-    results = None if runs is None else read_committed(spark, results_path)
+    manifest. Orphan result rows of a killed run are NOT committed: their
+    urls are reprocessed and the orphans superseded."""
+    manifest = read_committed(spark, manifest_path)
+    results = None if manifest is None else read_committed(spark, results_path)
     if results is None:
         return None
-    return (
-        results.select("url", "run_id")
-        .join(F.broadcast(runs), "run_id", "left_semi")
-        .select("url")
-    )
+    return _acknowledged(results.select("url", "run_id"), manifest).select("url")
+
+
+def _committed_rows(spark: SparkSession, output_dir: str, table: str) -> DataFrame:
+    """The ``<output_dir>/<table>`` rows of acknowledged runs; none before
+    any manifest exists."""
+    rows = spark.read.parquet(f"{output_dir}/{table}")
+    manifest = read_committed(spark, f"{output_dir}/manifest")
+    return rows.limit(0) if manifest is None else _acknowledged(rows, manifest)
 
 
 def read_committed_results(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -268,18 +277,25 @@ def read_committed_results(spark: SparkSession, output_dir: str) -> DataFrame:
     the manifest acknowledged, with orphan duplicates from crashed runs
     removed (first committed run per url wins). Before any manifest
     exists no run is acknowledged, and the view is empty."""
-    results = spark.read.parquet(f"{output_dir}/results")
-    runs = _manifest_run_ids(spark, f"{output_dir}/manifest")
-    if runs is None:
-        return results.limit(0)
-    results = results.join(F.broadcast(runs), "run_id", "left_semi")
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("url").orderBy("run_id")
     return (
-        results.withColumn("_rn", F.row_number().over(w))
+        _committed_rows(spark, output_dir, "results")
+        .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def read_committed_spans(spark: SparkSession, output_dir: str) -> DataFrame:
+    """The spans of ``read_committed_results``: rows of acknowledged runs,
+    and of each url only its first committed run's, so each (url, field)
+    pair appears once."""
+    first = F.min("run_id").over(Window.partitionBy("url"))
+    return (
+        _committed_rows(spark, output_dir, "spans")
+        .withColumn("_first", first)
+        .where(F.col("run_id") == F.col("_first"))
+        .drop("_first")
     )
 
 
@@ -290,6 +306,17 @@ def _committed_count(spark: SparkSession, manifest_path: str) -> int:
     if manifest is None:
         return 0
     return int(manifest.agg(F.sum("rows")).first()[0] or 0)
+
+
+def _delete_temporary(spark: SparkSession, path: str) -> None:
+    """Delete ``<path>/_temporary``, which only a killed writer leaves: an
+    append's job commit takes every task directory under it, so a dead
+    run's committed tasks would join this run's commit."""
+    jvm = spark.sparkContext._jvm
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/_temporary")
+    tmp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(
+        tmp, True
+    )
 
 
 # Below this many committed urls the resume anti-join broadcasts the
@@ -335,15 +362,16 @@ def run_job(
     n_buckets: int = DEFAULT_BUCKETS,
     resume: bool = True,
     run_id: str | None = None,
-    collect_stats: bool = True,
     extractor=None,
     debug_samples: int = 0,
 ) -> dict:
-    """Execute the extraction job with resume + manifest. Returns run stats.
-
-    ``collect_stats=False`` skips the input/skip counting jobs (each is a
-    full scan + anti-join) — the setting for petabyte corpora, where the
-    manifest already carries the committed totals.
+    """Execute the extraction job with resume + manifest. Returns run stats:
+    ``rows_in`` (pages read), ``rows_skipped_resume`` (pages whose url was
+    already committed) and ``rows_total_committed`` (the manifest's row
+    total after this run). The first two, and the rows this run writes,
+    are Observations on the results write's own plan, not extra passes;
+    the manifest is aggregated once, before the run. A run that commits
+    no rows writes no spans or manifest.
 
     ``extractor`` swaps the extraction stage: a function of the pages
     DataFrame (default extract_from_pages; pass
@@ -356,6 +384,10 @@ def run_job(
     writes exactly one file into each ``url_bucket=`` directory it
     touches (n_buckets files at most), whatever the input's split count.
 
+    One writer per output dir is assumed: before its first write a run
+    deletes the ``_temporary`` dirs of results, spans and manifest, which
+    only a killed writer leaves behind.
+
     ``debug_samples > 0`` additionally writes an N-row sample of each
     pipeline stage under ``<output_dir>/debug/run_id=<id>/`` (see
     ``write_debug_samples``)."""
@@ -363,62 +395,73 @@ def run_job(
     results_path = f"{output_dir}/results"
     spans_path = f"{output_dir}/spans"
     manifest_path = f"{output_dir}/manifest"
+    for path in (results_path, spans_path, manifest_path):
+        _delete_temporary(spark, path)
 
-    todo = pages
-    skipped = 0
-    if resume:
-        committed = _committed_urls(spark, results_path, manifest_path)
-        if committed is not None:
-            n_committed = _committed_count(spark, manifest_path)
-            if n_committed <= BROADCAST_RESUME_LIMIT:
-                committed = F.broadcast(committed)
-            # rescue an under-split source BEFORE the anti-join: the
-            # join's Exchange would make the extractor's own rescue a
-            # no-op, and the kernel would run at the source's split count
-            from ..partitioning import ensure_min_parallelism
+    n_committed = _committed_count(spark, manifest_path)
+    committed = (
+        _committed_urls(spark, results_path, manifest_path) if resume else None
+    )
+    if committed is not None and n_committed <= BROADCAST_RESUME_LIMIT:
+        committed = F.broadcast(committed)
 
-            todo = ensure_min_parallelism(pages).join(
-                committed, "url", "left_anti"
-            )
-            if collect_stats:
-                before = pages.count()
-                skipped = before - todo.count()
+    def unprocessed(df: DataFrame) -> DataFrame:
+        if committed is None:
+            return df
+        # rescue an under-split source BEFORE the anti-join: the join's
+        # Exchange would make the extractor's own rescue a no-op, and the
+        # kernel would run at the source's split count
+        from ..partitioning import ensure_min_parallelism
+
+        return ensure_min_parallelism(df).join(committed, "url", "left_anti")
 
     if debug_samples > 0:
-        write_debug_samples(todo, output_dir, run_id, debug_samples, extractor)
+        # unobserved: the samples' actions must not fill the run's counts
+        write_debug_samples(
+            unprocessed(pages), output_dir, run_id, debug_samples, extractor
+        )
 
     t0 = time.monotonic()
+    todo, obs_in = counted(pages, "run_job-in")
+    obs_todo = obs_in
+    if committed is not None:
+        todo, obs_todo = counted(unprocessed(todo), "run_job-todo")
     extract = extractor or extract_from_pages
-    results = bucket_results(extract(todo), n_buckets, run_id)
+    results, obs_out = counted(
+        bucket_results(extract(todo), n_buckets, run_id), "run_job-out"
+    )
     results.write.mode("append").partitionBy("url_bucket").parquet(results_path)
     elapsed = time.monotonic() - t0
 
-    # Derive spans + manifest from the COMMITTED rows of this run (read-back,
-    # not recompute — the expensive kernels run exactly once per document;
-    # cached so spans and manifest share one scan).
-    committed_now = (
-        spark.read.parquet(results_path).where(F.col("run_id") == run_id).persist()
-    )
-    results_to_spans(committed_now).write.mode("append").parquet(spans_path)
-
-    manifest = (
-        committed_now.groupBy("url_bucket")
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum(F.length("extracted_text")).alias("bytes_in"),
+    n_in = observed_rows(obs_in, pages.count)
+    n_todo = observed_rows(obs_todo, lambda: unprocessed(pages).count())
+    n_out = obs_out.get["rows"]  # the write's root: always in its plan
+    if n_out:
+        # Derive spans + manifest from the COMMITTED rows of this run
+        # (read-back, not recompute — the expensive kernels run exactly
+        # once per document; cached so spans and manifest share one scan).
+        committed_now = (
+            spark.read.parquet(results_path)
+            .where(F.col("run_id") == run_id)
+            .persist()
         )
-        .withColumn("run_id", F.lit(run_id))
-        .select("run_id", "url_bucket", "rows", "bytes_in")
-    )
-    manifest.write.mode("append").parquet(manifest_path)
-    committed_now.unpersist()
-
-    # committed total from the manifest aggregate — no results-table scan
-    n_done = _committed_count(spark, manifest_path)
+        results_to_spans(committed_now).write.mode("append").parquet(spans_path)
+        manifest = (
+            committed_now.groupBy("url_bucket")
+            .agg(
+                F.count("*").alias("rows"),
+                F.sum(F.length("extracted_text")).alias("bytes_in"),
+            )
+            .withColumn("run_id", F.lit(run_id))
+            .select("run_id", "url_bucket", "rows", "bytes_in")
+        )
+        manifest.write.mode("append").parquet(manifest_path)
+        committed_now.unpersist()
     return {
         "run_id": run_id,
         "results_path": results_path,
-        "rows_total_committed": n_done,
-        "rows_skipped_resume": skipped,
+        "rows_in": n_in,
+        "rows_skipped_resume": n_in - n_todo,
+        "rows_total_committed": n_committed + n_out,
         "elapsed_sec": elapsed,
     }

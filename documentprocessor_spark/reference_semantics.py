@@ -790,17 +790,3 @@ def verify_totals(subtotal, tax, total, tolerance=Decimal("0.02")):
     if not all([subtotal, tax, total]):
         return False
     return abs((subtotal + tax) - total) <= tolerance
-
-
-def process_document(words, width=None, height=None):
-    """Single-document pipeline: optional normalize → raw text → fields.
-
-    Mirrors the per-page body of process_receipt (receipt_processor.py:156-219):
-    raw text is joined from the PRE-normalization word order (text identical),
-    fields are extracted over NORMALIZED words when dims are given.
-    """
-    text = raw_text(words)
-    if width and height:
-        words = normalize_words(words, width, height)
-    fields = extract_fields(words)
-    return {"extracted_text": text, "words": words, **fields}

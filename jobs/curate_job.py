@@ -34,7 +34,6 @@ else on the original text joined back by id):
 from __future__ import annotations
 
 import argparse
-import contextlib
 import json
 import sys
 import time
@@ -83,29 +82,20 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
         spark.stop()
 
 
-def _counted(df, name: str):
-    """``df`` with an Observation of its row count, filled by the one
-    action that runs it — the count rides that action's own plan instead
-    of a separate pass."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
-
-
 def _write_counted(df, output: str, table: str) -> int:
     """Overwrite ``<output>/<table>`` with ``df``; returns the rows
     written, observed on the write itself (no read-back count)."""
-    df, obs = _counted(df, table)
+    from documentprocessor_spark.observe import counted
+
+    df, obs = counted(df, table)
     df.write.mode("overwrite").parquet(f"{output}/{table}")
     return obs.get["rows"]
 
 
 def _run(spark, args) -> None:
-    from py4j.protocol import Py4JJavaError
     from pyspark.sql import functions as F
 
+    from documentprocessor_spark.observe import counted, observed_rows
     from documentprocessor_spark.plans.curate import curate_documents
 
     t0 = time.monotonic()
@@ -114,13 +104,12 @@ def _run(spark, args) -> None:
     # count() here would be a full EXTRA pass over a TB-scale input
     # (review finding r4). A checkpointed run executes several actions
     # and may legitimately SKIP the input scan on resume, so it counts
-    # input rows with an explicit (documented) pass instead. So does a
-    # run whose observed scan left the final plan: when a stage comes out
-    # empty (e.g. curation keeps nothing), AQE replaces the join sides it
-    # makes moot by empty relations, and their metrics go with them.
+    # input rows with an explicit (documented) pass instead, as does a
+    # run whose observed scan AQE dropped (observe.observed_rows), e.g.
+    # when curation keeps nothing.
     obs_in = None
     if not args.checkpoint:
-        docs, obs_in = _counted(docs, "curate-in")
+        docs, obs_in = counted(docs, "curate-in")
     out = curate_documents(
         docs, id_col=args.id_col, text_col=args.text_col, lang=args.lang,
         min_quality=args.min_quality, minhash_k=args.minhash_k,
@@ -128,12 +117,11 @@ def _run(spark, args) -> None:
         exact_substr_k=args.exact_substr_k, checkpoint_dir=args.checkpoint,
     )
     n_out = _write_counted(out, args.output, "curated")
-    n_in = None
-    if obs_in is not None:
-        with contextlib.suppress(Py4JJavaError):  # no metrics were sent
-            n_in = obs_in.get["rows"]
-    if n_in is None:
-        n_in = spark.read.parquet(args.input).count()
+
+    def count_input() -> int:
+        return spark.read.parquet(args.input).count()
+
+    n_in = count_input() if obs_in is None else observed_rows(obs_in, count_input)
     extra = {}
     if (args.chunk_tokens is not None or args.winnow_k is not None
             or args.line_dedup_min_count is not None):

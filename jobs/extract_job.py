@@ -5,7 +5,8 @@
         --input  <pages parquet/iceberg path | warc dir | pdf dir> \\
         --output <output dir (results/spans/manifest)> \\
         [--format parquet|warc|pdf-dir] [--buckets 64] \\
-        [--mode heuristic|model] [--no-resume] [--stats]
+        [--mode heuristic|model] [--entry-c] [--no-resume] \\
+        [--config job.yaml] [--debug-samples N]
 
 Reads the pages table (url, warc_ts, html, text, lang) — or builds it
 straight from a Common-Crawl WARC directory (--format warc; HTML and PDF
@@ -49,16 +50,13 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     parser.add_argument("--mode", choices=("heuristic", "model"),
                         default=None)
     # BooleanOptionalAction: every boolean knob gets an explicit negative
-    # (--no-entry-c / --no-resume / --no-stats), so a config file setting
+    # (--no-entry-c / --no-resume), so a config file setting
     # one true can always be overridden back from the command line
     parser.add_argument("--entry-c", action=argparse.BooleanOptionalAction,
                         default=None,
                         help="entry-C quirk-compatible kernel twin")
     parser.add_argument("--resume", action=argparse.BooleanOptionalAction,
                         default=None)
-    parser.add_argument("--stats", action=argparse.BooleanOptionalAction,
-                        default=None,
-                        help="collect skip/count stats (extra scans)")
     parser.add_argument("--debug-samples", type=int, default=None,
                         help="write N-row per-stage debug samples next to"
                              " the manifest (0 = off)")
@@ -73,7 +71,6 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     mode = args.mode if args.mode is not None else job_cfg["mode"]
     entry_c = args.entry_c if args.entry_c is not None else ext_cfg["entry_c"]
     resume = args.resume if args.resume is not None else job_cfg["resume"]
-    stats_on = args.stats if args.stats is not None else job_cfg["stats"]
     debug_samples = (
         args.debug_samples
         if args.debug_samples is not None
@@ -173,7 +170,6 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
         output,
         n_buckets=buckets,
         resume=resume,
-        collect_stats=stats_on,
         extractor=extractor,
         debug_samples=debug_samples,
     )

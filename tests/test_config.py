@@ -158,7 +158,7 @@ def _run_job_cli(spark, argv):
 
 def test_extract_job_reads_config(spark, pages_parquet, tmp_path, capsys):
     cfgp = tmp_path / "job.yaml"
-    cfgp.write_text("job:\n  buckets: 4\n  stats: true\n")
+    cfgp.write_text("job:\n  buckets: 4\n")
     out = str(tmp_path / "out")
     _run_job_cli(spark, [
         "--input", pages_parquet, "--output", out, "--config", str(cfgp),
@@ -176,7 +176,7 @@ def test_extract_job_cli_flag_overrides_config(spark, pages_parquet, tmp_path, c
     out = str(tmp_path / "out")
     _run_job_cli(spark, [
         "--input", pages_parquet, "--output", out,
-        "--config", str(cfgp), "--buckets", "2", "--stats",
+        "--config", str(cfgp), "--buckets", "2",
     ])
     stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["rows_total_committed"] == 40
@@ -321,7 +321,6 @@ def test_debug_samples_written_and_match_pipeline(spark, pages_parquet, tmp_path
         out,
         n_buckets=4,
         debug_samples=5,
-        collect_stats=False,
     )
     base = f"{out}/debug/run_id={stats['run_id']}"
     stage_urls = {}
@@ -366,7 +365,7 @@ def test_debug_samples_off_writes_nothing(spark, pages_parquet, tmp_path):
     out = str(tmp_path / "out")
     run_job(
         spark, spark.read.parquet(pages_parquet), out,
-        n_buckets=4, collect_stats=False,
+        n_buckets=4,
     )
     assert not os.path.exists(f"{out}/debug")
 

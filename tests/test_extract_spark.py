@@ -5,12 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from documentprocessor_spark import reference_semantics as ref
-from documentprocessor_spark.functions.boxes import (
-    currency_col,
-    normalize_words_col,
-    raw_text_col,
-    vendor_top3_col,
-)
+from documentprocessor_spark.functions.boxes import normalize_words_col
 from documentprocessor_spark.operators.extract import (
     attach_extraction,
     words_long_to_arrays,
@@ -95,47 +90,6 @@ def test_native_normalize_matches_python(spark):
             for (t, a, b, c, d, cf) in ref.normalize_words(words_py, w, h)
         ]
         assert got[url] == expected, url
-
-
-def test_native_vendor_and_currency_match_python(spark):
-    _pages, words, _meta = build_fixture_tables(spark)
-    arrays = words_long_to_arrays(words)
-    out = arrays.select(
-        "url",
-        vendor_top3_col(F.col("words")).alias("vendor"),
-        currency_col(raw_text_col(F.col("words"))).alias("currency"),
-        raw_text_col(F.col("words")).alias("text"),
-    )
-    got = {r["url"]: r.asDict(recursive=True) for r in out.collect()}
-    goldens = golden_per_url()
-    # empty-words url never reaches the arrays table; natives' null handling
-    # is asserted separately below
-    empty = spark.sql(
-        "select cast(array() as "
-        "array<struct<text:string,x0:int,y0:int,x1:int,y1:int,confidence:double>>)"
-        " as words"
-    )
-    row = empty.select(
-        vendor_top3_col(F.col("words")).alias("v"),
-        currency_col(raw_text_col(F.col("words"))).alias("c"),
-    ).first()
-    assert row["v"] is None and row["c"] is None
-    for url, g in goldens.items():
-        if url not in got:
-            continue
-        gv = g["vendor_name"]
-        if gv is None:
-            assert got[url]["vendor"] is None, url
-        else:
-            assert got[url]["vendor"]["value"] == gv["value"], url
-            assert abs(got[url]["vendor"]["confidence"] - gv["confidence"]) < 1e-12
-            assert got[url]["vendor"]["box"] == gv["box"], url
-        gc = g["currency"]
-        if gc is None:
-            assert got[url]["currency"] is None, url
-        else:
-            assert got[url]["currency"] == gc, url
-        assert got[url]["text"] == g["extracted_text"], url
 
 
 def test_result_row_shape_matches_reference_contract(spark):

@@ -267,6 +267,101 @@ def test_manifest_of_only_temporary_is_nothing_committed(
     assert committed.select("url").distinct().count() == corpus_pages.count()
 
 
+def test_run_job_counts_come_from_the_write_plan(
+        spark, corpus_pages, tmp_path, monkeypatch):
+    """rows_in, rows_skipped_resume and rows_total_committed are observed
+    on the plan the results write runs, with no count() over the pages or
+    the resume anti-join: on a fresh run, a superset resume, an
+    all-committed rerun, an empty input and a run with debug samples. A
+    fresh run aggregates no manifest after its commit."""
+    from pyspark.sql import DataFrame
+
+    def no_count(self):
+        raise AssertionError("run_job counted rows in a pass of its own")
+
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    sc = spark.sparkContext
+
+    def last_job():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    def run(pages, out, **kw):
+        s = run_job(spark, pages, str(tmp_path / out), n_buckets=4, **kw)
+        return s["rows_in"], s["rows_skipped_resume"], s["rows_total_committed"]
+
+    before = last_job()
+    assert run(corpus_pages, "fresh") == (60, 0, 60)
+    # results write (2 query stages), read-back, spans, manifest (2)
+    assert last_job() - before <= 6
+    assert run(corpus_pages.limit(30), "job") == (30, 0, 30)
+    assert run(corpus_pages, "job") == (60, 30, 60)
+    assert run(corpus_pages, "job") == (60, 60, 60)
+    assert run(corpus_pages.limit(0), "empty") == (0, 0, 0)
+    assert run(corpus_pages.limit(0), "job") == (0, 0, 60)
+    assert run(corpus_pages, "debug", debug_samples=5) == (60, 0, 60)
+    assert run(corpus_pages, "debug", debug_samples=5) == (60, 60, 60)
+
+
+def test_stale_temporary_task_output_is_not_committed(
+        spark, corpus_pages, tmp_path):
+    """A run killed between its manifest's task commit and job commit
+    leaves the task output under ``manifest/_temporary/0/task_0``. The next
+    run deletes it before writing, so its manifest commit does not take
+    the dead run's rows in: 60 committed rows for 60 urls, not 90."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "job")
+    dead = run_job(spark, corpus_pages.limit(30), out, n_buckets=4)
+    task = f"{out}/manifest/_temporary/0/task_0"
+    os.makedirs(task)
+    for f in os.listdir(f"{out}/manifest"):
+        if f.endswith(".parquet"):
+            shutil.move(f"{out}/manifest/{f}", task)
+        elif f != "_temporary":
+            os.remove(f"{out}/manifest/{f}")
+
+    stats = run_job(spark, corpus_pages, out, n_buckets=4)
+    assert stats["rows_skipped_resume"] == 0
+    assert stats["rows_total_committed"] == corpus_pages.count()
+    manifest = spark.read.parquet(f"{out}/manifest")
+    assert manifest.agg(F.sum("rows")).first()[0] == corpus_pages.count()
+    assert manifest.where(F.col("run_id") == dead["run_id"]).count() == 0
+    again = run_job(spark, corpus_pages, out, n_buckets=4)
+    assert again["rows_skipped_resume"] == corpus_pages.count()
+    assert again["rows_total_committed"] == corpus_pages.count()
+
+
+def test_committed_spans_hold_each_url_field_once(
+        spark, corpus_pages, tmp_path):
+    """A dead run's results and spans, left without a manifest, sit next
+    to the rerun's: the committed spans view drops the orphans by run_id,
+    so each (url, field) pair appears once, and it equals the spans of
+    the committed results."""
+    import shutil
+
+    from documentprocessor_spark.plans.pipeline import (
+        read_committed_results,
+        read_committed_spans,
+        results_to_spans,
+    )
+
+    dead, out = str(tmp_path / "dead"), str(tmp_path / "job")
+    run_job(spark, corpus_pages, dead, n_buckets=4)
+    for table in ("results", "spans"):
+        shutil.copytree(f"{dead}/{table}", f"{out}/{table}")
+    run_job(spark, corpus_pages, out, n_buckets=4)
+
+    raw = spark.read.parquet(f"{out}/spans")
+    spans = read_committed_spans(spark, out).select(*raw.columns)
+    assert raw.count() == 2 * spans.count() > 0
+    assert spans.groupBy("url", "field").count().where("count > 1").count() == 0
+    want = results_to_spans(read_committed_results(spark, out))
+    assert spans.exceptAll(want).count() == 0
+    assert want.exceptAll(spans).count() == 0
+
+
 def test_run_job_rerun_compiles_no_new_classes(
         spark, corpus_pages, tmp_path, codegen_compiles):
     """A second run_job into a fresh output dir reuses the first run's
