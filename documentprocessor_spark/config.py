@@ -12,16 +12,18 @@ deployment with a stale config path must still run; the explicit CLI flags
 stay authoritative above both).
 
 The keys are this engine's knobs, not the reference's (no Paddle/torch in a
-Spark cluster image): job routing (format, mode, buckets, resume,
-debug_samples), extraction kernel options (entry_c quirk twin,
-apply_quality and its H10/H11 settings min_confidence and verify_totals),
-session tuning (app_name, shuffle_partitions, max_partition_bytes) and the
-model (name_or_path, type, device). Run counts are not a key: every
-run_job reports them, observed on the plan it runs.
+Spark cluster image): ``job`` routing (format, mode, buckets, resume,
+debug_samples), ``extraction`` kernel options (entry_c quirk twin,
+apply_quality and its H10/H11 settings min_confidence and verify_totals)
+and the ``model`` (name_or_path, type, device). Spark settings are not
+keys: they come from the launcher (``spark-submit --conf``), and
+extract_job refuses a file with a ``session`` block. Run counts are not a
+key either: every run_job reports them, observed on the plan it runs.
 """
 
 from __future__ import annotations
 
+import copy
 import json
 import logging
 from pathlib import Path
@@ -49,11 +51,6 @@ DEFAULT_CONFIG: Dict[str, Any] = {
         "min_confidence": 0.5,
         "verify_totals": True,
     },
-    "session": {
-        "app_name": None,             # None -> job-derived ("dp-extract-<mode>")
-        "shuffle_partitions": None,   # None -> engine default (core count)
-        "max_partition_bytes": None,  # None -> engine default ("8m")
-    },
     "model": {
         # sandbox stub registry names; on a real cluster these become HF
         # ids. name_or_path is validated against the M8 allow-list at job
@@ -65,15 +62,6 @@ DEFAULT_CONFIG: Dict[str, Any] = {
         "device": "auto",
     },
 }
-
-
-def _deep_copy_cfg(value: Any) -> Any:
-    """Copy nested dicts/lists so no part of the result aliases an input."""
-    if isinstance(value, dict):
-        return {k: _deep_copy_cfg(v) for k, v in value.items()}
-    if isinstance(value, list):
-        return [_deep_copy_cfg(v) for v in value]
-    return value
 
 
 def merge_configs(base: Dict[str, Any], override: Dict[str, Any]) -> Dict[str, Any]:
@@ -92,10 +80,10 @@ def merge_configs(base: Dict[str, Any], override: Dict[str, Any]) -> Dict[str, A
         if key in override and isinstance(value, dict) and isinstance(override[key], dict):
             result[key] = merge_configs(value, override[key])
         else:
-            result[key] = _deep_copy_cfg(value)
+            result[key] = copy.deepcopy(value)
     for key, value in override.items():
         if not (key in base and isinstance(base[key], dict) and isinstance(value, dict)):
-            result[key] = _deep_copy_cfg(value)
+            result[key] = copy.deepcopy(value)
     return result
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup
 from ..operators.textstats import lang_id_col, quality_score_col
+from ..sources.tables import hadoop_fs
 
 # The persisted survivors of the latest curate_documents(exact_substr_k=…)
 # call — the dedup module's single-slot lifecycle (see its cache notes),
@@ -68,9 +69,8 @@ def _stage_store(spark: SparkSession, ckpt_dir: str | None, params: dict):
     import hashlib
     import json
 
-    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, hadoop_path = hadoop_fs(spark, ckpt_dir)
     root = hadoop_path(ckpt_dir)
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     fp = hashlib.md5(json.dumps(params, sort_keys=True).encode()).hexdigest()
     marker = hadoop_path(os.path.join(ckpt_dir, f"params-{fp}"))
     if not fs.exists(marker):

@@ -35,12 +35,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from ..observe import counted, observed_rows
 from ..operators.extract import fused_extract
-from ..schemas import SCALAR_FIELDS
-from ..sources.tables import read_committed
+from ..schemas import RESULT, SCALAR_FIELDS
+from ..sources.tables import hadoop_fs, read_committed
 
 DEFAULT_BUCKETS = 64
 
@@ -248,7 +249,8 @@ def _acknowledged(rows: DataFrame, manifest: DataFrame) -> DataFrame:
     its manifest write are orphans, and every committed-state read drops
     them here."""
     runs = F.broadcast(manifest.select("run_id").distinct())
-    return rows.join(runs, "run_id", "left_semi")
+    # a USING join puts run_id first; keep the table's column order
+    return rows.join(runs, "run_id", "left_semi").select(*rows.columns)
 
 
 def _committed_urls(
@@ -264,10 +266,24 @@ def _committed_urls(
     return _acknowledged(results.select("url", "run_id"), manifest).select("url")
 
 
-def _committed_rows(spark: SparkSession, output_dir: str, table: str) -> DataFrame:
+def _no_results(spark: SparkSession) -> DataFrame:
+    """No results, in the layout ``run_job`` commits: ``schemas.RESULT``,
+    then ``run_id`` and the ``url_bucket`` partition column, which a read
+    of the table puts last."""
+    layout = StructType([*RESULT.fields]).add("run_id", "string")
+    return spark.createDataFrame([], layout.add("url_bucket", "integer"))
+
+
+def _committed_rows(
+    spark: SparkSession, output_dir: str, table: str, empty
+) -> DataFrame:
     """The ``<output_dir>/<table>`` rows of acknowledged runs; none before
-    any manifest exists."""
-    rows = spark.read.parquet(f"{output_dir}/{table}")
+    any manifest exists. ``empty(spark)`` is the view while the table has
+    no data file: an empty-input first run leaves ``results`` with only
+    ``_SUCCESS`` and writes no ``spans``."""
+    rows = read_committed(spark, f"{output_dir}/{table}")
+    if rows is None:
+        return empty(spark)
     manifest = read_committed(spark, f"{output_dir}/manifest")
     return rows.limit(0) if manifest is None else _acknowledged(rows, manifest)
 
@@ -279,7 +295,7 @@ def read_committed_results(spark: SparkSession, output_dir: str) -> DataFrame:
     exists no run is acknowledged, and the view is empty."""
     w = Window.partitionBy("url").orderBy("run_id")
     return (
-        _committed_rows(spark, output_dir, "results")
+        _committed_rows(spark, output_dir, "results", _no_results)
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
@@ -292,7 +308,8 @@ def read_committed_spans(spark: SparkSession, output_dir: str) -> DataFrame:
     pair appears once."""
     first = F.min("run_id").over(Window.partitionBy("url"))
     return (
-        _committed_rows(spark, output_dir, "spans")
+        _committed_rows(spark, output_dir, "spans",
+                        lambda s: results_to_spans(_no_results(s)))
         .withColumn("_first", first)
         .where(F.col("run_id") == F.col("_first"))
         .drop("_first")
@@ -312,11 +329,8 @@ def _delete_temporary(spark: SparkSession, path: str) -> None:
     """Delete ``<path>/_temporary``, which only a killed writer leaves: an
     append's job commit takes every task directory under it, so a dead
     run's committed tasks would join this run's commit."""
-    jvm = spark.sparkContext._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/_temporary")
-    tmp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(
-        tmp, True
-    )
+    fs, Path = hadoop_fs(spark, path)
+    fs.delete(Path(f"{path}/_temporary"), True)
 
 
 # Below this many committed urls the resume anti-join broadcasts the

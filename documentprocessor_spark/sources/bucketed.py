@@ -4,10 +4,11 @@ At 100 TB the recurring cost of joining results/spans/pages on url is the
 shuffle of the big side. Writing both sides bucketed by the join key
 (``bucketBy(N, key) .sortBy(key)``) pins row placement at write time, so a
 later equi-join on that key runs with ZERO Exchange — Catalyst reads both
-sides' bucket files pairwise. This is the persistent twin of the
-``repartition(n, url)`` the pipeline already does in-flight, and the
-parquet-era stand-in for Iceberg's ``bucket(N, url)`` partition transform
-(SURVEY.md §4.2).
+sides' bucket files pairwise. The extraction job's ``url_bucket=``
+directories (``pipeline.bucket_results``) group rows by url hash too, but
+Spark does not read them as buckets; this is the catalog-registered form,
+and the parquet-era stand-in for Iceberg's ``bucket(N, url)`` partition
+transform (SURVEY.md §4.2).
 
 Requires a saveAsTable-style catalog (Spark's local warehouse works); the
 test asserts the join plan contains no Exchange.

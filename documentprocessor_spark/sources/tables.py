@@ -1,10 +1,9 @@
-"""Table IO: testdata loaders and the results sink.
-
-The production design writes Iceberg (snapshot-isolated commits, the resume
-unit the north_rule requires). This sandbox has no Iceberg runtime jar, so
-``write_results`` transparently falls back to hash-bucketed parquet with the
-same layout (``url_bucket=`` partitions); ``plans.pipeline`` builds the
-resume/manifest semantics on top of either.
+"""Table IO: testdata loaders, the committed-state reader and results
+upkeep. ``plans.pipeline.run_job`` writes its own bucketed results, spans
+and manifest and reads them back through ``read_committed``.
+``write_results``/``read_results`` are a separate sink and read (Iceberg
+when its runtime jar is present, else the same ``url_bucket=`` parquet
+layout), which ``compact_results`` compacts through ``hadoop_fs``.
 """
 
 from __future__ import annotations
@@ -30,6 +29,15 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(fs, Path)``: the Hadoop FileSystem that serves ``path`` — a local
+    path, ``file://``, HDFS or an object store, the one Spark reads it
+    with — and the JVM ``Path`` class that names entries on it."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return Path(path).getFileSystem(conf), Path
 
 
 def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
@@ -106,25 +114,31 @@ def compact_results(
     (the swap is two renames, and a crash between them leaves either the
     full old table at .bak or the full new one in place).
     """
-    import shutil
-
     from pyspark.sql import functions as F
 
     tmp = path.rstrip("/") + ".compact.tmp"
     bak = path.rstrip("/") + ".compact.bak"
+    fs, Path = hadoop_fs(spark, path)
+    table_p, tmp_p, bak_p = Path(path), Path(tmp), Path(bak)
+
+    def rename(src, dst) -> None:
+        # Hadoop's rename reports a failure by returning False
+        if not fs.rename(src, dst):
+            raise OSError(f"compaction: cannot rename {src} to {dst}")
+
     # crash recovery: a previous compaction killed BETWEEN the two swap
     # renames leaves the table only at .bak — restore it before anything
     # else (readers/resume would otherwise fail until a human intervened)
-    if not os.path.exists(path) and os.path.exists(bak):
-        os.rename(bak, path)
+    if not fs.exists(table_p) and fs.exists(bak_p):
+        rename(bak_p, table_p)
     # mergeSchema read: the lake is schema-evolved by design
     # (read_results/COVERAGE 'read_results_evolution'); a single-footer
     # read here would silently drop newer generations' columns from the
     # compacted output — permanent data loss the row-count check cannot see
     df = read_results(spark, path, merge_schema=True)
     n_before = df.count()
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(bak, ignore_errors=True)
+    fs.delete(tmp_p, True)
+    fs.delete(bak_p, True)
     salt = F.pmod(F.xxhash64("url"), F.lit(files_per_bucket))
     (
         df.repartition(F.col(partition_col), salt)
@@ -134,12 +148,12 @@ def compact_results(
     )
     n_after = spark.read.parquet(tmp).count()
     if n_after != n_before:
-        shutil.rmtree(tmp, ignore_errors=True)
+        fs.delete(tmp_p, True)
         raise RuntimeError(
             f"compaction row count mismatch: {n_before} before, "
             f"{n_after} in compacted output — original left untouched"
         )
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak, ignore_errors=True)
+    rename(table_p, bak_p)
+    rename(tmp_p, table_p)
+    fs.delete(bak_p, True)
     return {"rows": n_after, "path": path}

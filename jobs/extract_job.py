@@ -12,15 +12,16 @@ Reads the pages table (url, warc_ts, html, text, lang) — or builds it
 straight from a Common-Crawl WARC directory (--format warc; HTML and PDF
 response bodies both extract, the fused kernel content-sniffs %PDF-) or a
 directory of PDFs (--format pdf-dir) — runs the fused extraction pipeline,
-writes url-hash-bucketed results + spans + a per-partition manifest, and
-resumes from the last manifest-acknowledged commit if killed. On a
-cluster, pass the master/executor confs on the spark-submit command line
-as usual; the session factory only fills in defaults when unset.
+writes url-hash-bucketed results + spans + a per-bucket manifest, and
+resumes from the last manifest-acknowledged commit if killed.
 
-The ``session.*`` config keys (app_name, shuffle_partitions,
-max_partition_bytes) apply only when the job creates its session, as
-under spark-submit. Run in-process on a live session (``main(...,
-stop_session=False)``), the job uses that session as it is.
+Spark settings come from the launcher: pass the master, executor and any
+other conf on the spark-submit command line (``--master``, ``--conf
+spark.sql.shuffle.partitions=N``). They win over the session factory's
+defaults, which fill in only the keys left unset. The job config holds no
+Spark settings; a config file with a ``session:`` block is refused. Run
+in-process on a live session (``main(..., stop_session=False)``), the job
+uses that session as it is.
 """
 
 from __future__ import annotations
@@ -65,21 +66,24 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     from documentprocessor_spark.config import load_config
 
     cfg = load_config(args.config)
+    if "session" in cfg:
+        raise SystemExit(
+            f"{args.config}: the session block is gone; pass Spark settings"
+            " as spark-submit --conf key=value"
+        )
     job_cfg, ext_cfg = cfg["job"], cfg["extraction"]
-    fmt = args.format if args.format is not None else job_cfg["format"]
-    buckets = args.buckets if args.buckets is not None else job_cfg["buckets"]
-    mode = args.mode if args.mode is not None else job_cfg["mode"]
-    entry_c = args.entry_c if args.entry_c is not None else ext_cfg["entry_c"]
-    resume = args.resume if args.resume is not None else job_cfg["resume"]
-    debug_samples = (
-        args.debug_samples
-        if args.debug_samples is not None
-        else job_cfg["debug_samples"]
+    fmt, buckets, mode, resume, debug_samples = (
+        job_cfg[k] if getattr(args, k) is None else getattr(args, k)
+        for k in ("format", "buckets", "mode", "resume", "debug_samples")
     )
+    entry_c = args.entry_c if args.entry_c is not None else ext_cfg["entry_c"]
 
     from documentprocessor_spark.plans.pipeline import (
+        confidence_filter,
+        extract_from_pages,
         extract_from_pages_with_model,
         run_job,
+        with_quality_columns,
     )
     from documentprocessor_spark.session import get_spark
 
@@ -93,17 +97,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
 
     from documentprocessor_spark.sources.readers import read_pages
 
-    sess_cfg = cfg["session"]
-    extra_conf = {}
-    if sess_cfg["max_partition_bytes"] is not None:
-        extra_conf["spark.sql.files.maxPartitionBytes"] = str(
-            sess_cfg["max_partition_bytes"]
-        )
-    spark = get_spark(
-        app_name=sess_cfg["app_name"] or f"dp-extract-{mode}",
-        shuffle_partitions=sess_cfg["shuffle_partitions"],
-        extra_conf=extra_conf or None,
-    )
+    spark = get_spark(app_name=f"dp-extract-{mode}")
     if mode == "model":
         # M8 allow-list + model-type + device validation, driver-side,
         # before any work (reference commands.py:476-494 validates the
@@ -126,12 +120,8 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     # mode writes to its own subdirectory (different output schema)
     output = args.output if mode == "heuristic" else f"{args.output}/model"
     if mode == "heuristic":
-        from documentprocessor_spark.plans.pipeline import extract_from_pages
-
         base_extractor = (
-            None
-            if not entry_c
-            else (lambda p: extract_from_pages(p, entry_c=True))
+            (lambda p: extract_from_pages(p, entry_c=True)) if entry_c else None
         )
     else:
         m_name, m_dev = cfg["model"]["name_or_path"], cfg["model"]["device"]
@@ -143,12 +133,6 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     # verification on the committed rows (SURVEY §8.7 — defined by the
     # reference, kept out of ITS default path, so opt-in here too)
     if ext_cfg["apply_quality"]:
-        from documentprocessor_spark.plans.pipeline import (
-            confidence_filter,
-            extract_from_pages,
-            with_quality_columns,
-        )
-
         inner = base_extractor or extract_from_pages
         min_conf = ext_cfg["min_confidence"]
         verify = ext_cfg["verify_totals"]

@@ -202,34 +202,18 @@ def test_extract_job_config_entry_c_matches_direct_kernel(
     assert sorted(got.select(*cols).collect()) == sorted(want.select(*cols).collect())
 
 
-def test_extract_job_wires_session_config(spark, pages_parquet, tmp_path,
-                                          capsys, monkeypatch):
-    """session.* config keys must actually reach get_spark — a config file
-    setting them silently doing nothing is the bug class this pins."""
-    import documentprocessor_spark.session as sess_mod
-
-    captured = {}
-    real_get_spark = sess_mod.get_spark
-
-    def spy(*a, **kw):
-        captured.update(kw)
-        return real_get_spark(*a, **kw)
-
-    monkeypatch.setattr(sess_mod, "get_spark", spy)
+def test_extract_job_refuses_a_session_block(tmp_path):
+    """Spark settings come from the launcher only: a config file that
+    still carries the removed session block exits before any Spark work,
+    naming the flag that replaces it, instead of being silently ignored."""
     cfgp = tmp_path / "job.yaml"
-    cfgp.write_text(
-        "session:\n  app_name: my-job\n  shuffle_partitions: 8\n"
-        "  max_partition_bytes: 16m\n"
-    )
-    _run_job_cli(spark, [
-        "--input", pages_parquet, "--output", str(tmp_path / "out"),
-        "--config", str(cfgp),
-    ])
-    assert captured["app_name"] == "my-job"
-    assert captured["shuffle_partitions"] == 8
-    assert captured["extra_conf"] == {
-        "spark.sql.files.maxPartitionBytes": "16m"
-    }
+    cfgp.write_text("session:\n  shuffle_partitions: 8\n")
+    with pytest.raises(SystemExit, match="spark-submit --conf"):
+        _run_job_cli(None, [
+            "--input", str(tmp_path / "pages"),
+            "--output", str(tmp_path / "out"), "--config", str(cfgp),
+        ])
+    assert not (tmp_path / "out").exists()
 
 
 def test_jobs_leave_a_live_sessions_confs_alone(spark, pages_parquet, tmp_path,

@@ -362,6 +362,26 @@ def test_committed_spans_hold_each_url_field_once(
     assert want.exceptAll(spans).count() == 0
 
 
+def test_committed_views_of_an_empty_first_run_are_empty(
+        spark, corpus_pages, tmp_path):
+    """An empty-input first run commits no data file: ``results`` holds
+    only ``_SUCCESS``, and there is no ``spans`` dir and no manifest. Both
+    committed views are then empty, in the layout a run with rows
+    commits."""
+    from documentprocessor_spark.plans.pipeline import (
+        read_committed_results,
+        read_committed_spans,
+    )
+
+    empty, full = str(tmp_path / "empty"), str(tmp_path / "full")
+    run_job(spark, corpus_pages.limit(0), empty, n_buckets=4)
+    run_job(spark, corpus_pages.limit(5), full, n_buckets=4)
+    for read in (read_committed_results, read_committed_spans):
+        view = read(spark, empty)
+        assert view.count() == 0
+        assert view.dtypes == read(spark, full).dtypes
+
+
 def test_run_job_rerun_compiles_no_new_classes(
         spark, corpus_pages, tmp_path, codegen_compiles):
     """A second run_job into a fresh output dir reuses the first run's
@@ -563,6 +583,28 @@ def test_compact_results_recovers_from_interrupted_swap(spark, tmp_path):
     assert stats["rows"] == 12
     assert spark.read.parquet(path).count() == 12
     assert not os.path.exists(path + ".compact.bak")
+
+
+def test_compact_results_on_a_file_uri(spark, tmp_path):
+    """compact_results takes any Hadoop path: given a file:// URI it
+    restores a table left at .bak by an interrupted swap, compacts it in
+    place and leaves no tmp or bak dir behind."""
+    import os
+
+    from documentprocessor_spark.sources.tables import compact_results
+
+    path = str(tmp_path / "results")
+    df = spark.range(0, 12).selectExpr(
+        "concat('u', id) as url", "'r1' as run_id",
+        "cast(id % 3 as int) as url_bucket",
+    )
+    for _ in range(2):
+        df.write.mode("append").partitionBy("url_bucket").parquet(path)
+    os.rename(path, path + ".compact.bak")
+    stats = compact_results(spark, f"file://{path}")
+    assert stats["rows"] == 24
+    assert spark.read.parquet(path).count() == 24
+    assert sorted(os.listdir(tmp_path)) == ["results"]
 
 
 def test_words_path_equals_fused_kernel_on_rows_without_html(spark):
