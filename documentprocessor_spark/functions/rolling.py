@@ -1,14 +1,35 @@
-"""Rabin-Karp rolling window hashes — O(1) per position instead of the
-O(k) md5-of-joined-slice, shared by ExactSubstr span detection
-(operators/dedup.duplicate_spans) and MOSS winnowing
-(operators/dedup.winnow_fingerprints).
+"""The one n-gram key: Rabin-Karp window hashes of k consecutive tokens.
+Every n-gram key of the dedup family comes from here — MinHash, n-gram
+Jaccard and contamination (per row, :func:`window_key_sql`), ExactSubstr
+span detection (operators/dedup.duplicate_spans) and MOSS winnowing
+(operators/dedup.winnow_fingerprints, both through
+:func:`rolling_window_hashes`), and every DuckDB oracle of them
+(:func:`window_key_oracle_cte`).
 
 Scheme (all arithmetic exact int64, bit-identical in Spark, DuckDB and
 pure Python — every product and sum is proven < 2**63):
 
     th[j]  = md5-60bit(token_j) mod M          (one md5 per TOKEN, not
-                                                per window — the whole
-                                                O(n*k) -> O(n) win)
+                                                per window)
+    H0[i]  = th[i] + th[i+1]*B + ... + th[i+k-1]*B**(k-1)   mod M
+    H[i]   = B**L * H0[i]                                   mod M
+
+so identical windows at different positions (and in different documents)
+collide exactly. Two independent (B, M) pairs run in parallel and pack
+into ONE bigint join key:
+
+    win_hash = H1 * 2**22 + H2 div 2**18       (~62 bits of entropy,
+                                                comparable to the module's
+                                                60-bit md5 contract)
+
+Two evaluators compute the same H[i]:
+
+- per row, :func:`window_key_sql`: B**L * (sum_j th[i+j] * B**j mod M),
+  one modmul by a literal power per token of the window and one by
+  B**L. It needs no positions and no shuffle, so MinHash, Jaccard and
+  contamination key their windows inside each document's row.
+- prefix sums, :func:`rolling_window_hashes`, O(1) per position at any k:
+
     a[j]   = th[j] * B**j            mod M     (modmul via 20-bit split)
     S[i]   = a[0] + ... + a[i]                 (EXACT running sum — each
                                                 a[j] < M < 2**41, so up
@@ -16,18 +37,13 @@ pure Python — every product and sum is proven < 2**63):
     d[i]   = (S[i+k-1] - S[i-1]) mod M  ==  B**i * H0[i] mod M
     H[i]   = d[i] * B**(L-i) mod M      ==  B**L * H0[i] mod M
 
-where H0[i] is the canonical polynomial hash of window i — multiplying by
-the COMPLEMENT power B**(L-i) cancels the position factor without needing
-a modular inverse, so identical windows at different positions (and in
-different documents) collide exactly. Two independent (B, M) pairs run in
-parallel and pack into ONE bigint join key:
+  — multiplying by the COMPLEMENT power B**(L-i) cancels the position
+  factor without a modular inverse. Spans and winnowing (k = 50 and 5 by
+  default) use it: at k = 50 the per-row form measured 2.5-5.7x slower.
 
-    win_hash = H1 * 2**22 + H2 div 2**18       (~62 bits of entropy,
-                                                comparable to the module's
-                                                60-bit md5 contract)
-
-B**e mod M comes from two small driver-built broadcast tables, NOT a
-per-row fold and NOT one row per exponent: with e = hi * 2**11 + lo,
+B**e mod M for the prefix-sum form comes from two small driver-built
+broadcast tables, NOT a per-row fold and NOT one row per exponent: with
+e = hi * 2**11 + lo,
 
     lo[lo] = B**lo          mod M   (2**11 rows)
     hi[hi] = B**(hi * 2**11) mod M  ((maxlen >> 11) + 1 rows, <= 2**11 + 1)
@@ -42,18 +58,18 @@ build and re-optimisation). The prefix sum rides ONE per-doc window
 argmin window — same partitioning, same order, so the sort is reused and
 winnowing gains no extra shuffle.
 
-Documents longer than ``maxlen`` tokens fail fast with raise_error (a
-silent miss would silently drop their windows): the position power is
-guarded by ``pos < maxlen``; the prefix-sum int64 bound holds to 2**22
-tokens, so maxlen above that is rejected at plan-build time.
+In the prefix-sum form, documents longer than ``maxlen`` tokens fail fast
+with raise_error (a silent miss would silently drop their windows): the
+position power is guarded by ``pos < maxlen``; the prefix-sum int64 bound
+holds to 2**22 tokens, so maxlen above that is rejected at plan-build
+time. The per-row form has no position and no such bound.
 
-The arithmetic (modmul, window difference, pack) and the 60-bit token
-key each have ONE spelling as SQL text (:func:`modmul_sql`,
-:func:`window_diff_sql`, :func:`pack_sql`, :func:`h60_sql`), which the
-Spark side evaluates through F.expr and the DuckDB oracle twin
-:func:`rolling_oracle_ctes` embeds (its powers table becomes a recursive
-CTE). :func:`py_window_hashes` is the pure-Python fuzz twin, written with
-plain modular products.
+The arithmetic (modmul, window difference, pack, the per-row key) and
+the 60-bit token key each have ONE spelling as SQL text
+(:func:`modmul_sql`, :func:`window_diff_sql`, :func:`pack_sql`,
+:func:`window_key_sql`, :func:`h60_sql`), which the Spark side evaluates
+through F.expr and the DuckDB oracles embed. :func:`py_window_hashes` is
+the pure-Python fuzz twin, written with plain modular products.
 """
 
 from __future__ import annotations
@@ -65,10 +81,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 # The cross-engine hash CONTRACT: change any of these in every oracle (via
-# rolling_oracle_ctes), the Spark side, and py_window_hashes together or
+# window_key_oracle_cte), the Spark side, and py_window_hashes together or
 # nowhere. M1/M2 prime (Miller-Rabin-verified), < 2**40 so the 20-bit
-# split modmul never leaves int64; B*M < 2**63 so the recursive powers
-# CTE never overflows.
+# split modmul never leaves int64.
 ROLL_B1 = 1000003
 ROLL_M1 = (1 << 40) - 87        # 1099511627689, prime
 ROLL_B2 = 100019
@@ -287,68 +302,43 @@ def rolling_window_hashes(
     )
 
 
-def rolling_oracle_ctes(
-    k: int,
-    maxlen: int,
-    docs_cte: str = "docs_src",
-    out_cte: str = "roll_win",
-) -> str:
-    """The DuckDB twin as a CTE chain — paste after a CTE named
-    ``docs_cte`` with columns (doc_id, text); exposes ``out_cte``
-    (doc_id, pos, win_hash). The key, modmul, window-difference and pack
-    arithmetic are the same SQL text rolling_window_hashes evaluates (same
-    constants, same exact-int64 prefix sums); only the powers come from a
-    recursive CTE walking B**e directly."""
-    b1, m1, b2, m2 = ROLL_B1, ROLL_M1, ROLL_B2, ROLL_M2
-    return f"""
-    roll_p(e, pw1, pw2) as (
-        select 0, 1::bigint, 1::bigint
-        union all
-        select e + 1, (pw1 * {b1}) % {m1}, (pw2 * {b2}) % {m2}
-        from roll_p where e < {maxlen}
-    ),
-    roll_tok as (
-        select doc_id, i as pos, toks[i + 1] as t
-        from (select doc_id, string_split(text, ' ') as toks
-              from {docs_cte}),
-             lateral unnest(range(len(toks))) u(i)
-    ),
-    roll_th as (
-        select doc_id, pos, {h60_sql("t")} as h
-        from roll_tok
-    ),
-    roll_a as (
-        select doc_id, pos,
-            {modmul_sql(f"h % {m1}", "pw1", m1)} as a1,
-            {modmul_sql(f"h % {m2}", "pw2", m2)} as a2
-        from roll_th join roll_p on roll_p.e = roll_th.pos
-    ),
-    roll_cum as (
-        select doc_id, pos, a1, a2,
-            sum(a1) over w as s1, sum(a2) over w as s2
-        from roll_a
-        window w as (partition by doc_id order by pos
-                     rows unbounded preceding)
-    ),
-    roll_lead as (
-        select doc_id, pos, a1, a2, s1, s2,
-            lead(s1, {k - 1}) over wo as e1,
-            lead(s2, {k - 1}) over wo as e2
-        from roll_cum
-        window wo as (partition by doc_id order by pos)
-    ),
-    roll_d as (
-        select doc_id, pos,
-            {window_diff_sql("e1", "s1", "a1", m1)} as d1,
-            {window_diff_sql("e2", "s2", "a2", m2)} as d2
-        from roll_lead where e1 is not null
-    ),
-    {out_cte} as (
-        select roll_d.doc_id, roll_d.pos,
-            {pack_sql(modmul_sql("d1", "pw1", m1), modmul_sql("d2", "pw2", m2))}
-                as win_hash
-        from roll_d
-        join roll_p on roll_p.e = {maxlen} - roll_d.pos
+def window_key_sql(terms: list[str], maxlen: int = DEFAULT_MAXLEN) -> str:
+    """The key of ONE window as SQL text over its n token hashes ``terms``
+    (h60 values, in window order): per hash pair
+    H0 = sum_j th_j * B**j mod M (one modmul by a literal power < M per
+    token; the sum of n terms stays below n * 2**40), then
+    modmul(H0, B**maxlen), packed. That is the value
+    rolling_window_hashes(k=n, maxlen) reaches through prefix sums and
+    the complement power, so the two forms are equal by construction.
+
+    modmul_sql spells H0 twice; Spark's subexpression elimination moves
+    it into methods of its own, which keeps the per-row code of an
+    n-gram key under the JVM's 8,000-byte JIT limit to about n = 26
+    (folded into one B**(maxlen + j) literal per token, the 16-gram key
+    outgrew it and ran interpreted, 4x slower)."""
+    def half(b: int, m: int) -> str:
+        h0 = "(" + " + ".join(
+            modmul_sql(f"({t}) % {m}", str(pow(b, j, m)), m)
+            for j, t in enumerate(terms)
+        ) + f") % {m}"
+        return modmul_sql(h0, str(pow(b, maxlen, m)), m)
+
+    return pack_sql(half(ROLL_B1, ROLL_M1), half(ROLL_B2, ROLL_M2))
+
+
+def window_key_oracle_cte(src: str, n: int, maxlen: int = DEFAULT_MAXLEN,
+                          name: str = "win") -> str:
+    """DuckDB CTE ``name`` (doc_id, pos, win_hash): every n-token window
+    of each row of the relation ``src`` (doc_id, text), keyed by
+    :func:`window_key_sql` over the row's h60 token array. Docs shorter
+    than n tokens (and NULL text) yield none."""
+    terms = [f"th[i + {j}]" for j in range(1, n + 1)]
+    return f"""{name} as (
+        select doc_id, i as pos, {window_key_sql(terms, maxlen)} as win_hash
+        from (select doc_id, list_transform(string_split(text, ' '),
+                                            t -> {h60_sql("t")}) as th
+              from {src}),
+             lateral unnest(range(len(th) - {n - 1})) as u(i)
     )"""
 
 

@@ -6,10 +6,11 @@ oracle-checkable; Python's salted ``hash()`` is never used, cf. SURVEY.md
 §2.5 H13):
 
 - exact:     sha2-256 content groups → canonical (min id) per group.
-- MinHash:   word-shingles → k independent min-hashes (min over md5 of a
-             seed-prefixed shingle) → banded LSH bucket join → candidate
-             pairs. The band join is the classic sub-quadratic near-dup
-             path; AQE skew-join handles hot buckets.
+- MinHash:   word n-gram window keys → k independent min-hashes (min
+             over a seeded integer mix of each key) → banded LSH bucket
+             join → candidate pairs. The band join is the classic
+             sub-quadratic near-dup path; AQE skew-join handles hot
+             buckets.
 - SimHash:   per-token md5-derived bit votes → fixed-width signature;
              hamming-adjacent signatures are near-dups.
 - n-gram Jaccard: shared-shingle join with document-frequency capping (stop
@@ -21,17 +22,24 @@ shingle join's worst key; signatures are tiny (k bigints) relative to text,
 so the wide text column is dropped before any shuffle.
 
 Every md5-derived key is the 60-bit key of functions/rolling (``h60`` here,
-``h60_sql`` in the DuckDB oracles); the MinHash oracle chain is built once
-by :func:`minhash_oracle_ctes`.
+``h60_sql`` in the DuckDB oracles), and every n-gram key is rolling's
+window key: :func:`doc_shingle_hashes` evaluates ``window_key_sql`` per
+row for MinHash, Jaccard and contamination, duplicate_spans and
+winnow_fingerprints use ``rolling_window_hashes``, and the oracles use
+``window_key_oracle_cte``. The MinHash oracle chain is built once by
+:func:`minhash_oracle_ctes`.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.rolling import h60, h60_sql
+from ..functions.rolling import (
+    ROLL_M1, h60, modmul_sql, window_key_oracle_cte, window_key_sql)
 
 DEFAULT_SHINGLE_N = 3
 DEFAULT_MINHASH_K = 8
@@ -40,68 +48,40 @@ DEFAULT_DF_CAP = 50          # drop shingles present in more docs than this
 SIMHASH_BITS = 16
 
 
-def shingle_transform(toks: Column, n: int = DEFAULT_SHINGLE_N) -> Column:
-    """Distinct word n-gram shingles from a TOKEN-ARRAY column: transform
-    over a sequence of start offsets + slice + concat.
-
-    ``toks`` should be a materialized column (a projected attribute), not
-    an inline ``split(...)`` expression: higher-order-function lambdas are
-    interpreted and re-evaluate captured non-attribute expressions on
-    EVERY element, turning the build O(n_tokens^2) per document —
-    measured 4.5x slower on the shingle stage (r6).
-
-    Documents shorter than n tokens yield an empty array — guarded
-    explicitly because F.sequence(1, 0) produces the DESCENDING [1, 0] and
-    slice(…, 0, n) throws, killing the whole job on one short doc."""
-    n_sh = F.size(toks) - F.lit(n - 1)
-    return F.when(
-        n_sh >= 1,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n_sh),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def doc_shingles(df: DataFrame, id_col: str, text_col: str,
-                 n: int = DEFAULT_SHINGLE_N) -> DataFrame:
-    """Long (id, shingle) pairs; text column dropped before the explode so
-    the shuffle payload is just id+shingle.
+def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str,
+                       n: int = DEFAULT_SHINGLE_N) -> DataFrame:
+    """Long (doc_id, sh_hash int64) pairs: the key of every n-token window
+    of each document, rolling.window_key_sql evaluated inside the row —
+    equal to rolling_window_hashes(k=n)'s win_hash, with no Exchange. A
+    window repeated within a document repeats its pair; docs shorter than
+    n tokens (and NULL text) yield none.
 
     The projected (id, text) relation is parallelism-rescued first: a
-    single-row-group source otherwise serializes the shingle explosion +
-    hashing on one core (no-op on well-partitioned inputs — see
-    partitioning.ensure_min_parallelism). The token split is materialized
-    as its own projection so the shingle lambda slices a bound attribute
-    (multi-referenced, so CollapseProject keeps it hoisted) — one split
-    per document, not one per shingle."""
+    single-row-group source otherwise serializes the keying on one core
+    (no-op on well-partitioned inputs — see
+    partitioning.ensure_min_parallelism). The token hashes are one h60
+    per token in a materialized array; a posexplode of its first
+    size - n + 1 hashes gives each window's start and first term, and
+    the other n - 1 terms index the array. (An arrays_zip of n slices
+    generated code too large for the JIT at n = 13: 4x slower.)"""
     from ..partitioning import ensure_min_parallelism
 
     slim = ensure_min_parallelism(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
     )
-    toks = slim.select("doc_id", F.split(F.col("_t"), " ").alias("_toks"))
-    return (
-        toks.select("doc_id", shingle_transform(F.col("_toks"), n).alias("sh"))
-        .select("doc_id", F.explode("sh").alias("shingle"))
+    th = slim.select(
+        "doc_id", F.transform(F.split(F.col("_t"), " "), h60).alias("_th")
     )
-
-
-def doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str,
-                       n: int = DEFAULT_SHINGLE_N) -> DataFrame:
-    """Long (doc_id, sh_hash int64) pairs: md5-prefix hash of each shingle.
-
-    The pair join shuffles an 8-byte key instead of a ~20-byte string —
-    the dominant cost of the shared-shingle join at corpus scale. The key
-    is rolling.h60, portable to the DuckDB oracle (rolling.h60_sql); 60-bit
-    collisions are negligible for dedup purposes.
-    """
-    h = h60(F.col("shingle"))
-    return doc_shingles(df, id_col, text_col, n).select(
-        "doc_id", h.alias("sh_hash")
-    )
+    n_win = F.greatest(F.size("_th") - F.lit(n - 1), F.lit(0))
+    wins = th.select("doc_id", "_th", F.posexplode(
+        F.slice("_th", 1, n_win)).alias("_i", "_t0"))
+    terms = ["_t0"] + [f"_th[_i + {j}]" for j in range(1, n)]
+    # never NULL (every term is an in-range h60), but Catalyst cannot see
+    # that: a join on a nullable key infers isnotnull(key) and pushes it
+    # below this projection as a second copy of the whole key expression
+    # (contamination_check ran 5x slower); coalesce makes it non-nullable
+    key = F.coalesce(F.expr(window_key_sql(terms)), F.lit(0).cast("long"))
+    return wins.select("doc_id", key.alias("sh_hash"))
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -126,33 +106,53 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def minhash_seed_coeffs(k: int) -> list[tuple[int, int]]:
+    """The (a, b) of each of the k seeds' mix a * x + b mod ROLL_M1
+    (1 <= a < M, 0 <= b < M): plan-time literals, derived from md5 so
+    every engine and the Python twin read the same draw."""
+    def draw(tag: str) -> int:
+        return int(hashlib.md5(tag.encode()).hexdigest(), 16)
+
+    return [(draw(f"minhash:{s}:a") % (ROLL_M1 - 1) + 1,
+             draw(f"minhash:{s}:b") % ROLL_M1) for s in range(k)]
+
+
+def minhash_mix_sql(key: str, a: str, b: str) -> str:
+    """One seed's hash of a window key as SQL text both engines evaluate:
+    (a * (key mod M) + b) mod M, M = rolling.ROLL_M1 prime < 2**40 —
+    a universal-hash draw per seed from the one key; the modmul keeps
+    every product < 2**62."""
+    m = ROLL_M1
+    return f"({modmul_sql(f'({key}) % {m}', a, m)} + ({b})) % {m}"
+
+
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        k: int = DEFAULT_MINHASH_K,
                        n: int = DEFAULT_SHINGLE_N) -> DataFrame:
     """(doc_id, seed, minhash bigint): k independent min-hashes per document.
 
-    h_seed(s) = the 60-bit key (rolling.h60) of seed || ':' || s; the
-    numeric minimum per seed is a valid MinHash. Portable across
-    Spark/DuckDB: :func:`minhash_oracle_ctes` is the oracle twin.
+    h_seed(w) = :func:`minhash_mix_sql` of the window key
+    (:func:`doc_shingle_hashes`) with the seed's coefficients; the numeric
+    minimum per seed is a valid MinHash. One md5 per token feeds all k
+    seeds. Portable across Spark/DuckDB: :func:`minhash_oracle_ctes` is
+    the oracle twin.
 
-    The minhash is NUMERIC (bigint), not the hex string, deliberately: min()
+    The minhash is NUMERIC (bigint), not a hex string, deliberately: min()
     over a string buffer is not eligible for Spark's hash-aggregate fast
     path (ObjectHashAggregate/SortAggregate fallback — the r03 plan showed
     SortAggregate on both sides of the Exchange, sorting every partition by
     doc_id twice). Primitive bigint buffers keep the k min() aggregates in
     HashAggregate with map-side partial aggregation.
 
-    Plan shape: explode(shingles) → single groupBy(doc_id) with k min()
+    Plan shape: explode(windows) → single groupBy(doc_id) with k min()
     aggregates — one shuffle, HashAggregate both sides.
     """
-    pairs = doc_shingles(df, id_col, text_col, n)
+    keys = doc_shingle_hashes(df, id_col, text_col, n)
     aggs = [
-        F.min(
-            h60(F.concat(F.lit(f"{seed}:"), F.col("shingle")))
-        ).alias(f"mh{seed}")
-        for seed in range(k)
+        F.min(F.expr(minhash_mix_sql("sh_hash", str(a), str(b)))).alias(f"mh{seed}")
+        for seed, (a, b) in enumerate(minhash_seed_coeffs(k))
     ]
-    wide = pairs.groupBy("doc_id").agg(*aggs)
+    wide = keys.groupBy("doc_id").agg(*aggs)
     stacked = F.array(
         *[
             F.struct(F.lit(seed).alias("seed"), F.col(f"mh{seed}").alias("minhash"))
@@ -186,33 +186,21 @@ def minhash_bands(signatures: DataFrame, band_rows: int = DEFAULT_BAND_ROWS) -> 
     )
 
 
-def shingle_oracle_cte(src: str, n: int = DEFAULT_SHINGLE_N,
-                       name: str = "sh") -> str:
-    """DuckDB twin of :func:`doc_shingles` as one CTE ``name`` (doc_id,
-    shingle): the distinct word n-grams of each row of the relation
-    ``src`` (doc_id, text). Docs shorter than n tokens yield none."""
-    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(1, n + 1))
-    return f"""{name} as (
-        select distinct doc_id, {gram} as shingle
-        from (select doc_id, string_split(text, ' ') as toks from {src}),
-             lateral unnest(range(len(toks) - {n - 1})) as u(i)
-    )"""
-
-
 def minhash_oracle_ctes(src: str, k: int = DEFAULT_MINHASH_K,
                         band_rows: int = DEFAULT_BAND_ROWS,
                         prefix: str = "") -> str:
     """DuckDB twin of :func:`minhash_signatures` + :func:`minhash_bands`
     as a CTE chain over the relation ``src`` (doc_id, text). Exposes
-    ``{prefix}sh`` (doc_id, shingle), ``{prefix}sig`` (doc_id, seed, mh)
-    and ``{prefix}bands`` (doc_id, band, band_hash); ``prefix`` keeps two
-    chains in one query apart."""
-    mh = h60_sql("cast(seed as varchar) || ':' || shingle")
+    ``{prefix}win`` (doc_id, pos, win_hash), ``{prefix}sig`` (doc_id,
+    seed, mh) and ``{prefix}bands`` (doc_id, band, band_hash); ``prefix``
+    keeps two chains in one query apart."""
+    seeds = ", ".join(f"({s}, {a}::bigint, {b}::bigint)"
+                      for s, (a, b) in enumerate(minhash_seed_coeffs(k)))
     band = f"cast(seed // {band_rows} as int)"
-    return f"""{shingle_oracle_cte(src, name=prefix + "sh")},
+    return f"""{window_key_oracle_cte(src, DEFAULT_SHINGLE_N, name=prefix + "win")},
     {prefix}sig as (
-        select doc_id, seed, min({mh}) as mh
-        from {prefix}sh cross join (select unnest(range({k})) as seed)
+        select doc_id, seed, min({minhash_mix_sql("win_hash", "a", "b")}) as mh
+        from {prefix}win cross join (values {seeds}) as s(seed, a, b)
         group by doc_id, seed
     ),
     {prefix}bands as (
@@ -421,7 +409,9 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     Numerator AND denominator use the same capped universe: mixing uncapped
     set sizes with a capped intersection would bias J downward for
     boilerplate-heavy near-duplicates (stop-shingles inflating only the
-    denominator). All joins run on 8-byte shingle hashes, not strings.
+    denominator). All joins run on 8-byte window keys
+    (:func:`doc_shingle_hashes`), not strings; a window a document
+    repeats counts once, since each key's doc list is a set.
     """
     pairs = doc_shingle_hashes(df, id_col, text_col, n)
     # One groupBy collects each rare shingle's (sorted, distinct) doc list;

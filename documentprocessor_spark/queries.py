@@ -28,9 +28,9 @@ from pyspark.sql.window import Window
 
 from . import reference_semantics as ref_sem
 from .functions.rolling import h60_sql
-from .functions.rolling import rolling_oracle_ctes as _roll_ctes
+from .functions.rolling import window_key_oracle_cte
 from .operators import dedup, similarity, textstats
-from .operators.dedup import minhash_oracle_ctes, shingle_oracle_cte
+from .operators.dedup import minhash_oracle_ctes
 from .plans.pipeline import extract_from_pages
 from .sources.tables import load_table
 
@@ -1032,8 +1032,7 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational form): maximal token ranges covered by a 20-token window
     that appears verbatim in >= 2 distinct documents. k=20 (not the
     production 50) because the sf corpus averages ~54 tokens/doc;
-    maxlen=1024 keeps the oracle's recursive powers CTE small (fixture
-    docs are <= 100 tokens)."""
+    maxlen=1024 bounds tokens/doc (fixture docs are <= 100 tokens)."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.duplicate_spans(docs, "doc_id", "text", k=20, maxlen=1024)
 
@@ -1041,17 +1040,15 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lag must sit in its own CTE (DuckDB can't nest window fns), the interval
 # union is the same lag/cumsum sessionization as the Spark side; all keys
 # bigint (range's i is bigint; Spark casts span_start to long to match).
-# Window hashes are the Rabin-Karp rolling CTEs generated from
-# functions/rolling.py — ONE spelling shared with the Spark side.
+# Window hashes are rolling.window_key_oracle_cte — the per-row key text
+# the Spark side's prefix-sum rolling_window_hashes must equal.
 def _span_oracle_ctes(k: int, maxlen: int) -> str:
     """The ExactSubstr detection CTEs both span oracles share, over the
     `documents` view: k-token window hashes seen in 2..1000 distinct docs
     (dedup.duplicate_spans' min_docs / df_cap defaults), merged per doc
     into `spans(doc_id, s, e, n_windows)` — maximal [s, e) token ranges
-    and how many duplicated windows each absorbs. Open with `with
-    recursive` (the powers CTE recurses)."""
-    return f"""docs_src as (select doc_id, text from documents),
-    {_roll_ctes(k=k, maxlen=maxlen)},
+    and how many duplicated windows each absorbs."""
+    return f"""{window_key_oracle_cte("documents", k, maxlen, "roll_win")},
     win as (select doc_id, pos as span_start, win_hash from roll_win),
     dup as (
         select win_hash from win
@@ -1079,7 +1076,7 @@ def _span_oracle_ctes(k: int, maxlen: int) -> str:
 
 
 _ORACLE_DEDUP_SPANS = f"""
-    with recursive {_span_oracle_ctes(k=20, maxlen=1024)}
+    with {_span_oracle_ctes(k=20, maxlen=1024)}
     select doc_id, s as span_start, e - s as span_len, n_windows from spans
 """
 
@@ -1099,7 +1096,7 @@ def q_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # string_agg in position order rebuilds the text; docs whose every token
 # is covered collapse to '' via the left-join coalesce.
 _ORACLE_SPAN_REMOVAL = f"""
-    with recursive {_span_oracle_ctes(k=20, maxlen=1024)},
+    with {_span_oracle_ctes(k=20, maxlen=1024)},
     tok as (select doc_id, string_split(text, ' ') as toks from documents),
     toks2 as (
         select doc_id, i, toks[i + 1] as t
@@ -1258,8 +1255,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ORACLE_WINNOW = f"""
-    with recursive docs_src as (select doc_id, text from documents),
-    {_roll_ctes(k=5, maxlen=1024)},
+    with {window_key_oracle_cte("documents", 5, 1024, "roll_win")},
     win as (select doc_id, pos, win_hash as h from roll_win),
     keyed as (
         select doc_id, pos,
@@ -1492,8 +1488,8 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ORACLE_JACCARD = f"""
-    with {shingle_oracle_cte("documents")},
-    shh as (select doc_id, {h60_sql("shingle")} as sh_hash from sh),
+    with {window_key_oracle_cte("documents", 3)},
+    shh as (select distinct doc_id, win_hash as sh_hash from win),
     rare as (
         select sh_hash from shh group by sh_hash having count(*) <= 50
     ),
@@ -4706,11 +4702,8 @@ _ORACLE_CONTAMINATION = f"""
                 then ' ' || {_SPAN_SQL} else '' end as text
         from documents
     ),
-    {shingle_oracle_cte("salted", 13, "grams")},
-    sh as (
-        select doc_id, {h60_sql("shingle")} as sh_hash
-        from grams group by doc_id, sh_hash
-    ),
+    {window_key_oracle_cte("salted", 13, name="grams")},
+    sh as (select distinct doc_id, win_hash as sh_hash from grams),
     bench as (
         select sh_hash, count(*) as n_bench
         from sh where doc_id % 37 = 0

@@ -42,19 +42,25 @@ def hadoop_fs(spark: SparkSession, path: str):
 
 def read_committed(spark: SparkSession, path: str) -> DataFrame | None:
     """The parquet table a job committed at ``path``, or None when nothing
-    is committed there: the path is missing (``PATH_NOT_FOUND``), or it is
-    a directory with no data files — empty, or holding only the
-    ``_temporary`` of a first write killed before its commit
-    (``UNABLE_TO_INFER_SCHEMA``). Every other failure raises: a corrupt
-    file, a permission or filesystem error. Read as "nothing committed",
-    an unreadable commit marker would make a resumed job redo and
-    re-append everything it had committed."""
+    is committed there: the path is missing, or it is a directory with no
+    data files — empty, or holding only the ``_temporary`` of a first
+    write killed before its commit (``UNABLE_TO_INFER_SCHEMA``). Every
+    other failure raises: a corrupt file, a permission or filesystem
+    error. Read as "nothing committed", an unreadable commit marker would
+    make a resumed job redo and re-append everything it had committed.
+
+    A missing path is found through the Hadoop FS, never by a failed
+    read: in a session with an Observation, a read that fails with
+    PATH_NOT_FOUND logs a listener stack trace at ERROR."""
     from pyspark.errors import AnalysisException
 
+    fs, Path = hadoop_fs(spark, path)
+    if not fs.exists(Path(path)):
+        return None
     try:
         return spark.read.parquet(path)
     except AnalysisException as e:
-        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
             return None
         raise
 
@@ -68,23 +74,16 @@ def write_results(df: DataFrame, path_or_table: str, partition_col: str = "url_b
 
 
 def read_results(
-    spark: SparkSession,
-    path: str,
-    merge_schema: bool = True,
-    tolerate_corrupt: bool = False,
+    spark: SparkSession, path: str, merge_schema: bool = True
 ) -> DataFrame:
     """Read the results table back — the read twin of ``write_results``.
 
     ``merge_schema=True`` unions column sets across partition files: a
     long-lived 100 TB results table accretes columns as job versions add
     fields, and a schema pinned to one footer silently drops the others'.
-    ``tolerate_corrupt=True`` skips unreadable files for this read only
-    (per-read option, never a global session flag — a backfill job wants
-    the failure, an analytics read may prefer the rows that survive)."""
-    reader = spark.read.option("mergeSchema", str(merge_schema).lower())
-    if tolerate_corrupt:
-        reader = reader.option("ignoreCorruptFiles", "true")
-    return reader.parquet(path)
+    A corrupt file fails the read."""
+    return spark.read.option(
+        "mergeSchema", str(merge_schema).lower()).parquet(path)
 
 
 def compact_results(

@@ -7,9 +7,13 @@ persisted dedup index.
         [--bloom-m-bits 1048576 [--bloom-hashes 4]] [--update-index]
 
 The index dir holds the two relations ``build_dedup_index`` emits —
-``<index>/content_hashes`` and ``<index>/bands`` (parquet). A missing or
-empty index bootstraps: every delta doc is kept and (with
-``--update-index``) becomes the first index generation.
+``<index>/content_hashes`` and ``<index>/window_bands`` (parquet). A
+missing or empty index bootstraps: every delta doc is kept and (with
+``--update-index``) becomes the first index generation. Bands are named
+after the MinHash they come from: an index whose bands predate the
+window-key MinHash keeps them in ``<index>/bands``, which never meet
+today's bands, so the job refuses it (rebuild the index) rather than
+silently stop finding near-duplicates against history.
 
 Two probe shapes, chosen by flag:
 
@@ -66,7 +70,7 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
     delta = spark.read.parquet(args.input)
 
     hashes_dir = f"{args.index}/content_hashes"
-    bands_dir = f"{args.index}/bands"
+    bands_dir = f"{args.index}/window_bands"
 
     # a missing or empty index bootstraps; an unreadable one raises
     # rather than keep every delta doc and append beside it
@@ -79,17 +83,22 @@ def main(argv: list[str] | None = None, *, stop_session: bool = True) -> None:
             F.col(args.id_col).alias("doc_id"),
             F.lit(None).cast("string").alias("drop_reason"),
         )
+    elif ib is None and (args.bloom_m_bits is None or args.update_index):
+        # appending bands to an index without them would leave a bands
+        # table that covers only the newest generations
+        raise SystemExit(
+            f"index has {hashes_dir} but no {bands_dir}; the default probe "
+            "and --update-index need both. Rebuild the index "
+            "(operators.dedup.build_dedup_index over its corpus): bands in "
+            f"{args.index}/bands predate the window-key MinHash and never "
+            "match. --bloom-m-bits without --update-index probes exact-only."
+        )
     elif args.bloom_m_bits is not None:
         annotated = dedup.bloom_prefilter_dedup(
             delta, ih, args.id_col, args.text_col,
             m_bits=args.bloom_m_bits, n_hashes=args.bloom_hashes,
         )
     else:
-        if ib is None:
-            raise SystemExit(
-                f"index has {hashes_dir} but no {bands_dir}; the default "
-                "probe needs both (use --bloom-m-bits for exact-only)"
-            )
         annotated = dedup.incremental_dedup(
             delta, ih, ib, args.id_col, args.text_col,
             k=args.minhash_k, band_rows=args.band_rows,

@@ -246,7 +246,7 @@ def test_read_results_merges_evolved_schemas(spark, tmp_path):
     assert got["u2"].quality == 0.9 and got["u1"].quality is None
 
 
-def test_read_results_tolerates_corrupt_files_only_when_asked(spark, tmp_path):
+def test_read_results_raises_on_a_corrupt_file(spark, tmp_path):
     import pytest as _pytest
 
     from documentprocessor_spark.sources.tables import read_results
@@ -258,10 +258,8 @@ def test_read_results_tolerates_corrupt_files_only_when_asked(spark, tmp_path):
     (tmp_path / "res2" / "url_bucket=0" / "junk.parquet").write_bytes(
         b"PAR1 this is not a real parquet file"
     )
-    rows = read_results(spark, p, tolerate_corrupt=True).collect()
-    assert [r.url for r in rows] == ["u1"]
     with _pytest.raises(Exception):
-        read_results(spark, p).collect()  # default surfaces the corruption
+        read_results(spark, p).collect()  # the corruption surfaces
 
 
 # ---------------------------------------------------------------------------
@@ -674,7 +672,7 @@ def test_ingest_dedup_job_reads_its_index_by_the_commit_rule(
         return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
     empty = tmp_path / "empty_index"
-    for table in ("content_hashes", "bands"):
+    for table in ("content_hashes", "window_bands"):
         os.makedirs(empty / table / "_temporary" / "0")
     assert run(str(empty), "out0")["probe"] == "bootstrap"
 
@@ -689,6 +687,39 @@ def test_ingest_dedup_job_reads_its_index_by_the_commit_rule(
     with pytest.raises(Exception):
         run(idx, "out2")
     assert not os.path.exists(tmp_path / "out2" / "kept")
+
+
+def test_ingest_dedup_job_refuses_an_index_without_current_bands(
+        spark, tmp_path, capsys):
+    """An index whose bands predate the window-key MinHash (kept in
+    ``<index>/bands``) never matches today's bands: the default probe and
+    --update-index exit naming a rebuild instead of silently finding no
+    near-duplicates; an exact-only bloom probe still runs."""
+    import json
+    import shutil
+
+    from jobs.ingest_dedup_job import main
+
+    src = str(tmp_path / "delta")
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        ["doc_id", "text"],
+    ).write.parquet(src)
+    idx = str(tmp_path / "index")
+    main(["--input", src, "--index", idx, "--output", str(tmp_path / "o0"),
+          "--update-index"], stop_session=False)
+    shutil.move(f"{idx}/window_bands", f"{idx}/bands")
+    capsys.readouterr()
+
+    for flags in ([], ["--update-index"],
+                  ["--bloom-m-bits", "1024", "--update-index"]):
+        with pytest.raises(SystemExit, match="Rebuild the index"):
+            main(["--input", src, "--index", idx, "--output",
+                  str(tmp_path / "o1"), *flags], stop_session=False)
+    main(["--input", src, "--index", idx, "--output", str(tmp_path / "o2"),
+          "--bloom-m-bits", "1024"], stop_session=False)
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["probe"] == "bloom" and stats["by_reason"] == {"exact": 1}
 
 
 def _curate_cli(tmp_path, out, *flags):

@@ -37,17 +37,49 @@ def test_exact_duplicates(docs_df):
 
 
 def test_minhash_signature_matches_python(docs_df):
-    """minhash = min over shingles of the first 60 bits of md5 as int64
-    (numeric so the Spark agg buffer is primitive → HashAggregate)."""
+    """minhash = min over the doc's 3-token window keys (the Python twin
+    py_window_hashes) of the seed's mix (a * (key mod M) + b) mod M, as
+    int64 (numeric so the Spark agg buffer is primitive → HashAggregate)."""
+    from documentprocessor_spark.functions.rolling import (
+        ROLL_M1, py_window_hashes)
+
     sigs = dedup.minhash_signatures(docs_df, "doc_id", "text", k=4)
     got = {(r["doc_id"], r["seed"]): r["minhash"] for r in sigs.collect()}
     for doc_id, text in DOCS:
-        for seed in range(4):
-            expected = min(
-                int(hashlib.md5(f"{seed}:{s}".encode()).hexdigest()[:15], 16)
-                for s in py_shingles(text)
-            )
+        keys = [h for _, h in py_window_hashes(text.split(" "), 3)]
+        for seed, (a, b) in enumerate(dedup.minhash_seed_coeffs(4)):
+            expected = min((a * (h % ROLL_M1) + b) % ROLL_M1 for h in keys)
             assert got[(doc_id, seed)] == expected, (doc_id, seed)
+
+
+def test_ngram_keys_hash_each_token_once(spark, docs_df):
+    """MinHash, Jaccard and contamination key their n-grams with one md5
+    per TOKEN, inside the token-hash transform of each text input — no
+    md5 per shingle, and none per seed. (Jaccard's persisted relation is
+    printed once per consumer, with the same attribute ids.)"""
+    import re
+
+    from documentprocessor_spark.operators.contamination import (
+        contamination_overlap)
+
+    plans = {
+        "minhash": (dedup.minhash_signatures(
+            docs_df, "doc_id", "text", k=8), 1),
+        "jaccard": (dedup.ngram_jaccard_pairs(
+            docs_df, "doc_id", "text", threshold=0.2), 1),
+        "contamination": (contamination_overlap(
+            docs_df, docs_df.where("doc_id < 3"), n=5), 2),
+    }
+    for name, (df, inputs) in plans.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        md5s = re.findall(r"md5\(", plan)
+        in_transform = re.findall(
+            r"transform\(split\([^)]*\), lambdafunction\(cast\(conv\("
+            r"substring\(md5\(cast\(lambda ", plan)
+        token_hashes = set(re.findall(r"\) AS _th#(\d+)", plan))
+        assert len(md5s) == len(in_transform), (name, plan)
+        assert len(token_hashes) == inputs, (name, plan)
+    dedup.release_jaccard_cache()
 
 
 def test_minhash_signature_plans_hash_aggregate(docs_df):
@@ -257,23 +289,40 @@ def test_remove_duplicate_spans_fully_covered_doc_empties(spark):
 
 def test_incremental_dedup_annotates_delta(spark):
     """Even ids = ingested corpus with its persisted index; odd ids = new
-    delta. Exact copy -> 'exact'; near-dup -> 'near'; fresh -> NULL;
-    exact outranks near."""
+    delta. Exact copy -> 'exact'; a band collision with the index ->
+    'near'; fresh -> NULL; exact outranks near.
+
+    Doc 3 (Jaccard 0.556 to doc 0) is caught by LSH with k=8,
+    band_rows=2 only with probability ~0.77 under any hash family, so its
+    expected annotation follows from whether its bands meet the index's
+    — the operator is checked, not one draw. Doc 7 differs from doc 4 in
+    its last token only (Jaccard 0.98, caught with probability
+    > 0.9999) and must be 'near'."""
+    long_text = " ".join(f"w{i}" for i in range(100))
     old = spark.createDataFrame(
         [(0, "the quick brown fox jumps over the lazy dog"),
-         (2, "completely different content about spark engines")],
+         (2, "completely different content about spark engines"),
+         (4, long_text)],
         ["doc_id", "text"],
     )
     delta = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),     # exact
-         (3, "the quick brown fox jumps over the sleepy dog"),   # near
-         (5, "entirely novel words never indexed before today")],
+         (3, "the quick brown fox jumps over the sleepy dog"),   # J 0.556
+         (5, "entirely novel words never indexed before today"),
+         (7, long_text.rsplit(" ", 1)[0] + " changed")],         # J 0.98
         ["doc_id", "text"],
     )
     ih, ib = dedup.build_dedup_index(old, "doc_id", "text")
     got = {r["doc_id"]: r["drop_reason"] for r in
            dedup.incremental_dedup(delta, ih, ib, "doc_id", "text").collect()}
-    assert got == {1: "exact", 3: "near", 5: None}
+    index_bands = {(r["band"], r["band_hash"]) for r in ib.collect()}
+    doc3_bands = {
+        (r["band"], r["band_hash"])
+        for r in dedup.minhash_bands(dedup.minhash_signatures(
+            delta.where("doc_id = 3"), "doc_id", "text")).collect()
+    }
+    doc3 = "near" if doc3_bands & index_bands else None
+    assert got == {1: "exact", 3: doc3, 5: None, 7: "near"}
 
 
 def test_bloom_prefilter_no_false_negatives(spark):

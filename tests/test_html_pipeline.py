@@ -267,6 +267,32 @@ def test_manifest_of_only_temporary_is_nothing_committed(
     assert committed.select("url").distinct().count() == corpus_pages.count()
 
 
+def test_read_committed_of_a_missing_path_never_reads(
+        spark, tmp_path, monkeypatch):
+    """A missing path is "nothing committed" without a read: a failed
+    read logs a listener stack trace in a session that has run an
+    Observation. A directory with no data files still goes through the
+    read and its UNABLE_TO_INFER_SCHEMA rule."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from documentprocessor_spark.sources.tables import read_committed
+
+    (tmp_path / "empty").mkdir()
+    reads = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        reads.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    assert read_committed(spark, str(tmp_path / "missing")) is None
+    assert read_committed(spark, f"file://{tmp_path}/missing") is None
+    assert reads == []
+    assert read_committed(spark, str(tmp_path / "empty")) is None
+    assert reads == [(str(tmp_path / "empty"),)]
+
+
 def test_run_job_counts_come_from_the_write_plan(
         spark, corpus_pages, tmp_path, monkeypatch):
     """rows_in, rows_skipped_resume and rows_total_committed are observed

@@ -368,6 +368,34 @@ def test_rolling_window_hashes_match_python_twin(spark, texts, k):
     assert got == want
 
 
+@given(texts=st.lists(st.one_of(st.none(), _roll_doc), min_size=1,
+                      max_size=5),
+       n=st.sampled_from([3, 5, 13]))
+@settings(max_examples=12, deadline=None)
+def test_per_row_window_keys_equal_rolling_and_python(spark, texts, n):
+    """The one n-gram key: dedup.doc_shingle_hashes (window_key_sql per
+    row), rolling_window_hashes(k=n) (prefix sums) and py_window_hashes
+    give the same multiset of keys per doc — on empty, short, NULL and
+    repeated-token docs."""
+    from collections import Counter
+
+    from documentprocessor_spark.functions.rolling import (
+        py_window_hashes, rolling_window_hashes)
+    from documentprocessor_spark.operators.dedup import doc_shingle_hashes
+
+    docs = [(i, t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    per_row, rolled = {}, {}
+    for r in doc_shingle_hashes(df, "doc_id", "text", n).collect():
+        per_row.setdefault(r.doc_id, Counter())[r.sh_hash] += 1
+    for r in rolling_window_hashes(df, "doc_id", "text", n).collect():
+        rolled.setdefault(r.doc_id, Counter())[r.win_hash] += 1
+    want = {i: Counter(h for _, h in py_window_hashes(t.split(" "), n))
+            for i, t in docs if t is not None}
+    want = {i: c for i, c in want.items() if c}
+    assert per_row == rolled == want
+
+
 def test_rolling_maxlen_boundary_twins_agree(spark):
     """Both twins draw the maxlen boundary identically (r5 advice found
     them one row apart): exactly maxlen tokens computes on both sides, one

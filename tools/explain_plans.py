@@ -49,16 +49,16 @@ COMMENTARY = {
         "decided at runtime."
     ),
     "dedup_minhash_signatures": (
-        "explode(shingles) → single groupBy(doc_id) with k min() "
-        "aggregates; one shuffle on doc_id. The minhash is NUMERIC "
-        "(bigint from the md5 prefix) so the agg buffers are primitive: "
+        "explode(window keys) → single groupBy(doc_id) with k min() "
+        "aggregates; one shuffle on doc_id. The keys are rolling's "
+        "window key evaluated per row (one md5 per token inside the "
+        "token-hash transform, a posexplode of the window starts, one "
+        "key expression — no Exchange before the aggregate but the "
+        "parallelism rescue) and the k seeds are mixed from that one key "
+        "by integer arithmetic (before: 8 md5 per string shingle). The "
+        "minhash is NUMERIC so the agg buffers are primitive: "
         "HashAggregate with map-side partial aggregation on BOTH sides of "
-        "the Exchange — the r03 hex-string form fell back to SortAggregate. "
-        "r6: the token split is a materialized projection (not captured "
-        "inline by the shingle lambda) and the session excludes "
-        "InferFiltersFromGenerate, so the shingle build runs once per "
-        "document instead of O(n_tokens) times — measured 31.3s → 1.7s "
-        "at sf1."
+        "the Exchange — the r03 hex-string form fell back to SortAggregate."
     ),
     "dedup_spans": (
         "ExactSubstr span dedup, count-then-join: window hashes are the "
@@ -219,10 +219,11 @@ COMMENTARY = {
         "codegen. Packs never span partitions, so no global sort exists."
     ),
     "contamination_check": (
-        "Decontamination: corpus shingles stream map-side into a "
-        "BroadcastHashJoin against the distinct'd benchmark shingle set "
-        "(MB-scale vs TB-scale — the TB side never shuffles to join); one "
-        "Exchange for the per-doc aggregate."
+        "Decontamination: corpus 13-gram window keys stream map-side into "
+        "a BroadcastHashJoin against the distinct'd benchmark key set "
+        "(MB-scale vs TB-scale — the TB side never shuffles to join); the "
+        "joined hits are made distinct per (doc, key), then one Exchange "
+        "for the per-doc aggregate."
     ),
     "c4_line_filter": (
         "C4 line cleaning: the whole line re-layout + filter chain is "
