@@ -13,6 +13,7 @@ pure Python — every product and sum is proven < 2**63):
                                                 per window)
     H0[i]  = th[i] + th[i+1]*B + ... + th[i+k-1]*B**(k-1)   mod M
     H[i]   = B**L * H0[i]                                   mod M
+                                                (L = DEFAULT_MAXLEN)
 
 so identical windows at different positions (and in different documents)
 collide exactly. Two independent (B, M) pairs run in parallel and pack
@@ -41,28 +42,29 @@ Two evaluators compute the same H[i]:
   factor without a modular inverse. Spans and winnowing (k = 50 and 5 by
   default) use it: at k = 50 the per-row form measured 2.5-5.7x slower.
 
-B**e mod M for the prefix-sum form comes from two small driver-built
-broadcast tables, NOT a per-row fold and NOT one row per exponent: with
-e = hi * 2**11 + lo,
+L is the key's constant DEFAULT_MAXLEN = 2**16. B**e mod M for the
+prefix-sum form (e = i for a[i], e = L - i for the complement, both in
+[0, L]) is computed inside the row expression, from literal arrays: the
+6-bit digits e = d0 + d1 * 2**6 + d2 * 2**12 each index one array,
 
-    lo[lo] = B**lo          mod M   (2**11 rows)
-    hi[hi] = B**(hi * 2**11) mod M  ((maxlen >> 11) + 1 rows, <= 2**11 + 1)
-    B**e   = modmul(hi[e >> 11], lo[e & (2**11 - 1)], M)
+    P_j[d] = B**(d * 2**(6j)) mod M    (64 entries; P_2 has (L >> 12) + 1)
+    B**e   = modmul(modmul(P_0[d0], P_1[d1]), P_2[d2])
 
-Both factors are < M, so the same 20-bit-split modmul keeps every
-product < 2**63. The tables stay a few thousand rows at any maxlen, so
-Catalyst's constant folding of them costs nothing per plan build (a
-maxlen+1-row table was 65,537 rows at the default maxlen, folded on every
-build and re-optimisation). The prefix sum rides ONE per-doc window
+so the plan holds no power table, no join and no driver-built
+DataFrame. Every factor is < M, so the same 20-bit-split modmul keeps
+every product < 2**63. Three 6-bit digits keep the speed of the old
+broadcast-join lookups; two 8-bit digits ran 2-10% faster but doubled
+the plan text (the literals), four 4-bit digits ran up to 15% slower.
+The prefix sum rides ONE per-doc window
 (Exchange on doc_id + sort on pos), which winnowing needed anyway for its
 argmin window — same partitioning, same order, so the sort is reused and
 winnowing gains no extra shuffle.
 
-In the prefix-sum form, documents longer than ``maxlen`` tokens fail fast
-with raise_error (a silent miss would silently drop their windows): the
-position power is guarded by ``pos < maxlen``; the prefix-sum int64 bound
-holds to 2**22 tokens, so maxlen above that is rejected at plan-build
-time. The per-row form has no position and no such bound.
+In the prefix-sum form, documents longer than L tokens fail fast with
+raise_error (a silent miss would silently drop their windows): the
+position exponent is guarded by ``pos < L``. L is far below the 2**22
+tokens the exact int64 running sum holds. The per-row form has no
+position and no such bound.
 
 The arithmetic (modmul, window difference, pack, the per-row key) and
 the 60-bit token key each have ONE spelling as SQL text
@@ -92,7 +94,7 @@ _SPLIT_BITS = 20                # modmul split: b = b_hi * 2**20 + b_lo
 _SPLIT = 1 << _SPLIT_BITS
 _PACK_HI = 1 << 22              # win_hash = H1 * 2**22 + H2 // 2**18
 _PACK_LO_BITS = 18
-DEFAULT_MAXLEN = 1 << 16        # 65536 tokens/doc; hard int64 bound 2**22
+DEFAULT_MAXLEN = 1 << 16        # L: the key's B**L and the tokens/doc bound
 
 
 def h60(col: Column) -> Column:
@@ -130,78 +132,40 @@ def pack_sql(h1: str, h2: str) -> str:
     return f"({h1}) * {_PACK_HI} + (({h2}) >> {_PACK_LO_BITS})"
 
 
-_LO_BITS = 11                   # B**e = B**(hi * 2**11) * B**lo
-_LO_ROWS = 1 << _LO_BITS
-
-# Memo of the CONSTANT power tables per (application, maxlen). This is not
-# result caching: the tables are a pure function of the module's fixed
-# (B, M) constants and maxlen — independent of any input data — and
-# re-creating them per operator call costs a driver pandas->Arrow
-# createDataFrame round-trip on every duplicate_spans/winnow_fingerprints
-# plan build. Entries of any other application are evicted on insert: a
-# process that stops and recreates sessions would otherwise pin every
-# dead session's DataFrames.
-_POWERS_CACHE: dict[tuple[str, int], tuple[DataFrame, DataFrame]] = {}
+_DIGIT_BITS = 6                 # B**e from e's 6-bit digits
+_DIGITS = 3                     # the top digit, e >> 12, is not masked
 
 
-def _power_rows(base1: int, base2: int, n: int) -> dict[str, list[int]]:
-    """(i, p1, p2) columns for i in [0, n): base1**i mod M1, base2**i mod M2."""
-    p1 = [1] * n
-    p2 = [1] * n
-    for i in range(1, n):
-        p1[i] = p1[i - 1] * base1 % ROLL_M1
-        p2[i] = p2[i - 1] * base2 % ROLL_M2
-    return {"i": list(range(n)), "p1": p1, "p2": p2}
-
-
-def power_tables(
-    spark: SparkSession, maxlen: int
-) -> tuple[DataFrame, DataFrame]:
-    """(hi, lo) tables of columns (i, p1, p2): hi holds B**(i * 2**11) mod M
-    for i in [0, maxlen >> 11], lo holds B**i mod M for i in [0, 2**11).
-    Driver-built (a few thousand modmuls) and broadcast; memoized per
-    (application, maxlen) because the content is a pure constant."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, maxlen)
-    cached = _POWERS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    import pandas as pd
-
-    hi = _power_rows(pow(ROLL_B1, _LO_ROWS, ROLL_M1),
-                     pow(ROLL_B2, _LO_ROWS, ROLL_M2),
-                     (maxlen >> _LO_BITS) + 1)
-    lo = _power_rows(ROLL_B1, ROLL_B2, _LO_ROWS)
-    tables = (spark.createDataFrame(pd.DataFrame(hi)),
-              spark.createDataFrame(pd.DataFrame(lo)))
-    for stale in [k for k in _POWERS_CACHE if k[0] != app_id]:
-        del _POWERS_CACHE[stale]
-    _POWERS_CACHE[key] = tables
-    return tables
-
-
-def _with_powers(
-    df: DataFrame,
-    e: Column,
-    tables: tuple[DataFrame, DataFrame],
-    p1: str,
-    p2: str,
-) -> DataFrame:
-    """``df`` plus B**e mod M per hash pair as columns ``p1``/``p2``: two
-    broadcast lookups (map-side) and one modmul each. An exponent past
-    the hi table yields NULL (left joins never drop a row)."""
-    hi, lo = tables
+def _with_powers(df: DataFrame, e: Column, p1: str, p2: str) -> DataFrame:
+    """``df`` plus B**e mod M per hash pair as columns ``p1``/``p2``, for
+    0 <= e <= DEFAULT_MAXLEN: each 6-bit digit d_j of e indexes a literal
+    array of B**(d * 2**(6j)) mod M, and modmul folds the factors.
+    Spark cannot parse SQL text with an array(...) literal followed by
+    ``>>``: the digits use shiftright, and the lookups are projected to
+    columns before modmul_sql's text."""
+    lookups, products = [], []
+    for p, b, m in ((p1, ROLL_B1, ROLL_M1), (p2, ROLL_B2, ROLL_M2)):
+        product = None
+        for j in range(_DIGITS):
+            shift = j * _DIGIT_BITS
+            if j < _DIGITS - 1:
+                n = 1 << _DIGIT_BITS
+                digit = f"shiftright(_e, {shift}) & {n - 1}"
+            else:
+                n = (DEFAULT_MAXLEN >> shift) + 1
+                digit = f"shiftright(_e, {shift})"
+            # one SQL text per array: a Column literal per element would
+            # cost one py4j round trip each at every plan build
+            table = ", ".join(f"{pow(b, d << shift, m)}L" for d in range(n))
+            name = f"_{p}_{j}"
+            lookups.append(F.expr(
+                f"element_at(array({table}), ({digit}) + 1)").alias(name))
+            product = name if product is None else modmul_sql(product, name, m)
+        products.append(F.expr(product).alias(p))
     return (
         df.withColumn("_e", e)
-        .join(F.broadcast(hi.toDF("_hi", "_h1", "_h2")),
-              F.shiftright(F.col("_e"), _LO_BITS) == F.col("_hi"), "left")
-        .join(F.broadcast(lo.toDF("_lo", "_l1", "_l2")),
-              F.col("_e").bitwiseAND(_LO_ROWS - 1) == F.col("_lo"), "left")
-        .select(
-            *df.columns,
-            F.expr(modmul_sql("_h1", "_l1", ROLL_M1)).alias(p1),
-            F.expr(modmul_sql("_h2", "_l2", ROLL_M2)).alias(p2),
-        )
+        .select(*df.columns, *lookups)
+        .select(*df.columns, *products)
     )
 
 
@@ -220,7 +184,6 @@ def rolling_window_hashes(
     id_col: str,
     text_col: str,
     k: int,
-    maxlen: int = DEFAULT_MAXLEN,
 ) -> DataFrame:
     """(doc_id, pos, win_hash) for every overlapping k-token window of
     every document — win_hash equal iff (modulo ~2**-62 collisions) the
@@ -230,19 +193,15 @@ def rolling_window_hashes(
     text) BEFORE the posexplode, so the per-doc prefix-sum/lead windows
     find their required hashpartitioning(doc_id) already satisfied and
     only add a local sort — the exploded (doc_id, pos, a1, a2) stream
-    (32 bytes/token) never rides an Exchange. Then posexplode -> hi/lo
-    broadcast power lookups (map-side) -> local sort -> two Window passes
-    -> hi/lo lookups of the complement powers (the same two broadcasts,
-    reused). One shuffle total, of the narrowest possible representation
-    of the data."""
+    (32 bytes/token) never rides an Exchange. Then posexplode -> position
+    powers (in-row digit lookups) -> local sort -> two Window passes ->
+    complement powers (the same lookups). One shuffle total, of the
+    narrowest possible representation of the data, and no join.
+
+    A document longer than DEFAULT_MAXLEN tokens raises."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if maxlen > (1 << 22):
-        raise ValueError(
-            f"maxlen {maxlen} exceeds the int64 prefix-sum bound 2**22"
-        )
     spark = df.sparkSession
-    tables = power_tables(spark, maxlen)
 
     # explicit partition count (the session's shuffle knob): a bare
     # repartition(col) is AQE-coalescible and collapses a small corpus to
@@ -257,20 +216,17 @@ def rolling_window_hashes(
         F.posexplode(F.split(F.col("_t"), " ")).alias("pos", "t"),
     )
     h = tok.select("doc_id", "pos", h60(F.col("t")).alias("h"))
-    j = _with_powers(h, F.col("pos"), tables, "pw1", "pw2")
-    # fail fast on docs longer than maxlen: a doc of maxlen tokens has max
-    # pos maxlen-1, so a doc of exactly maxlen+1 tokens raises — the same
-    # boundary py_window_hashes draws. coalesce only evaluates raise_error
-    # on the guarded miss.
-    pw1 = (
-        f"coalesce(case when pos < {maxlen} then pw1 end, "
-        f"cast(raise_error('document exceeds rolling-hash maxlen "
-        f"{maxlen} tokens') as bigint))"
+    # fail fast on docs longer than L: a doc of L tokens has max pos L-1,
+    # so a doc of exactly L+1 tokens raises — the same boundary
+    # py_window_hashes draws. CASE evaluates raise_error only on the miss.
+    pos = F.when(F.col("pos") < DEFAULT_MAXLEN, F.col("pos")).otherwise(
+        F.raise_error(F.lit(
+            f"document exceeds rolling-hash maxlen {DEFAULT_MAXLEN} tokens"))
     )
-    base = j.select(
+    base = _with_powers(h, pos, "pw1", "pw2").select(
         "doc_id",
         "pos",
-        F.expr(modmul_sql(f"h % {ROLL_M1}", pw1, ROLL_M1)).alias("a1"),
+        F.expr(modmul_sql(f"h % {ROLL_M1}", "pw1", ROLL_M1)).alias("a1"),
         F.expr(modmul_sql(f"h % {ROLL_M2}", "pw2", ROLL_M2)).alias("a2"),
     )
     wdoc = Window.partitionBy("doc_id").orderBy("pos")
@@ -290,10 +246,10 @@ def rolling_window_hashes(
         F.expr(window_diff_sql("e1", "s1", "a1", ROLL_M1)).alias("d1"),
         F.expr(window_diff_sql("e2", "s2", "a2", ROLL_M2)).alias("d2"),
     )
-    # complement powers pc(pos) = B**(maxlen - pos) mod M; pos < maxlen
-    # here, so the exponent is in [1, maxlen] and always found
+    # complement powers pc(pos) = B**(L - pos) mod M; pos < L here, so
+    # the exponent is in [1, L]
     return _with_powers(
-        hh, F.lit(maxlen) - F.col("pos"), tables, "pc1", "pc2"
+        hh, F.lit(DEFAULT_MAXLEN) - F.col("pos"), "pc1", "pc2"
     ).select(
         "doc_id",
         "pos",
@@ -302,39 +258,38 @@ def rolling_window_hashes(
     )
 
 
-def window_key_sql(terms: list[str], maxlen: int = DEFAULT_MAXLEN) -> str:
+def window_key_sql(terms: list[str]) -> str:
     """The key of ONE window as SQL text over its n token hashes ``terms``
     (h60 values, in window order): per hash pair
     H0 = sum_j th_j * B**j mod M (one modmul by a literal power < M per
     token; the sum of n terms stays below n * 2**40), then
-    modmul(H0, B**maxlen), packed. That is the value
-    rolling_window_hashes(k=n, maxlen) reaches through prefix sums and
+    modmul(H0, B**L), packed. That is the value
+    rolling_window_hashes(k=n) reaches through prefix sums and
     the complement power, so the two forms are equal by construction.
 
     modmul_sql spells H0 twice; Spark's subexpression elimination moves
     it into methods of its own, which keeps the per-row code of an
     n-gram key under the JVM's 8,000-byte JIT limit to about n = 26
-    (folded into one B**(maxlen + j) literal per token, the 16-gram key
+    (folded into one B**(L + j) literal per token, the 16-gram key
     outgrew it and ran interpreted, 4x slower)."""
     def half(b: int, m: int) -> str:
         h0 = "(" + " + ".join(
             modmul_sql(f"({t}) % {m}", str(pow(b, j, m)), m)
             for j, t in enumerate(terms)
         ) + f") % {m}"
-        return modmul_sql(h0, str(pow(b, maxlen, m)), m)
+        return modmul_sql(h0, str(pow(b, DEFAULT_MAXLEN, m)), m)
 
     return pack_sql(half(ROLL_B1, ROLL_M1), half(ROLL_B2, ROLL_M2))
 
 
-def window_key_oracle_cte(src: str, n: int, maxlen: int = DEFAULT_MAXLEN,
-                          name: str = "win") -> str:
+def window_key_oracle_cte(src: str, n: int, name: str = "win") -> str:
     """DuckDB CTE ``name`` (doc_id, pos, win_hash): every n-token window
     of each row of the relation ``src`` (doc_id, text), keyed by
     :func:`window_key_sql` over the row's h60 token array. Docs shorter
     than n tokens (and NULL text) yield none."""
     terms = [f"th[i + {j}]" for j in range(1, n + 1)]
     return f"""{name} as (
-        select doc_id, i as pos, {window_key_sql(terms, maxlen)} as win_hash
+        select doc_id, i as pos, {window_key_sql(terms)} as win_hash
         from (select doc_id, list_transform(string_split(text, ' '),
                                             t -> {h60_sql("t")}) as th
               from {src}),
@@ -342,26 +297,21 @@ def window_key_oracle_cte(src: str, n: int, maxlen: int = DEFAULT_MAXLEN,
     )"""
 
 
-def py_window_hashes(
-    tokens: list[str], k: int, maxlen: int = DEFAULT_MAXLEN
-) -> list[tuple[int, int]]:
+def py_window_hashes(tokens: list[str], k: int) -> list[tuple[int, int]]:
     """Pure-Python twin (the fuzz pin): [(pos, win_hash)] for every
     k-token window, bit-identical to rolling_window_hashes."""
     n = len(tokens)
-    if n > maxlen:
+    if n > DEFAULT_MAXLEN:
         raise ValueError("document exceeds rolling-hash maxlen")
-    pw1 = [1] * (maxlen + 1)
-    pw2 = [1] * (maxlen + 1)
-    for e in range(1, maxlen + 1):
-        pw1[e] = pw1[e - 1] * ROLL_B1 % ROLL_M1
-        pw2[e] = pw2[e - 1] * ROLL_B2 % ROLL_M2
 
-    # plain modular products (Python ints never overflow): the twin checks
-    # the engines' 20-bit-split modmul_sql against the arithmetic it stands
-    # for, not against a copy of itself
+    # plain modular products and pow (Python ints never overflow): the twin
+    # checks the engines' 20-bit-split modmul_sql and digit lookups against
+    # the arithmetic they stand for, not against a copy of themselves
     th = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in tokens]
-    a1 = [th[i] % ROLL_M1 * pw1[i] % ROLL_M1 for i in range(n)]
-    a2 = [th[i] % ROLL_M2 * pw2[i] % ROLL_M2 for i in range(n)]
+    a1 = [th[i] % ROLL_M1 * pow(ROLL_B1, i, ROLL_M1) % ROLL_M1
+          for i in range(n)]
+    a2 = [th[i] % ROLL_M2 * pow(ROLL_B2, i, ROLL_M2) % ROLL_M2
+          for i in range(n)]
     s1 = [0] * n
     s2 = [0] * n
     for i in range(n):
@@ -373,7 +323,8 @@ def py_window_hashes(
         d2 = (s2[i + k - 1] - (s2[i - 1] if i else 0)) % ROLL_M2
         out.append((
             i,
-            d1 * pw1[maxlen - i] % ROLL_M1 * _PACK_HI
-            + (d2 * pw2[maxlen - i] % ROLL_M2 >> _PACK_LO_BITS),
+            d1 * pow(ROLL_B1, DEFAULT_MAXLEN - i, ROLL_M1) % ROLL_M1 * _PACK_HI
+            + (d2 * pow(ROLL_B2, DEFAULT_MAXLEN - i, ROLL_M2) % ROLL_M2
+               >> _PACK_LO_BITS),
         ))
     return out

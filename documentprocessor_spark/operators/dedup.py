@@ -489,8 +489,7 @@ def release_span_cache() -> None:
 def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
                     k: int = DEFAULT_SPAN_K,
                     min_docs: int = 2,
-                    df_cap: int = DEFAULT_SPAN_DF_CAP,
-                    maxlen: int | None = None) -> DataFrame:
+                    df_cap: int = DEFAULT_SPAN_DF_CAP) -> DataFrame:
     """Cross-document exact-substring detection ("Deduplicating Training
     Data Makes Language Models Better", Lee et al. 2022 — the ExactSubstr
     pass, reformulated relationally): emit, per document, the MAXIMAL token
@@ -501,11 +500,12 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     0-based token offset, span_len the token length of the merged range,
     n_windows how many duplicated k-windows the range absorbs.
 
-    CALLER CONTRACT: any document longer than ``maxlen`` tokens fails the
-    whole job fast (raise_error — a silent miss would silently drop its
-    windows). Production curation runs over uncapped crawls must either
-    pre-filter/truncate documents to <= maxlen tokens before this stage
-    or raise ``maxlen`` (hard int64 bound 2**22).
+    CALLER CONTRACT: any document longer than rolling.DEFAULT_MAXLEN
+    (65,536) tokens fails the whole job fast (raise_error — a silent miss
+    would silently drop its windows). Production curation runs over
+    uncapped crawls must pre-filter or truncate documents to <= 65,536
+    tokens before this stage; the bound is the window key's constant, not
+    an option.
 
     Not a suffix array: the reference algorithm builds a monolithic suffix
     array, which cannot shard. The relational twin hashes every overlapping
@@ -514,9 +514,7 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     md5-per-window; same ~60-bit cross-engine-exact key contract), counts
     distinct docs per window hash, keeps hashes seen in
     [min_docs, df_cap] docs, joins back, and merges overlapping windows per
-    doc with a lag/cumsum interval union. ``maxlen`` (default
-    rolling.DEFAULT_MAXLEN = 65536) bounds tokens/doc; longer docs fail
-    fast rather than silently truncate.
+    doc with a lag/cumsum interval union.
 
     Scale shape (100 TB): deliberately count-then-join, NOT the
     groupBy-collect shape ngram_jaccard_pairs uses — site boilerplate makes
@@ -528,7 +526,7 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     merge window), all on 8-byte keys; the wide text column never
     shuffles, and the hash work the extra shuffle buys back is k-fold.
     """
-    from ..functions.rolling import DEFAULT_MAXLEN, rolling_window_hashes
+    from ..functions.rolling import rolling_window_hashes
 
     # no parallelism rescue here: rolling_window_hashes repartitions the
     # doc rows by doc_id itself (r6) — which both parallelizes single-split
@@ -537,9 +535,7 @@ def duplicate_spans(df: DataFrame, id_col: str, text_col: str,
         F.col(id_col).alias("doc_id"), F.col(text_col).alias(text_col)
     )
     windows = _register_persist(
-        rolling_window_hashes(
-            slim, "doc_id", text_col, k, maxlen or DEFAULT_MAXLEN
-        )
+        rolling_window_hashes(slim, "doc_id", text_col, k)
         .withColumnRenamed("pos", "span_start")
         .select("doc_id", "span_start", "win_hash"),
         _SPAN_CACHE,
@@ -644,8 +640,7 @@ def incremental_dedup(delta: DataFrame, index_hashes: DataFrame,
 def remove_duplicate_spans(df: DataFrame, id_col: str, text_col: str,
                            k: int = DEFAULT_SPAN_K,
                            min_docs: int = 2,
-                           df_cap: int = DEFAULT_SPAN_DF_CAP,
-                           maxlen: int | None = None) -> DataFrame:
+                           df_cap: int = DEFAULT_SPAN_DF_CAP) -> DataFrame:
     """The REMOVAL step of ExactSubstr dedup (Lee et al. 2022 cut the
     duplicated byte ranges out of every document; this is the token-range
     twin): returns (doc_id, clean_text, n_tokens_removed) where clean_text
@@ -658,7 +653,7 @@ def remove_duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     the text column is touched exactly once, map-side, after the id-only
     span machinery."""
     spans = (
-        duplicate_spans(df, id_col, text_col, k, min_docs, df_cap, maxlen)
+        duplicate_spans(df, id_col, text_col, k, min_docs, df_cap)
         .groupBy("doc_id")
         .agg(
             F.collect_list(
@@ -820,8 +815,7 @@ def simhash_table(df: DataFrame, id_col: str, text_col: str,
 
 
 def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
-                        k: int = 5, w: int = 4,
-                        maxlen: int | None = None) -> DataFrame:
+                        k: int = 5, w: int = 4) -> DataFrame:
     """Winnowing fingerprints (Schleimer et al. 2003, the MOSS scheme):
     per document, hash every overlapping k-token window, slide a w-window
     over the hash sequence, and select each w-window's minimum — the
@@ -847,16 +841,15 @@ def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str,
     partitioning (doc_id) and sort (pos), so the plan still carries ONE
     Exchange; distinct collapses the repeated selections map-side first.
     """
-    from ..functions.rolling import DEFAULT_MAXLEN, rolling_window_hashes
+    from ..functions.rolling import rolling_window_hashes
 
     # no parallelism rescue: rolling_window_hashes repartitions by doc_id
     # itself (r6), pre-satisfying the argmin window's partitioning too
     slim = df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias(text_col)
     )
-    hashes = rolling_window_hashes(
-        slim, "doc_id", text_col, k, maxlen or DEFAULT_MAXLEN
-    ).withColumnRenamed("win_hash", "h")
+    hashes = (rolling_window_hashes(slim, "doc_id", text_col, k)
+              .withColumnRenamed("win_hash", "h"))
     key = F.concat(
         F.lpad(F.col("h").cast("string"), 19, "0"),
         F.lit(":"),

@@ -1031,10 +1031,9 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document exact-substring spans (Lee et al. 2022 ExactSubstr,
     relational form): maximal token ranges covered by a 20-token window
     that appears verbatim in >= 2 distinct documents. k=20 (not the
-    production 50) because the sf corpus averages ~54 tokens/doc;
-    maxlen=1024 bounds tokens/doc (fixture docs are <= 100 tokens)."""
+    production 50) because the sf corpus averages ~54 tokens/doc."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.duplicate_spans(docs, "doc_id", "text", k=20, maxlen=1024)
+    return dedup.duplicate_spans(docs, "doc_id", "text", k=20)
 
 
 # lag must sit in its own CTE (DuckDB can't nest window fns), the interval
@@ -1042,13 +1041,13 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bigint (range's i is bigint; Spark casts span_start to long to match).
 # Window hashes are rolling.window_key_oracle_cte — the per-row key text
 # the Spark side's prefix-sum rolling_window_hashes must equal.
-def _span_oracle_ctes(k: int, maxlen: int) -> str:
+def _span_oracle_ctes(k: int) -> str:
     """The ExactSubstr detection CTEs both span oracles share, over the
     `documents` view: k-token window hashes seen in 2..1000 distinct docs
     (dedup.duplicate_spans' min_docs / df_cap defaults), merged per doc
     into `spans(doc_id, s, e, n_windows)` — maximal [s, e) token ranges
     and how many duplicated windows each absorbs."""
-    return f"""{window_key_oracle_cte("documents", k, maxlen, "roll_win")},
+    return f"""{window_key_oracle_cte("documents", k, "roll_win")},
     win as (select doc_id, pos as span_start, win_hash from roll_win),
     dup as (
         select win_hash from win
@@ -1076,7 +1075,7 @@ def _span_oracle_ctes(k: int, maxlen: int) -> str:
 
 
 _ORACLE_DEDUP_SPANS = f"""
-    with {_span_oracle_ctes(k=20, maxlen=1024)}
+    with {_span_oracle_ctes(k=20)}
     select doc_id, s as span_start, e - s as span_len, n_windows from spans
 """
 
@@ -1087,16 +1086,14 @@ def q_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup.remove_duplicate_spans — detection joined back and applied as
     a native token-array filter in codegen)."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.remove_duplicate_spans(
-        docs, "doc_id", "text", k=20, maxlen=1024
-    )
+    return dedup.remove_duplicate_spans(docs, "doc_id", "text", k=20)
 
 
 # the shared span CTEs, then: tokens not covered by any span survive,
 # string_agg in position order rebuilds the text; docs whose every token
 # is covered collapse to '' via the left-join coalesce.
 _ORACLE_SPAN_REMOVAL = f"""
-    with {_span_oracle_ctes(k=20, maxlen=1024)},
+    with {_span_oracle_ctes(k=20)},
     tok as (select doc_id, string_split(text, ' ') as toks from documents),
     toks2 as (
         select doc_id, i, toks[i + 1] as t
@@ -1249,13 +1246,11 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-token rolling window hashes, per-4-window leftmost minimum, distinct
     (doc_id, fp_pos, fp_hash)."""
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.winnow_fingerprints(
-        docs, "doc_id", "text", k=5, w=4, maxlen=1024
-    )
+    return dedup.winnow_fingerprints(docs, "doc_id", "text", k=5, w=4)
 
 
 _ORACLE_WINNOW = f"""
-    with {window_key_oracle_cte("documents", 5, 1024, "roll_win")},
+    with {window_key_oracle_cte("documents", 5, "roll_win")},
     win as (select doc_id, pos, win_hash as h from roll_win),
     keyed as (
         select doc_id, pos,

@@ -29,6 +29,12 @@ else on the original text joined back by id):
   line-wise boilerplate kill (operators.dedup.cross_doc_line_dedup)
   over the survivor texts; chunking/winnowing run on the line-deduped
   text when this stage is active.
+
+The session is named ``dp-curate`` only when
+``python jobs/curate_job.py`` starts it. spark-submit always sets
+``spark.app.name`` (``--name``, else the script's file name), and that
+name wins; an in-process call on a live session keeps the session's
+name.
 """
 
 from __future__ import annotations
@@ -116,7 +122,11 @@ def _run(spark, args) -> None:
         band_rows=args.band_rows, transitive=args.transitive,
         exact_substr_k=args.exact_substr_k, checkpoint_dir=args.checkpoint,
     )
-    n_out = _write_counted(out, args.output, "curated")
+    # one REBALANCE before the write: AQE coalesces it to files of the
+    # advisory size, whatever partitioning the plan's last join left
+    # (a broadcast join back of the persisted survivors would otherwise
+    # write one small file per survivor partition)
+    n_out = _write_counted(out.hint("rebalance"), args.output, "curated")
 
     def count_input() -> int:
         return spark.read.parquet(args.input).count()

@@ -22,6 +22,12 @@ defaults, which fill in only the keys left unset. The job config holds no
 Spark settings; a config file with a ``session:`` block is refused. Run
 in-process on a live session (``main(..., stop_session=False)``), the job
 uses that session as it is.
+
+The session is named ``dp-extract-<mode>`` only when
+``python jobs/extract_job.py`` starts it. spark-submit always sets
+``spark.app.name`` (``--name``, else the script's file name), and that
+name wins; an in-process call on a live session keeps the session's
+name.
 """
 
 from __future__ import annotations

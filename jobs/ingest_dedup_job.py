@@ -31,6 +31,12 @@ the bloom path), ``<output>/kept`` (the surviving delta rows, full
 schema), and with ``--update-index`` appends the kept docs' hashes (and
 bands, on the default path) to the index — the commit step a crawl loop
 runs after each increment. Prints one JSON stats line.
+
+The session is named ``dp-ingest-dedup`` only when
+``python jobs/ingest_dedup_job.py`` starts it. spark-submit always sets
+``spark.app.name`` (``--name``, else the script's file name), and that
+name wins; an in-process call on a live session keeps the session's
+name.
 """
 
 from __future__ import annotations

@@ -8,6 +8,12 @@ extraction runs.
 ``files_per_bucket`` files per url_bucket partition via
 ``sources.tables.compact_results`` (count-verified tmp→swap commit; on
 Iceberg this is ``rewrite_data_files``). Prints one JSON stats line.
+
+The session is named ``dp-maintenance-<command>`` only when
+``python jobs/maintenance_job.py`` starts it. spark-submit always sets
+``spark.app.name`` (``--name``, else the script's file name), and that
+name wins; an in-process call on a live session keeps the session's
+name.
 """
 
 from __future__ import annotations

@@ -27,6 +27,12 @@ extract_from_pages_with_model byte-for-byte (the CLI calls the very same
 stage functions the fused plan composes); parse → extract --mode heuristic
 reproduces the fused heuristic kernel byte-for-byte (same tuples, same
 extractor). Both pinned by tests/test_phase_job.py.
+
+The session is named ``dp-phase-<phase>`` only when
+``python jobs/phase_job.py`` starts it. spark-submit always sets
+``spark.app.name`` (``--name``, else the script's file name), and that
+name wins; an in-process call on a live session keeps the session's
+name.
 """
 
 from __future__ import annotations

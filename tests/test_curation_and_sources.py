@@ -507,6 +507,34 @@ def test_curate_job_cli(spark, tmp_path, capsys):
     assert kept_ck == kept_onepass  # same clusters on this corpus
 
 
+def test_curate_job_exact_substr_writes_one_curated_file(
+        spark, tmp_path, capsys):
+    """An --exact-substr-k run over a multi-file input writes its small
+    curated table as ONE file: the write goes through a REBALANCE, which
+    AQE coalesces, instead of inheriting the partitions of the cut's
+    join back (a broadcast join of the persisted survivors wrote one
+    file per survivor partition)."""
+    import glob
+
+    from jobs.curate_job import main
+
+    docs = spark.createDataFrame(
+        [(i, f"the shared opening words of every page and then body {i} "
+             f"with the words {i % 7} and {i * 3} of the page")
+         for i in range(48)],
+        ["doc_id", "text"],
+    )
+    src = str(tmp_path / "docs")
+    docs.repartition(4).write.parquet(src)
+    assert len(glob.glob(f"{src}/*.parquet")) == 4
+    out = str(tmp_path / "out")
+    main(["--input", src, "--output", out, "--min-quality", "0.0",
+          "--exact-substr-k", "3"], stop_session=False)
+    capsys.readouterr()
+    assert len(glob.glob(f"{out}/curated/*.parquet")) == 1
+    assert spark.read.parquet(f"{out}/curated").count() > 0
+
+
 def test_curate_job_cli_chunk_and_winnow_stages(spark, tmp_path, capsys):
     """--chunk-tokens / --winnow-k write post-curation tables over the
     SURVIVORS only, matching the operators run directly on the survivor

@@ -43,12 +43,27 @@ SHARED_TEXT_QUERIES = (
 
 
 @pytest.fixture(scope="module")
-def rowset():
+def contract():
     spec = importlib.util.spec_from_file_location(
         "check_contract", _REPO / "tools" / "check_contract.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.rowset
+    return mod
+
+
+@pytest.fixture(scope="module")
+def rowset(contract):
+    return contract.rowset
+
+
+def test_empty_rows_certify_only_below_sf01(contract):
+    """check_contract passes a row both engines return empty only on the
+    small shipped scales; at sf0.1 and above, or on a directory whose
+    name gives no scale, an EMPTY row fails."""
+    assert contract.empty_certifies("/data/sf0.01")
+    assert contract.empty_certifies("/data/sf0.001/")
+    for sf_dir in ("/data/sf0.1", "/tmp/sf1.0", "/tmp/sf10", "/tmp/gen"):
+        assert not contract.empty_certifies(sf_dir), sf_dir
 
 
 @pytest.fixture(scope="module")

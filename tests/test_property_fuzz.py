@@ -335,32 +335,32 @@ def test_chunk_documents_matches_python_fuzz(spark, texts, chunk, stride):
 
 _roll_doc = st.lists(
     st.sampled_from(["a", "b", "ab", "ba", "longtoken", "x1"]),
-    min_size=0, max_size=30,
+    min_size=0, max_size=60,
 ).map(" ".join)
 
 
 @given(texts=st.lists(_roll_doc, min_size=1, max_size=5),
-       k=st.integers(min_value=1, max_value=6))
+       k=st.one_of(st.integers(min_value=1, max_value=6), st.just(50)))
 @settings(max_examples=12, deadline=None)
 def test_rolling_window_hashes_match_python_twin(spark, texts, k):
     """functions/rolling: the Spark window-hash values must be BIT-identical
     to py_window_hashes (the same 62-bit packed Rabin-Karp key both DuckDB
     oracles spell) — on empty docs, docs shorter than k, repeated tokens,
-    and every position. The repeated small vocab forces identical windows
-    at many positions; their hashes must collide exactly."""
+    and every position, at the spans' k = 50 too. The repeated small vocab
+    forces identical windows at many positions; their hashes must collide
+    exactly."""
     from documentprocessor_spark.functions.rolling import (
         py_window_hashes, rolling_window_hashes)
 
-    maxlen = 64
     docs = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {}
-    for r in rolling_window_hashes(df, "doc_id", "text", k, maxlen).collect():
+    for r in rolling_window_hashes(df, "doc_id", "text", k).collect():
         got.setdefault(r.doc_id, []).append((r.pos, r.win_hash))
     for d in got:
         got[d].sort()
     want = {
-        i: py_window_hashes(t.split(" "), k, maxlen)
+        i: py_window_hashes(t.split(" "), k)
         for i, t in docs
         if len(t.split(" ")) >= k
     }
@@ -398,24 +398,23 @@ def test_per_row_window_keys_equal_rolling_and_python(spark, texts, n):
 
 def test_rolling_maxlen_boundary_twins_agree(spark):
     """Both twins draw the maxlen boundary identically (r5 advice found
-    them one row apart): exactly maxlen tokens computes on both sides, one
-    more raises on both sides."""
+    them one row apart): exactly DEFAULT_MAXLEN tokens computes on both
+    sides, one more raises on both sides."""
     import pytest
 
     from documentprocessor_spark.functions.rolling import (
-        py_window_hashes, rolling_window_hashes)
+        DEFAULT_MAXLEN, py_window_hashes, rolling_window_hashes)
 
-    maxlen = 8
-    ok = " ".join(f"t{i}" for i in range(maxlen))
-    over = " ".join(f"t{i}" for i in range(maxlen + 1))
+    ok = " ".join(f"t{i % 97}" for i in range(DEFAULT_MAXLEN))
+    over = ok + " t0"
     df_ok = spark.createDataFrame([(1, ok)], "doc_id long, text string")
     got = sorted(
         (r.pos, r.win_hash)
-        for r in rolling_window_hashes(df_ok, "doc_id", "text", 3, maxlen).collect()
+        for r in rolling_window_hashes(df_ok, "doc_id", "text", 3).collect()
     )
-    assert got == py_window_hashes(ok.split(" "), 3, maxlen)
+    assert got == py_window_hashes(ok.split(" "), 3)
     with pytest.raises(ValueError):
-        py_window_hashes(over.split(" "), 3, maxlen)
+        py_window_hashes(over.split(" "), 3)
     df_over = spark.createDataFrame([(1, over)], "doc_id long, text string")
     with pytest.raises(Exception, match="exceeds rolling-hash maxlen"):
-        rolling_window_hashes(df_over, "doc_id", "text", 3, maxlen).collect()
+        rolling_window_hashes(df_over, "doc_id", "text", 3).collect()

@@ -44,11 +44,15 @@ PTYPES = ["LARGE", "ECONOMY", "SMALL", "STANDARD", "PROMO", "MEDIUM"]
 EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 LANGS = ["en", "zh", "es", "fr", "de"]
 LANG_P = [0.41, 0.15, 0.15, 0.15, 0.14]
+# the shipped documents' words, drawn uniformly (the English stopwords `a`
+# and `the` among them, so language ID finds English text); the 31st
+# shipped word, `dup`, only ends a near-duplicate
 VOCAB = (
-    "spark batch part line column order small sort fast value scan query "
-    "agg table hash key group filter stream slow customer vector join read "
-    "write shuffle plan cache disk row merge"
+    "a agg batch big column customer data fast filter group hash join key "
+    "line merge order part query row scan slow small sort spark stream "
+    "table the value vector window"
 ).split()
+NEAR_DUP_SHARE = 0.05
 
 DAY_US = 86_400_000_000
 
@@ -151,7 +155,9 @@ def generate(sf: float, out_dir: str) -> None:
         "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_evt)]),
     }))
 
-    # documents: 10..99 tokens from the 31-word vocab; ~0.16% exact dups
+    # documents, like the shipped ones: 10..99 tokens from the 30-word
+    # vocab, 5% near-duplicates (another document's text plus " dup") and
+    # ~0.16% exact dups
     n_toks = rng.integers(10, 100, n_doc)
     tok_ids = rng.integers(0, len(VOCAB), int(n_toks.sum()))
     vocab_arr = np.array(VOCAB)
@@ -159,6 +165,9 @@ def generate(sf: float, out_dir: str) -> None:
     for nt in n_toks:
         texts.append(" ".join(vocab_arr[tok_ids[pos:pos + nt]]))
         pos += nt
+    near = rng.choice(n_doc, int(n_doc * NEAR_DUP_SHARE), replace=False)
+    for i, src in zip(near, rng.integers(0, n_doc, len(near))):
+        texts[i] = f"{texts[src]} dup"
     for i in range(0, n_doc // 625):  # exact duplicates, like the reference data
         texts[n_doc - 1 - i] = texts[i]
     _write(out_dir, "documents", pa.table({
